@@ -42,14 +42,41 @@ import org.apache.spark.sql.SparkSession
   *    removes parallelism where bytes understate CPU.
   *    `SPARK_GRAFT_PARALLELISM_FIRST=false` selects the bytes-first
   *    posture for cluster-sizing experiments.
+  *  - Hadoop's `file:` scheme → [[graft.io.SpawnFreeLocalFileSystem]]
+  *    and [[graft.io.SpawnFreeLocalFs]], for both Hadoop APIs (see
+  *    [[localFileSystemConf]]).
   */
 object Sessions {
+  /** The `file:` file system for Hadoop's `FileSystem` and `FileContext`
+    * APIs: the stock checksummed local file system over a raw one that
+    * starts no child processes ([[graft.io.SpawnFreeRawLocalFileSystem]]).
+    *
+    * Why: without the native `libhadoop`, Hadoop's raw local file
+    * system runs a `chmod` process for every file it creates and a
+    * `readlink` process for every `FileContext` rename. In one
+    * `control_stream` run of the benchmark (`perfbench/`) on a 4-core
+    * VM, `tools/spawn_watch.py` saw the JVM start 4 828 child processes
+    * (2 767 `readlink`, 1 307 `chmod`, the rest caught before their
+    * exec), all from streaming checkpoints: offset and commit logs,
+    * state-store deltas, their `.crc` files and checkpoint checksum
+    * files. With this setting it saw 6, none per micro-batch (`rm` of
+    * temp directories, and one `bash` and one `getconf` probe at
+    * start-up). Permission bits, `.crc` files and atomic renames are
+    * unchanged.
+    *
+    * The shared test session applies the same map, so tests and
+    * production run on one file system. */
+  val localFileSystemConf: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" -> classOf[graft.io.SpawnFreeLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[graft.io.SpawnFreeLocalFs].getName)
+
   def localBuilder(cpus: String): SparkSession.Builder = {
     val localDir = sys.env.get("SPARK_GRAFT_LOCAL_DIR").filter(_.nonEmpty)
       .orElse(Option("/dev/shm").filter(p => new java.io.File(p).isDirectory)
         .map(_ + "/graft-local"))
     val b0 = SparkSession.builder()
       .master(s"local[$cpus]")
+      .config(localFileSystemConf)
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

@@ -45,9 +45,12 @@ object Telemetry {
     * aggregation is a single reduce to one row — the snapshot relation
     * is small (one row per target) at any input scale. */
   def targetsUpdateJson(snapshot: DataFrame): DataFrame =
-    snapshot
-      .agg(array_sort(collect_list(targetStruct)).as("targets"))
-      .select(to_json(struct(lit("targets_update").as("type"), col("targets"))).as("json"))
+    snapshot.agg(targetsUpdate(collect_list(targetStruct)).as("json"))
+
+  /** The `targets_update` envelope around an aggregated array of
+    * [[targetStruct]] values, sorted by id. */
+  def targetsUpdate(targets: Column): Column =
+    to_json(struct(lit("targets_update").as("type"), array_sort(targets).as("targets")))
 
   /** Command response document. Expects columns: command, status,
     * message. */

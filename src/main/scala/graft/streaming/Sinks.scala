@@ -139,9 +139,18 @@ object Sinks {
     * The latest-per-target reduction and registry join run
     * distributed; only the finished one-row document crosses to the
     * driver — the envelope is inherently a single serial line per
-    * tick, so that row IS the output. Emission goes through
-    * [[deliverOnce]]: a replayed, fully-emitted batch never re-prints
-    * its document (crash between emit and marker → one reprint). */
+    * tick, so that row IS the output.
+    *
+    * One Spark action per micro-batch: the same execution that builds
+    * the document also counts the batch's engine rows (responses
+    * included), and the document is emitted only when that count is
+    * above zero — one document for a batch with at least one engine
+    * row, none for an empty or no-data batch. Every batch, emitting or
+    * not, runs the stateful plan once, which is what commits its
+    * state. Emission goes through [[deliverOnce]]: a replayed batch
+    * whose document was already emitted computes the document again
+    * but does not emit it (crash between emit and marker → one
+    * reprint). */
   def telemetryWriter(out: Dataset[EngineOutput], checkpointDir: String,
       registry: DataFrame, emit: String => Unit): DataStreamWriter[EngineOutput] =
     out.writeStream
@@ -149,25 +158,37 @@ object Sinks {
       .trigger(Trigger.ProcessingTime("500 milliseconds"))
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[EngineOutput], batchId: Long) =>
-        if (!batch.isEmpty) {
+        val doc = telemetryDocument(batch.toDF(), registry).collect().head
+        if (doc.getLong(0) > 0)
           deliverOnce(s"$checkpointDir/telemetry-delivered", batchId) {
-            val latest = batch.toDF()
-              .filter(col("kind").isin("snapshot", "timeout"))
-              .groupBy(col("targetId"))
-              .agg(max_by(
-                struct(col("effective"), col("isOverridden"), col("remainingMs")),
-                struct(col("tsm"), col("seq"))).as("s"))
-              .select(col("targetId").as("id"),
-                col("s.effective").as("channels"),
-                col("s.isOverridden").as("is_channels_overridden"),
-                col("s.remainingMs").as("override_timeout_remaining"))
-            val snap = latest.join(broadcast(registry), "id")
-            graft.operators.Telemetry.targetsUpdateJson(snap)
-              .collect().foreach(r => emit(r.getString(0)))
+            emit(doc.getString(1))
           }
-          ()
-        }
+        ()
       }
+
+  /** One row `(rows, json)` for a telemetry micro-batch: `rows` counts
+    * every engine row, `json` is the `targets_update` document over
+    * each registered target's freshest snapshot or hold re-emission.
+    * Both come out of one aggregation, so the batch is scanned once. */
+  private def telemetryDocument(batch: DataFrame, registry: DataFrame): DataFrame =
+    batch
+      .groupBy(col("targetId").as("id"))
+      .agg(count(lit(1)).as("rows"),
+        // a null ordering never wins: a target's responses count as
+        // rows but never become its state
+        max_by(struct(col("effective"), col("isOverridden"), col("remainingMs")),
+          when(col("kind").isin("snapshot", "timeout"), struct(col("tsm"), col("seq"))))
+          .as("s"))
+      .join(broadcast(registry.withColumn("registered", lit(true))), Seq("id"), "left")
+      .select(col("rows"), col("id"), col("name"), col("mac"),
+        col("s.effective").as("channels"), col("connection_state"),
+        col("last_successful_send"),
+        col("s.isOverridden").as("is_channels_overridden"),
+        col("s.remainingMs").as("override_timeout_remaining"),
+        (col("registered") && col("s").isNotNull).as("listed"))
+      .agg(coalesce(sum(col("rows")), lit(0L)).as("rows"),
+        graft.operators.Telemetry.targetsUpdate(collect_list(
+          when(col("listed"), graft.operators.Telemetry.targetStruct))).as("json"))
 
   /** Update-mode streaming aggregation → keyed upsert sink: running
     * per-target event counts emitted as CHANGED ROWS each micro-batch

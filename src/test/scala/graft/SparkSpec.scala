@@ -4,7 +4,10 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (getOrCreate — one JVM-wide
-  * session, never stopped so suites can run in any order). */
+  * session, never stopped so suites can run in any order). It runs on
+  * the same `file:` file system as production sessions
+  * (`Sessions.localFileSystemConf`), so every checkpoint, restart and
+  * replay spec exercises it. */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -13,6 +16,7 @@ trait SparkSpec extends AnyFunSuite {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(Sessions.localFileSystemConf)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -155,6 +155,91 @@ class SinksSpec extends SparkSpec {
     } finally query.stop()
   }
 
+  test("telemetry writer: one SQL execution per micro-batch, documents only for batches with rows") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val sc = spark.sparkContext
+    val registry = Seq((6, "Drone_7", "AA:BB:CC:00:00:07", true, 5000L))
+      .toDF("id", "name", "mac", "connection_state", "last_successful_send")
+    val input = MemoryStream[EngineEvent]
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-telemetry-once").toString
+    // (query id, batch id) -> SQL execution ids of that batch's jobs
+    val executions = new java.util.concurrent.ConcurrentHashMap[(String, Long), Set[String]]()
+    val marker = s"sinks-spec-marker-${System.nanoTime()}"
+    @volatile var markerSeen = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        if (props.exists(p => p.getProperty("spark.jobGroup.id") == marker)) markerSeen = true
+        for (p <- props; q <- Option(p.getProperty("sql.streaming.queryId"));
+             b <- Option(p.getProperty("streaming.sql.batchId"));
+             x <- Option(p.getProperty("spark.sql.execution.id")))
+          executions.merge((q, b.toLong), Set(x), (a: Set[String], c: Set[String]) => a ++ c)
+      }
+    }
+    sc.addSparkListener(listener)
+    // (batch id, document) as the writer emits them
+    val emitted = new ConcurrentLinkedQueue[(Long, String)]()
+    // the frame is there before the first trigger, so batch 0 carries it
+    input.addData(EngineEvent(6, "frame", 1, 1000L, Seq.fill(8)(1500), 0L))
+    val query = Sinks.telemetryWriter(Engine.effectiveStates(input.toDS()), ckpt, registry,
+      doc => emitted.add((sc.getLocalProperty("streaming.sql.batchId").toLong, doc)))
+      .start()
+    try {
+      // the processing-time timeout keeps the query running no-data
+      // batches; wait for two of them after the batch with the frame
+      // (progress without an addBatch step is an idle trigger, not a batch)
+      def batches = query.recentProgress.toSeq.filter(_.durationMs.containsKey("addBatch"))
+      val deadline = System.currentTimeMillis() + 60000
+      while (batches.count(_.numInputRows == 0) < 2 && System.currentTimeMillis() < deadline)
+        Thread.sleep(100)
+      query.stop()
+      val (withRows, noData) = batches.partition(_.numInputRows > 0)
+      assert(withRows.map(_.batchId) == Seq(0L), batches.map(_.json).mkString("\n"))
+      assert(noData.size >= 2, "the query ran no no-data batches")
+      // a job from the same listener queue, started after the query
+      // stopped: once the listener sees it, it has seen every batch's jobs
+      sc.setJobGroup(marker, "listener barrier")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val barrier = System.currentTimeMillis() + 60000
+      while (!markerSeen && System.currentTimeMillis() < barrier) Thread.sleep(20)
+      assert(markerSeen, "the listener never saw the barrier job")
+      val perBatch = executions.asScala.collect {
+        case ((q, b), xs) if q == query.id.toString => b -> xs.size
+      }.toMap
+      batches.foreach { p =>
+        assert(perBatch.get(p.batchId).contains(1),
+          s"batch ${p.batchId} ran ${perBatch.getOrElse(p.batchId, 0)} SQL executions, want 1")
+      }
+      assert(emitted.asScala.map(_._1).toSeq == Seq(0L),
+        s"documents by batch: ${emitted.asScala.map(_._1).mkString(",")}")
+      assert(emitted.asScala.head._2.contains(""""id":6,"name":"Drone_7""""))
+    } finally {
+      query.stop()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("telemetry writer: a batch of responses only still emits one document") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    SinksSpec.serial.clear()
+    val registry = Seq((6, "Drone_7", "AA:BB:CC:00:00:07", true, 5000L))
+      .toDF("id", "name", "mac", "connection_state", "last_successful_send")
+    val input = MemoryStream[EngineOutput]
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-telemetry-responses").toString
+    val query = Sinks.telemetryWriter(input.toDS(), ckpt, registry,
+      doc => SinksSpec.serial.add(doc)).start()
+    try {
+      input.addData(EngineOutput(6, "response", 3, 1000L, Nil, Nil, Nil,
+        isOverridden = false, 0L, 0L, "success", "ok"))
+      query.processAllAvailable()
+      assert(SinksSpec.serial.asScala.toSeq ==
+        Seq("""{"type":"targets_update","targets":[]}"""))
+    } finally query.stop()
+  }
+
   test("update-mode upsert sink: the store converges to the latest counts") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
