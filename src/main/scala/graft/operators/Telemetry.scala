@@ -35,20 +35,15 @@ object Telemetry {
     col("connection_state"), col("last_successful_send"),
     col("is_channels_overridden"), col("override_timeout_remaining"))
 
-  /** The 2 Hz `targets_update` snapshot document: all targets collected
-    * into one array ordered by id (the registry's insertion order —
+  /** The 2 Hz `targets_update` snapshot document around an aggregated
+    * array of [[targetStruct]] values, e.g.
+    * `snapshot.agg(targetsUpdate(collect_list(targetStruct)))`: all
+    * targets in one array ordered by id (the registry's insertion order —
     * ids are auto-increment, `TargetManager.h:46,52`), wrapped in the
-    * type envelope. One output row per input snapshot.
+    * type envelope.
     *
-    * `array_sort(collect_list(struct))` sorts by the leading `id` field,
-    * making the document deterministic under any partitioning; the
-    * aggregation is a single reduce to one row — the snapshot relation
-    * is small (one row per target) at any input scale. */
-  def targetsUpdateJson(snapshot: DataFrame): DataFrame =
-    snapshot.agg(targetsUpdate(collect_list(targetStruct)).as("json"))
-
-  /** The `targets_update` envelope around an aggregated array of
-    * [[targetStruct]] values, sorted by id. */
+    * `array_sort` sorts by the leading `id` field, making the document
+    * deterministic under any partitioning. */
   def targetsUpdate(targets: Column): Column =
     to_json(struct(lit("targets_update").as("type"), array_sort(targets).as("targets")))
 

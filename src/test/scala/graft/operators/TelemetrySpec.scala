@@ -18,7 +18,8 @@ class TelemetrySpec extends SparkSpec {
     "last_successful_send", "is_channels_overridden", "override_timeout_remaining")
 
   test("targets_update envelope: exact document, targets ordered by id") {
-    val got = Telemetry.targetsUpdateJson(snapshotDf).first().getString(0)
+    val got = snapshotDf.agg(Telemetry.targetsUpdate(collect_list(Telemetry.targetStruct)))
+      .first().getString(0)
     val expected =
       """{"type":"targets_update","targets":[""" +
         """{"id":1,"name":"Drone_1","mac":"AA:BB:CC:DD:EE:01",""" +
@@ -60,7 +61,8 @@ class TelemetrySpec extends SparkSpec {
         coalesce(col("last_successful_send_ms"), lit(0L)).as("last_successful_send"),
         (col("is_overridden") === 1).as("is_channels_overridden"),
         coalesce(col("remaining_ms"), lit(0L)).as("override_timeout_remaining"))
-    val doc = Telemetry.targetsUpdateJson(snap).first().getString(0)
+    val doc = snap.agg(Telemetry.targetsUpdate(collect_list(Telemetry.targetStruct)))
+      .first().getString(0)
     assert(doc.startsWith("""{"type":"targets_update","targets":[{"id":0,"""))
     assert(doc.split("\"id\":").length == 9) // 8 targets
   }

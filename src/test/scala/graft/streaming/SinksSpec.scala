@@ -240,6 +240,27 @@ class SinksSpec extends SparkSpec {
     } finally query.stop()
   }
 
+  test("telemetry writer: an unregistered target's rows emit a document without it") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    SinksSpec.serial.clear()
+    val registry = Seq((6, "Drone_7", "AA:BB:CC:00:00:07", true, 5000L))
+      .toDF("id", "name", "mac", "connection_state", "last_successful_send")
+    val input = MemoryStream[EngineOutput]
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-telemetry-unregistered").toString
+    val query = Sinks.telemetryWriter(input.toDS(), ckpt, registry,
+      doc => SinksSpec.serial.add(doc)).start()
+    try {
+      // id 9 is not in the registry: its snapshot counts as a row, so
+      // the batch emits, but it has no name or MAC to list
+      input.addData(EngineOutput(9, "snapshot", 1, 1000L, Seq.fill(8)(1500),
+        Seq.fill(8)(1500), Seq.fill(8)(-1), isOverridden = false, 0L, 0L, "", ""))
+      query.processAllAvailable()
+      assert(SinksSpec.serial.asScala.toSeq ==
+        Seq("""{"type":"targets_update","targets":[]}"""))
+    } finally query.stop()
+  }
+
   test("update-mode upsert sink: the store converges to the latest counts") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

@@ -60,8 +60,9 @@ def find(match, timeout_s):
     return None
 
 
-def watch(pid, seconds, interval_s):
-    """Poll until `pid` exits or `seconds` pass; count its children."""
+def watch(pid, seconds):
+    """Poll back to back until `pid` exits or `seconds` pass; count its
+    children."""
     seen = {}  # (child pid, start time) -> last command name
     polls = 0
     start = time.monotonic()
@@ -74,8 +75,6 @@ def watch(pid, seconds, interval_s):
             if s is not None and str(s[0]) == target:
                 seen[(name, s[2])] = s[1]
         polls += 1
-        if interval_s > 0:
-            time.sleep(interval_s)
     return seen, polls, time.monotonic() - start
 
 
@@ -85,8 +84,6 @@ def main():
     who.add_argument("--pid", type=int, help="process to watch")
     who.add_argument("--match", help="watch the first process with this as one of its arguments")
     ap.add_argument("--seconds", type=float, default=3600, help="stop after this long")
-    ap.add_argument("--interval-ms", type=float, default=0,
-                    help="pause between polls (default 0: poll back to back)")
     ap.add_argument("--wait", type=float, default=600,
                     help="with --match, how long to wait for the process to appear")
     args = ap.parse_args()
@@ -96,7 +93,7 @@ def main():
         print(f"no process matching {args.match!r} appeared", file=sys.stderr)
         return 1
     print(f"watching pid {pid}: {' '.join(argv(pid))[:120]}", file=sys.stderr)
-    seen, polls, elapsed = watch(pid, args.seconds, args.interval_ms / 1000.0)
+    seen, polls, elapsed = watch(pid, args.seconds)
     by_command = Counter(seen.values())
     print(json.dumps({"pid": pid, "children": len(seen),
                       "by_command": dict(by_command.most_common()),
