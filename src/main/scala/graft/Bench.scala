@@ -25,13 +25,11 @@ object Bench {
       Runtime.getRuntime.availableProcessors.toString)
     // one builder, two callers: the suite session, and the per-query
     // fresh sessions of the isolated re-measure pass below
-    // Session defaults (tmpfs scratch, join/AQE knobs) live in
-    // graft.Sessions — ONE builder shared with Verify and Profile so a
-    // correctness run and a profile exercise the exact session the
-    // bench times. r22 knob changes (preferSortMergeJoin back to true,
-    // AQE bounded-build-side SHJ, advisory-size partition coalescing)
-    // are documented there and in OPTIMIZATION_r22.md; all are
-    // env-revertable.
+    // Session defaults (tmpfs scratch, the AQE bounded-build-side
+    // shuffled-hash join) live in graft.Sessions — ONE builder shared
+    // with Verify and the benchmark harness, so a correctness run and a
+    // measurement exercise the exact session the bench times. The
+    // reasons for each setting are documented there.
     def mkSession(): SparkSession = {
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()

@@ -1,47 +1,37 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
-/** The ONE local-mode session builder behind Bench, Verify and Profile
-  * (r22: the three mains had drifted — Profile measured a session with
-  * different join/scratch defaults than the one the bench times).
+/** The ONE local-mode session builder behind Bench, Verify and the
+  * benchmark harness (`perfbench/`), so a correctness run and a
+  * measurement exercise the exact session the bench times. It is also
+  * the only place under `src/main` that builds a session (SessionsSpec).
   *
-  * Knobs, all env-overridable so an A/B never needs a recompile, with
-  * defaults justified in OPTIMIZATION_r22.md:
+  * It applies only settings that change something; every `spark.sql.*`
+  * value in [[sqlConf]] differs from Spark's default (SessionsSpec).
+  * To A/B a setting, edit its constant in a scratch clone.
   *
   *  - `spark.local.dir` → tmpfs when /dev/shm exists (r21, guide §2.1:
   *    at bench scale shuffle-file METADATA dominates the bytes;
   *    `SPARK_GRAFT_LOCAL_DIR` overrides; cluster deploys set their own
   *    submit conf — this default only fires for the local-mode
   *    driver contract).
-  *  - `spark.sql.join.preferSortMergeJoin` → back to Spark's default
-  *    TRUE (r22, VERDICT r21 §wrong-2: the r21 session-wide `false`
-  *    applied shuffled-hash builds to every join including the
-  *    candidate-pair self-joins whose build side grows with the
-  *    corpus — an OOM posture at 100 TB and the round's GC bill at
-  *    local[32]). `SPARK_GRAFT_PREFER_SMJ=false` restores the r21
-  *    behavior for A/Bs.
   *  - `spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold` →
-  *    64 MB (r22, guide §3.1): AQE rewrites a sort-merge join to
-  *    shuffled-hash AT RUNTIME only when every MEASURED post-shuffle
-  *    partition of the build side fits under the threshold — exactly
-  *    the "bounded build side" scoping VERDICT r21 asked for, decided
-  *    from real sizes instead of a session-wide estimate-blind
-  *    default. 64 MB equals `advisoryPartitionSizeInBytes` (the
-  *    conversion requires threshold ≥ advisory) and bounds the
-  *    per-task build map at any corpus size.
-  *  - `spark.sql.adaptive.coalescePartitions.parallelismFirst` →
-  *    Spark's default TRUE, kept deliberately after a measured A/B
-  *    (r22): bytes-first coalescing (false, the tuning doc's cluster
-  *    posture) folded the CPU-heavy integer-scoring exchanges of the
-  *    BM25/eval family into ONE 64 MB-advisory partition — profile
-  *    evidence: a 1-task 2.6 s job inside q135's sparse leg — and the
-  *    family's normed totals were 50.2 (false) vs 35.7 (true) over
-  *    q133/q135/q136/q139/q140. The default already coalesces
-  *    KB-sized exchanges to a single 1 MB-floor partition, so the
-  *    fixed-cost win "false" promises is already in effect; it only
-  *    removes parallelism where bytes understate CPU.
-  *    `SPARK_GRAFT_PARALLELISM_FIRST=false` selects the bytes-first
-  *    posture for cluster-sizing experiments.
+  *    64 MB (r22, guide §3.1; Spark's default 0 never converts): AQE
+  *    rewrites a sort-merge join to shuffled-hash AT RUNTIME only when
+  *    every MEASURED post-shuffle partition of the build side fits
+  *    under the threshold — the "bounded build side" scoping VERDICT
+  *    r21 asked for, decided from real sizes instead of a session-wide
+  *    estimate-blind default. 64 MB equals
+  *    `advisoryPartitionSizeInBytes` (the conversion requires
+  *    threshold ≥ advisory) and bounds the per-task build map at any
+  *    corpus size.
+  *  - Left at Spark's defaults on purpose (r22 A/Bs):
+  *    `preferSortMergeJoin` TRUE — `false` session-wide made every join
+  *    a shuffled-hash build, including the candidate-pair self-joins
+  *    whose build side grows with the corpus; and
+  *    `coalescePartitions.parallelismFirst` TRUE — bytes-first
+  *    coalescing folded the CPU-heavy BM25/eval exchanges into one
+  *    partition (normed 50.2 vs 35.7 over q133/q135/q136/q139/q140).
   *  - Hadoop's `file:` scheme → [[graft.io.SpawnFreeLocalFileSystem]]
   *    and [[graft.io.SpawnFreeLocalFs]], for both Hadoop APIs (see
   *    [[localFileSystemConf]]).
@@ -70,6 +60,18 @@ object Sessions {
     "spark.hadoop.fs.file.impl" -> classOf[graft.io.SpawnFreeLocalFileSystem].getName,
     "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[graft.io.SpawnFreeLocalFs].getName)
 
+  /** The `spark.sql.*` settings of [[localBuilder]], one partition per
+    * core. The session time zone pins timestamps to UTC whatever the
+    * host's zone (Spark's default is the JVM's zone). */
+  def sqlConf(cpus: String): Map[String, String] = Map(
+    "spark.sql.shuffle.partitions" -> cpus,
+    "spark.sql.session.timeZone" -> "UTC",
+    // wide plans (q61's composed pipeline) trip the plan-string
+    // truncation WARN mid-run otherwise — one more line in the
+    // captured tail that breaks the driver's one-line JSON parse
+    "spark.sql.debug.maxToStringFields" -> "2000",
+    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold" -> "64m")
+
   def localBuilder(cpus: String): SparkSession.Builder = {
     val localDir = sys.env.get("SPARK_GRAFT_LOCAL_DIR").filter(_.nonEmpty)
       .orElse(Option("/dev/shm").filter(p => new java.io.File(p).isDirectory)
@@ -77,19 +79,8 @@ object Sessions {
     val b0 = SparkSession.builder()
       .master(s"local[$cpus]")
       .config(localFileSystemConf)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
+      .config(sqlConf(cpus))
       .config("spark.ui.enabled", "false")
-      // wide plans (q61's composed pipeline) trip the plan-string
-      // truncation WARN mid-run otherwise — one more line in the
-      // captured tail that breaks the driver's one-line JSON parse
-      .config("spark.sql.debug.maxToStringFields", "2000")
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "true"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCAL_THRESHOLD", "64m"))
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
     localDir.fold(b0)(d => b0.config("spark.local.dir", d))
   }
 }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *
   * {{{
   *   spark-submit --conf spark.sql.extensions=graft.expressions.GraftExtensions …
-  *   // or: SparkSession.builder().withExtensions(new GraftExtensions)
+  *   // or, on a session builder: .withExtensions(new GraftExtensions)
   *   spark.sql("SELECT vec_dot(a.e, b.e) FROM …")
   * }}}
   *

@@ -4588,31 +4588,6 @@ object Pipeline {
     tbl
   }
 
-  /** Greedy pairwise-DISJOINT prefix filter over a ranked
-    * merge-candidate list — the admission rule that makes a merge
-    * batch order-commutative: a candidate is admitted only if neither
-    * of its tokens, nor its merged output, touches any earlier
-    * admission (as input token OR output). Two disjoint merges cannot
-    * create, destroy, or overlap each other's adjacencies, so applying
-    * an admitted batch in ANY order — including all-at-once in one
-    * rewrite pass — rewrites every document identically to applying
-    * them as sequential corpus rounds (asserted in PipelineSpec).
-    * Conflicting candidates are SKIPPED, not dropped: they re-enter at
-    * the next batch boundary with fresh counts. */
-  private[graft] def bpeDisjointPrefix(
-      ranked: Seq[(String, String, Long)]): Seq[(String, String, Long)] = {
-    val used = scala.collection.mutable.HashSet.empty[String]
-    val out = Seq.newBuilder[(String, String, Long)]
-    ranked.foreach { case c @ (l, r, _) =>
-      val m = l + " " + r
-      if (!used(l) && !used(r) && !used(m)) {
-        used += l; used += r; used += m
-        out += c
-      }
-    }
-    out.result()
-  }
-
   /** Apply a merge SEQUENCE in one rewrite projection — since r18 the
     * native codegen'd expression
     * ([[graft.expressions.BpeExpressions]]: one compiled greedy pass
@@ -4623,77 +4598,10 @@ object Pipeline {
     * allocation per merge), which q104's sf1 probe measured as the
     * apply path's whole cost; the merge table now rides as three
     * reference objects, so a 30k-merge production vocabulary is three
-    * arrays, not 30k expression nodes — the batch-size note on
-    * [[bpeLearnBatchedRounds]] about expression-tree growth no longer
-    * constrains the apply side. */
+    * arrays, not 30k expression nodes — expression-tree growth no
+    * longer bounds how many merges one pass applies. */
   def bpeApplyMerges(toks: Column, merges: Seq[(String, String)]): Column =
     graft.expressions.BpeFunctions.bpeApplyAll(toks, merges)
-
-  /** BATCHED BPE learning — the production-vocabulary form of
-    * [[q100BpeMerges]]'s loop (VERDICT r15 §next-6): each round counts
-    * adjacent pairs ONCE, admits the top-ranked pairwise-disjoint
-    * candidates ([[bpeDisjointPrefix]], count DESC then lexicographic —
-    * the q100 ordering), and applies the whole batch in ONE rewrite
-    * pass ([[bpeApplyMerges]]). A 30k-merge vocabulary at batch 256
-    * costs ~118 count scans + 118 rewrite passes instead of 30k of
-    * each — the scans-per-vocabulary arithmetic is what makes BPE
-    * training feasible at 100 TB, where each corpus pass is the
-    * dominant cost.
-    *
-    * Selection semantics: admitted merges use BATCH-START counts.
-    * Disjoint admission guarantees those counts are still exact at
-    * apply time (a disjoint merge cannot change another's adjacency
-    * count), and `batchSize = 1` reproduces the sequential learner
-    * row-for-row (asserted in PipelineSpec). The one divergence from
-    * strictly-sequential BPE is deliberate and standard in batched
-    * trainers: a pair CREATED by an admitted merge (one containing its
-    * output token) cannot be selected until the next batch boundary —
-    * within a batch, candidates never reference other admissions'
-    * outputs by construction of the disjoint filter.
-    *
-    * Returns (merge table rows `(idx, lhs, rhs, pair_count,
-    * tokens_after)` — `tokens_after` is the corpus total after the
-    * row's BATCH applies — the final token relation, and its release).
-    * q100's 3-round oracle is untouched: this is the scale path beside
-    * it, sharing [[adjacentPairs]] and [[bpeMergePass]] verbatim. */
-  private[graft] def bpeLearnBatchedRounds(base: DataFrame,
-      vocabMerges: Int, batchSize: Int)
-      : (Seq[(Int, String, String, Long, Long)], DataFrame, () => Unit) = {
-    require(vocabMerges >= 1 && batchSize >= 1, "positive vocab and batch")
-    var cur = base.persist(CacheLevel)
-    cur.count()
-    val rows = Seq.newBuilder[(Int, String, String, Long, Long)]
-    var learned = 0
-    var exhausted = false
-    while (learned < vocabMerges && !exhausted) {
-      val want = math.min(batchSize, vocabMerges - learned)
-      // one pair-count scan per BATCH: rank enough candidates to fill
-      // the batch after disjoint filtering (3x headroom — a shortfall
-      // only defers admissions to the next scan, never loses them)
-      val ranked = adjacentPairs(cur)
-        .groupBy(col("lhs"), col("rhs")).agg(count(lit(1)).as("pair_count"))
-        .orderBy(col("pair_count").desc, col("lhs"), col("rhs"))
-        .limit(want * 3 + 8).collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
-      val batch = bpeDisjointPrefix(ranked).take(want)
-      if (batch.isEmpty) exhausted = true
-      else {
-        val next = cur.select(col("doc_id"),
-          bpeApplyMerges(col("toks"), batch.map(b => (b._1, b._2))).as("toks"))
-          .persist(CacheLevel)
-        val after = next.agg(sum(size(col("toks")).cast("long")))
-          .collect()(0).getLong(0)
-        cur.unpersist(blocking = false)
-        cur = next
-        batch.foreach { case (l, r, n) =>
-          learned += 1
-          rows += ((learned, l, r, n, after))
-        }
-      }
-    }
-    val last = cur
-    (rows.result(), last, () => { last.unpersist(blocking = false); () })
-  }
 
   /** The q100 learn loop over a `(doc_id, toks)` relation: returns the
     * per-round merge table, the FINAL rewritten token relation (still
@@ -5224,8 +5132,7 @@ object Pipeline {
     * in one exchange-free scan) and the ≤17-row stored codebook; the
     * ADC join is cluster-equi with a BROADCAST query side — never a
     * corpus exchange; both rankings window per query over O(1)
-    * candidate rows. Warm serve pays table lookups, never a build
-    * (ServeSplit measures the split). */
+    * candidate rows. Warm serve pays table lookups, never a build. */
   def q107IvfPqAnn(spark: SparkSession, dir: String): DataFrame = {
     val members = spark.table(ensureIvfPqIndex(spark, dir))
     val seeds = trainedPqSeeds(spark, dir)

@@ -191,20 +191,14 @@ object Engine {
         wallNow - s.wallAtLast >= s.deadlineMs - s.lastTsm
       val cleared = if (ttlFired) s.copy(isOverridden = false) else s
       state.update(cleared)
-      // re-arm: remaining TTL (if still overridden) and/or the hold tick
-      val remainingTtl =
-        if (cleared.isOverridden)
-          Some(math.max(1L, (cleared.deadlineMs - cleared.lastTsm) - (wallNow - cleared.wallAtLast)))
-        else None
-      (remainingTtl.toSeq ++ holdEmitMs.toSeq).reduceOption(_ min _).foreach { d =>
-        try state.setTimeoutDuration(d)
-        catch { case _: UnsupportedOperationException => () }
-      }
       // Stamp the emission with the probe time mapped into event time
       // (lastTsm + wall-clock elapsed since it), so hold re-emissions
       // order correctly by tsm downstream and an active override's
       // remaining_ms reflects the actual time left, not deadline-vs-deadline.
       val probeTsm = cleared.lastTsm + math.max(0L, wallNow - cleared.wallAtLast)
+      // re-arm from the probe time: remaining TTL (if still overridden)
+      // and/or the hold tick
+      arm(cleared, probeTsm)
       Iterator.single(snapshot(id, cleared, -1L, probeTsm, kind = "timeout"))
     } else {
       var s = state.getOption.getOrElse(initialState)

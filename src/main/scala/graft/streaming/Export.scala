@@ -87,15 +87,7 @@ object Export {
   def appendShardsWriter(docs: DataFrame, idCol: String, textCol: String,
       path: String, checkpointDir: String, numShards: Int = 8)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Sinks.deliverOnce(s"$checkpointDir/delivered", batchId) {
-          if (!batch.isEmpty)
-            graft.operators.Layout.appendShards(
-              batch, idCol, textCol, path, numShards)
-        }
-        ()
-      }
+    IndexMaintain.writer(docs, checkpointDir)(batch =>
+      graft.operators.Layout.appendShards(
+        batch, idCol, textCol, path, numShards))()
 }

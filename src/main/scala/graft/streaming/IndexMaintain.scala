@@ -8,8 +8,9 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * index appends — [[Pipeline.indexAppend]] (IVF membership),
   * [[Pipeline.pqIndexAppend]] (PQ codes + error stats),
   * [[Pipeline.invIndexAppend]] (postings + corpus stats) — bound to a
-  * stream through the [[Export.appendShardsWriter]] pattern
-  * (foreachBatch + [[Sinks.deliverOnce]] replay markers), so a
+  * stream through one replay-guarded writer, shared with
+  * [[Export.appendShardsWriter]] (foreachBatch + [[Sinks.deliverOnce]]
+  * replay markers), so a
   * near-line corpus keeps its banked indexes WARM instead of serving
   * stale lookups until the nightly append.
   *
@@ -48,7 +49,11 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * spec-demonstrated in IndexMaintainSpec). */
 object IndexMaintain {
 
-  private def writer(rows: DataFrame, checkpointDir: String)(
+  /** The replay-guarded append writer behind every index writer here
+    * and [[Export.appendShardsWriter]]: `deliver` runs once per
+    * non-empty micro-batch under a [[Sinks.deliverOnce]] marker, then
+    * `after` runs outside it. */
+  private[streaming] def writer(rows: DataFrame, checkpointDir: String)(
       deliver: DataFrame => Unit)(
       after: DataFrame => Unit = _ => ()): DataStreamWriter[Row] =
     rows.writeStream

@@ -1477,19 +1477,6 @@ class PipelineSpec extends SparkSpec {
     assert(totals.zip(totals.drop(1)).forall { case (a, b) => b < a })
   }
 
-  test("bpeDisjointPrefix: admits only token-disjoint merges, defers conflicts") {
-    val ranked = Seq(
-      ("a", "b", 100L),  // admitted
-      ("b", "c", 90L),   // b used → deferred
-      ("c", "d", 80L),   // admitted
-      ("a b", "x", 70L), // collides with admission 1's OUTPUT → deferred
-      ("e", "f", 60L),   // admitted
-      ("e", "e", 50L),   // e used → deferred
-      ("g", "g", 40L))   // self-pair admitted
-    assert(Pipeline.bpeDisjointPrefix(ranked) ==
-      Seq(("a", "b", 100L), ("c", "d", 80L), ("e", "f", 60L), ("g", "g", 40L)))
-  }
-
   test("batched BPE: a disjoint batch in one pass equals sequential rounds, any order") {
     val docs = Seq(
       (1L, "a b c d a b e f"),
@@ -1522,46 +1509,6 @@ class PipelineSpec extends SparkSpec {
       4L -> Seq("solo"),
       5L -> Seq("c d", "c", "a b", "d"))
     assert(onePass == ref)
-  }
-
-  test("batched BPE learn at batch=1 reproduces the sequential learner row-for-row") {
-    val base = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"), split(col("text"), " ").as("toks"))
-    val (seqRows, seqFinal, seqRelease) = Pipeline.bpeLearnRounds(base)
-    val (batRows, batFinal, batRelease) =
-      Pipeline.bpeLearnBatchedRounds(base, Pipeline.BpeMergeRounds, 1)
-    try {
-      assert(batRows == seqRows, s"\nseq: $seqRows\nbat: $batRows")
-      assert(batFinal.agg(sum(size(col("toks")))).collect()(0).getLong(0) ==
-        seqFinal.agg(sum(size(col("toks")))).collect()(0).getLong(0))
-    } finally { seqRelease(); batRelease() }
-  }
-
-  test("batched BPE learn: separated disjoint fixture matches sequential in 1/B the scans") {
-    // pair frequencies well separated AND pairwise disjoint, with a
-    // UNIQUE separator after every occurrence so merge-created pairs
-    // (e.g. ("p0 q0", s_k)) all have count 1 and can never outrank a
-    // remaining candidate: batched selection provably equals
-    // sequential selection here, so the two learners must emit the
-    // same merge list — batched in ceil(m/B) count scans instead of m
-    val doc = (0 until 6)
-      .flatMap(i => Seq.fill(60 - 10 * i)(s"p$i q$i"))
-      .zipWithIndex.map { case (o, k) => s"$o s$k" }.mkString(" ")
-    val base = Seq((1L, doc)).toDF("doc_id", "text")
-      .select(col("doc_id"), split(col("text"), " ").as("toks"))
-    val m = 6
-    val (seqRows, _, seqRelease) = Pipeline.bpeLearnBatchedRounds(base, m, 1)
-    val (batRows, _, batRelease) = Pipeline.bpeLearnBatchedRounds(base, m, 3)
-    try {
-      assert(seqRows.map(r => (r._1, r._2, r._3, r._4)) ==
-        batRows.map(r => (r._1, r._2, r._3, r._4)),
-        s"\nseq: $seqRows\nbat: $batRows")
-      assert(seqRows.map(_._2).toSet ==
-        (0 until m).map(i => s"p$i").toSet, "wrong merge set")
-      // final corpus totals agree (tokens_after mid-batch differs by
-      // construction — it is a per-BATCH total)
-      assert(seqRows.last._5 == batRows.last._5)
-    } finally { seqRelease(); batRelease() }
   }
 
   test("q104: fertility reconciles with q100's final round and the raw corpus") {
