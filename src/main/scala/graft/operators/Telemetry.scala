@@ -1,10 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import com.fasterxml.jackson.core.JsonFactory
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** P4/S5 — JSON document serialization: the telemetry snapshot envelope
-  * and the response/error envelopes, as `to_json` projections.
+/** P4/S5 — JSON document serialization: the telemetry snapshot envelope,
+  * rendered with Jackson from per-target entries, and the response/error
+  * envelopes, as `to_json` projections.
   *
   * Field names, order, and value rendering reproduce the reference's
   * hand-built documents:
@@ -26,26 +28,53 @@ import org.apache.spark.sql.functions._
   */
 object Telemetry {
 
-  /** Per-target document struct in the reference's field order. Expects
-    * columns: id, name, mac, channels (array<int>), connection_state
-    * (boolean), last_successful_send (long), is_channels_overridden
-    * (boolean), override_timeout_remaining (long). */
-  def targetStruct: Column = struct(
-    col("id"), col("name"), col("mac"), col("channels"),
-    col("connection_state"), col("last_successful_send"),
-    col("is_channels_overridden"), col("override_timeout_remaining"))
+  /** One per-target object of the `targets_update` document, in the
+    * reference's field order. `None` fields are omitted from the
+    * output, as `to_json` omits null fields. */
+  final case class Target(
+      id: Int,
+      name: Option[String],
+      mac: Option[String],
+      channels: Seq[Int],
+      connectionState: Option[Boolean],
+      lastSuccessfulSend: Option[Long],
+      isChannelsOverridden: Boolean,
+      overrideTimeoutRemaining: Long)
 
-  /** The 2 Hz `targets_update` snapshot document around an aggregated
-    * array of [[targetStruct]] values, e.g.
-    * `snapshot.agg(targetsUpdate(collect_list(targetStruct)))`: all
-    * targets in one array ordered by id (the registry's insertion order —
-    * ids are auto-increment, `TargetManager.h:46,52`), wrapped in the
-    * type envelope.
-    *
-    * `array_sort` sorts by the leading `id` field, making the document
-    * deterministic under any partitioning. */
-  def targetsUpdate(targets: Column): Column =
-    to_json(struct(lit("targets_update").as("type"), array_sort(targets).as("targets")))
+  private val json = new JsonFactory()
+
+  /** The 2 Hz `targets_update` snapshot document: all targets in one
+    * array ordered by id (the registry's insertion order — ids are
+    * auto-increment, `TargetManager.h:46,52`), wrapped in the type
+    * envelope. Sorting here makes the document independent of the order
+    * the targets arrive in. Byte-identical to Spark's `to_json` over
+    * the same struct (same Jackson generator, compact, null fields
+    * omitted), which TelemetrySpec pins. */
+  def targetsUpdate(targets: Seq[Target]): String = {
+    val out = new java.io.StringWriter()
+    val g = json.createGenerator(out)
+    g.writeStartObject()
+    g.writeStringField("type", "targets_update")
+    g.writeArrayFieldStart("targets")
+    targets.sortBy(_.id).foreach { t =>
+      g.writeStartObject()
+      g.writeNumberField("id", t.id)
+      t.name.foreach(g.writeStringField("name", _))
+      t.mac.foreach(g.writeStringField("mac", _))
+      g.writeArrayFieldStart("channels")
+      t.channels.foreach(c => g.writeNumber(c))
+      g.writeEndArray()
+      t.connectionState.foreach(g.writeBooleanField("connection_state", _))
+      t.lastSuccessfulSend.foreach(g.writeNumberField("last_successful_send", _))
+      g.writeBooleanField("is_channels_overridden", t.isChannelsOverridden)
+      g.writeNumberField("override_timeout_remaining", t.overrideTimeoutRemaining)
+      g.writeEndObject()
+    }
+    g.writeEndArray()
+    g.writeEndObject()
+    g.close()
+    out.toString
+  }
 
   /** Command response document. Expects columns: command, status,
     * message. */

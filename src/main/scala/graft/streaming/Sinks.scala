@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.functions.ChannelFunctions.sbusRescale
+import graft.operators.Telemetry
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
@@ -125,70 +126,77 @@ object Sinks {
 
   /** S5/P4 streaming — the 2 Hz `targets_update` telemetry: per
     * trigger, the micro-batch's freshest state per target (snapshot or
-    * hold re-emission) joins the registry dimension and becomes ONE
-    * envelope document, exactly like the reference's per-tick
+    * hold re-emission) meets the registry and becomes ONE envelope
+    * document, exactly like the reference's per-tick
     * `send_targets_update` (`src/transmitter/main.cpp:282-296`).
     *
-    * @param registry columns `id, name, mac, connection_state,
-    *                 last_successful_send` — identity from the
-    *                 bootstrap (R2), ack columns owned by the
-    *                 transport layer (the radio callback updates them
-    *                 in the reference, `:55-75`; here the fan-out
-    *                 `send` callback's results feed them)
+    * @param registry one row per target id, columns `id` (int), `name`,
+    *                 `mac` (string), `connection_state` (boolean),
+    *                 `last_successful_send` (long) — identity from the
+    *                 bootstrap (R2), ack columns owned by the transport
+    *                 layer (the radio callback updates them in the
+    *                 reference, `:55-75`; here the fan-out `send`
+    *                 callback's results feed them)
     *
-    * The latest-per-target reduction and registry join run
-    * distributed; only the finished one-row document crosses to the
-    * driver — the envelope is inherently a single serial line per
-    * tick, so that row IS the output.
+    * The registry is resolved once per query: it is collected into a
+    * driver-side map when the writer is built, so a changed registry
+    * takes effect only after the query is restarted. No batch is ever
+    * joined with it, so nothing is planned or shipped to the executors
+    * for it per batch.
     *
-    * One Spark action per micro-batch: the same execution that builds
-    * the document also counts the batch's engine rows (responses
-    * included), and the document is emitted only when that count is
-    * above zero — one document for a batch with at least one engine
-    * row, none for an empty or no-data batch. Every batch, emitting or
-    * not, runs the stateful plan once, which is what commits its
-    * state. Emission goes through [[deliverOnce]]: a replayed batch
-    * whose document was already emitted computes the document again
-    * but does not emit it (crash between emit and marker → one
-    * reprint). */
+    * One Spark job per micro-batch, one pass over the batch's rows:
+    * each partition counts its engine rows (responses included) and
+    * keeps each target's freshest snapshot or timeout row, by largest
+    * `(tsm, seq)`; the driver merges the partitions' results by the
+    * same rule, drops ids the registry does not list and renders the
+    * document. The document is emitted only when the count is above
+    * zero — one document for a batch with at least one engine row,
+    * none for an empty or no-data batch. Every batch, emitting or not,
+    * runs the stateful plan once, which is what commits its state.
+    * Emission goes through [[deliverOnce]]: a replayed batch whose
+    * document was already emitted runs its job again but does not emit
+    * (crash between emit and marker → one reprint). */
   def telemetryWriter(out: Dataset[EngineOutput], checkpointDir: String,
-      registry: DataFrame, emit: String => Unit): DataStreamWriter[EngineOutput] =
+      registry: DataFrame, emit: String => Unit): DataStreamWriter[EngineOutput] = {
+    import registry.sparkSession.implicits._
+    val registered = registry
+      .select("id", "name", "mac", "connection_state", "last_successful_send")
+      .as[(Int, Option[String], Option[String], Option[Boolean], Option[Long])]
+      .collect().map(r => r._1 -> r).toMap
     out.writeStream
       .outputMode(OutputMode.Append)
       .trigger(Trigger.ProcessingTime("500 milliseconds"))
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[EngineOutput], batchId: Long) =>
-        val doc = telemetryDocument(batch.toDF(), registry).collect().head
-        if (doc.getLong(0) > 0)
+        val parts = batch.rdd.mapPartitions { rows =>
+          var n = 0L
+          val states = rows.foldLeft(Map.empty[Int, EngineOutput]) { (m, o) =>
+            n += 1
+            if (o.kind == "snapshot" || o.kind == "timeout") keepFreshest(m, o) else m
+          }
+          Iterator.single((n, states.values.toArray))
+        }.collect()
+        if (parts.map(_._1).sum > 0)
           deliverOnce(s"$checkpointDir/telemetry-delivered", batchId) {
-            emit(doc.getString(1))
+            val states = parts.iterator.flatMap(_._2).foldLeft(Map.empty[Int, EngineOutput])(keepFreshest)
+            emit(Telemetry.targetsUpdate(states.values.toSeq.flatMap { o =>
+              registered.get(o.targetId).map { case (id, name, mac, connected, lastSend) =>
+                Telemetry.Target(id, name, mac, o.effective, connected,
+                  lastSend, o.isOverridden, o.remainingMs)
+              }
+            }))
           }
         ()
       }
+  }
 
-  /** One row `(rows, json)` for a telemetry micro-batch: `rows` counts
-    * every engine row, `json` is the `targets_update` document over
-    * each registered target's freshest snapshot or hold re-emission.
-    * Both come out of one aggregation, so the batch is scanned once. */
-  private def telemetryDocument(batch: DataFrame, registry: DataFrame): DataFrame =
-    batch
-      .groupBy(col("targetId").as("id"))
-      .agg(count(lit(1)).as("rows"),
-        // a null ordering never wins: a target's responses count as
-        // rows but never become its state
-        max_by(struct(col("effective"), col("isOverridden"), col("remainingMs")),
-          when(col("kind").isin("snapshot", "timeout"), struct(col("tsm"), col("seq"))))
-          .as("s"))
-      .join(broadcast(registry.withColumn("registered", lit(true))), Seq("id"), "left")
-      .select(col("rows"), col("id"), col("name"), col("mac"),
-        col("s.effective").as("channels"), col("connection_state"),
-        col("last_successful_send"),
-        col("s.isOverridden").as("is_channels_overridden"),
-        col("s.remainingMs").as("override_timeout_remaining"),
-        (col("registered") && col("s").isNotNull).as("listed"))
-      .agg(coalesce(sum(col("rows")), lit(0L)).as("rows"),
-        graft.operators.Telemetry.targetsUpdate(collect_list(
-          when(col("listed"), graft.operators.Telemetry.targetStruct))).as("json"))
+  /** `states` with `o` in place of its target's entry when `o` is
+    * fresher: a larger `(tsm, seq)`. */
+  private def keepFreshest(states: Map[Int, EngineOutput], o: EngineOutput): Map[Int, EngineOutput] =
+    states.get(o.targetId) match {
+      case Some(s) if s.tsm > o.tsm || (s.tsm == o.tsm && s.seq >= o.seq) => states
+      case _ => states.updated(o.targetId, o)
+    }
 
   /** Update-mode streaming aggregation → keyed upsert sink: running
     * per-target event counts emitted as CHANGED ROWS each micro-batch

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** P4 exact-document parity: the envelopes match hand-built reference
@@ -9,17 +10,31 @@ import org.apache.spark.sql.functions._
 class TelemetrySpec extends SparkSpec {
   import spark.implicits._
 
+  private val targetColumns = Seq("id", "name", "mac", "channels", "connection_state",
+    "last_successful_send", "is_channels_overridden", "override_timeout_remaining")
+
   private val snapshotDf = Seq(
     (2, "Drone_2", "00:00:9E:37:79:B1", Seq(1500, 1500, 1500, 1500, 1500, 1500, 1500, 1500),
       false, 123456L, false, 0L),
     (1, "Drone_1", "AA:BB:CC:DD:EE:01", Seq(1000, 1100, 1200, 1300, 1400, 1500, 1600, 2000),
       true, 99L, true, 4500L),
-  ).toDF("id", "name", "mac", "channels", "connection_state",
-    "last_successful_send", "is_channels_overridden", "override_timeout_remaining")
+  ).toDF(targetColumns: _*)
+
+  /** The renderer's entries for rows carrying [[targetColumns]]. */
+  private def targets(df: DataFrame): Seq[Telemetry.Target] =
+    df.select(targetColumns.map(col): _*)
+      .as[(Int, Option[String], Option[String], Seq[Int], Option[Boolean], Option[Long],
+        Boolean, Long)]
+      .collect().toSeq.map(Telemetry.Target.tupled)
+
+  /** The same document as Spark's `to_json` builds it over the same rows. */
+  private def toJsonDocument(df: DataFrame): String =
+    df.agg(to_json(struct(lit("targets_update").as("type"),
+      array_sort(collect_list(struct(targetColumns.map(col): _*))).as("targets"))))
+      .first().getString(0)
 
   test("targets_update envelope: exact document, targets ordered by id") {
-    val got = snapshotDf.agg(Telemetry.targetsUpdate(collect_list(Telemetry.targetStruct)))
-      .first().getString(0)
+    val got = Telemetry.targetsUpdate(targets(snapshotDf))
     val expected =
       """{"type":"targets_update","targets":[""" +
         """{"id":1,"name":"Drone_1","mac":"AA:BB:CC:DD:EE:01",""" +
@@ -61,9 +76,33 @@ class TelemetrySpec extends SparkSpec {
         coalesce(col("last_successful_send_ms"), lit(0L)).as("last_successful_send"),
         (col("is_overridden") === 1).as("is_channels_overridden"),
         coalesce(col("remaining_ms"), lit(0L)).as("override_timeout_remaining"))
-    val doc = snap.agg(Telemetry.targetsUpdate(collect_list(Telemetry.targetStruct)))
-      .first().getString(0)
+    val doc = Telemetry.targetsUpdate(targets(snap))
     assert(doc.startsWith("""{"type":"targets_update","targets":[{"id":0,"""))
     assert(doc.split("\"id\":").length == 9) // 8 targets
+  }
+
+  test("targets_update renderer equals to_json over the same rows") {
+    val rows = Seq[(Int, String, String, Seq[Int], java.lang.Boolean, java.lang.Long, Boolean, Long)](
+      (3, null, null, Seq(1000, 2000), null, null, false, 0L),
+      (1, "Drone \"1\" \\ back\u0001slash\ttab\nline", "AA:BB:CC:DD:EE:01",
+        Seq.fill(8)(1500), true, 99L, true, 4500L),
+      (2, "Drohne_ü_é_中文_\uD83D\uDE81", "00:00:9E:37:79:B1", Seq.fill(8)(1000),
+        false, Long.MaxValue, false, Long.MinValue),
+    ).toDF(targetColumns: _*)
+    val got = Telemetry.targetsUpdate(targets(rows))
+    assert(got == toJsonDocument(rows))
+    // null name/mac/connection_state/last_successful_send are omitted
+    assert(got.contains("""{"id":3,"channels":[1000,2000],"is_channels_overridden":false,"""))
+    // the escapes are JSON's, and non-ASCII text passes through unescaped
+    assert(got.contains("Drone \\\"1\\\" \\\\ back\\u0001slash\\ttab\\nline"))
+    assert(got.contains("Drohne_ü_é_中文_\uD83D\uDE81"))
+    // field order is the reference's
+    val second = got.split("""\{"id":2,""")(1).takeWhile(_ != '}')
+    val keys = """"([a-z_]+)":""".r.findAllMatchIn(second).map(_.group(1)).toSeq
+    assert(keys == targetColumns.tail)
+    // no targets: an empty array, not an omitted field
+    val empty = rows.where(lit(false))
+    assert(Telemetry.targetsUpdate(Nil) == toJsonDocument(empty))
+    assert(Telemetry.targetsUpdate(Nil) == """{"type":"targets_update","targets":[]}""")
   }
 }

@@ -155,7 +155,7 @@ class SinksSpec extends SparkSpec {
     } finally query.stop()
   }
 
-  test("telemetry writer: one SQL execution per micro-batch, documents only for batches with rows") {
+  test("telemetry writer: each micro-batch runs one Spark job; documents only for batches with rows") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -164,8 +164,8 @@ class SinksSpec extends SparkSpec {
       .toDF("id", "name", "mac", "connection_state", "last_successful_send")
     val input = MemoryStream[EngineEvent]
     val ckpt = java.nio.file.Files.createTempDirectory("graft-telemetry-once").toString
-    // (query id, batch id) -> SQL execution ids of that batch's jobs
-    val executions = new java.util.concurrent.ConcurrentHashMap[(String, Long), Set[String]]()
+    // (query id, batch id) -> ids of that batch's Spark jobs
+    val jobs = new java.util.concurrent.ConcurrentHashMap[(String, Long), Set[Int]]()
     val marker = s"sinks-spec-marker-${System.nanoTime()}"
     @volatile var markerSeen = false
     val listener = new SparkListener {
@@ -173,9 +173,8 @@ class SinksSpec extends SparkSpec {
         val props = Option(e.properties)
         if (props.exists(p => p.getProperty("spark.jobGroup.id") == marker)) markerSeen = true
         for (p <- props; q <- Option(p.getProperty("sql.streaming.queryId"));
-             b <- Option(p.getProperty("streaming.sql.batchId"));
-             x <- Option(p.getProperty("spark.sql.execution.id")))
-          executions.merge((q, b.toLong), Set(x), (a: Set[String], c: Set[String]) => a ++ c)
+             b <- Option(p.getProperty("streaming.sql.batchId")))
+          jobs.merge((q, b.toLong), Set(e.jobId), (a: Set[Int], c: Set[Int]) => a ++ c)
       }
     }
     sc.addSparkListener(listener)
@@ -205,12 +204,12 @@ class SinksSpec extends SparkSpec {
       val barrier = System.currentTimeMillis() + 60000
       while (!markerSeen && System.currentTimeMillis() < barrier) Thread.sleep(20)
       assert(markerSeen, "the listener never saw the barrier job")
-      val perBatch = executions.asScala.collect {
-        case ((q, b), xs) if q == query.id.toString => b -> xs.size
+      val perBatch = jobs.asScala.collect {
+        case ((q, b), ids) if q == query.id.toString => b -> ids.size
       }.toMap
       batches.foreach { p =>
         assert(perBatch.get(p.batchId).contains(1),
-          s"batch ${p.batchId} ran ${perBatch.getOrElse(p.batchId, 0)} SQL executions, want 1")
+          s"batch ${p.batchId} ran ${perBatch.getOrElse(p.batchId, 0)} Spark jobs, want 1")
       }
       assert(emitted.asScala.map(_._1).toSeq == Seq(0L),
         s"documents by batch: ${emitted.asScala.map(_._1).mkString(",")}")
@@ -219,6 +218,53 @@ class SinksSpec extends SparkSpec {
       query.stop()
       sc.removeSparkListener(listener)
     }
+  }
+
+  test("telemetry writer: each target's freshest state wins across partitions") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    SinksSpec.serial.clear()
+    val registry = Seq(
+      (1, "Drone_1", "AA:BB:CC:00:00:01", true, 10L),
+      (2, "Drone_2", "AA:BB:CC:00:00:02", false, 20L),
+      (3, "Drone_3", "AA:BB:CC:00:00:03", true, 30L),
+    ).toDF("id", "name", "mac", "connection_state", "last_successful_send")
+    def row(id: Int, kind: String, seq: Long, tsm: Long, ch: Int,
+        overridden: Boolean = false, remaining: Long = 0L) =
+      EngineOutput(id, kind, seq, tsm, Seq.fill(8)(ch), Seq.fill(8)(ch), Seq.fill(8)(-1),
+        overridden, 0L, remaining, if (kind == "response") "success" else "", "")
+    val input = MemoryStream[EngineOutput]
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-telemetry-freshest").toString
+    // round-robin over four partitions, so each target's rows are split
+    val query = Sinks.telemetryWriter(input.toDS().repartition(4), ckpt, registry,
+      doc => SinksSpec.serial.add(doc)).start()
+    try {
+      input.addData(
+        row(1, "snapshot", 1, 1000L, 1100),
+        row(2, "snapshot", 2, 1000L, 1200),
+        row(1, "snapshot", 5, 1200L, 1150, overridden = true, remaining = 3000L), // freshest of 1
+        row(1, "timeout", -1, 1200L, 1111), // same tsm, lower seq
+        row(2, "timeout", -1, 1500L, 1250), // freshest of 2: a hold re-emission
+        row(1, "response", 7, 2000L, 0), // newest, but a response is never state
+        row(2, "snapshot", 9, 1400L, 1240), // larger seq, older tsm
+        row(3, "response", 3, 1000L, 0), // registered, but no state this batch
+        row(9, "snapshot", 10, 3000L, 1900), // not in the registry
+        row(1, "snapshot", 6, 1100L, 1120),
+        row(2, "snapshot", 4, 1300L, 1230),
+        row(1, "timeout", -1, 900L, 1090),
+        row(2, "snapshot", 8, 1450L, 1245))
+      query.processAllAvailable()
+      assert(SinksSpec.serial.asScala.toSeq == Seq(
+        """{"type":"targets_update","targets":[""" +
+        """{"id":1,"name":"Drone_1","mac":"AA:BB:CC:00:00:01",""" +
+        """"channels":[1150,1150,1150,1150,1150,1150,1150,1150],""" +
+        """"connection_state":true,"last_successful_send":10,""" +
+        """"is_channels_overridden":true,"override_timeout_remaining":3000},""" +
+        """{"id":2,"name":"Drone_2","mac":"AA:BB:CC:00:00:02",""" +
+        """"channels":[1250,1250,1250,1250,1250,1250,1250,1250],""" +
+        """"connection_state":false,"last_successful_send":20,""" +
+        """"is_channels_overridden":false,"override_timeout_remaining":0}]}"""))
+    } finally query.stop()
   }
 
   test("telemetry writer: a batch of responses only still emits one document") {
