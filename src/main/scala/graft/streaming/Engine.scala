@@ -25,10 +25,36 @@ case class EngineEvent(
   * `Target` fields `data`/`is_channels_overridden`/`override_timeout`
   * (`lib/TargetManager/TargetManager.h:28-41`). `lastTsm` lets a
   * wall-clock timeout decide whether it fired for the TTL deadline or
-  * only for a hold re-emission. */
+  * only for a hold re-emission. The state store holds it as a
+  * [[StoredTargetState]]. */
 case class TargetState(
     live: Seq[Int],
     ovr: Seq[Int],
+    isOverridden: Boolean,
+    deadlineMs: Long,
+    lastTsm: Long,
+    wallAtLast: Long)
+
+/** [[TargetState]] as the state store holds it: `live` and `ovr`
+  * packed as big-endian Int32s into `BINARY` columns (8 channels → 16
+  * bytes each; the byte length gives the channel count), next to the
+  * four scalars. Every `Int` round-trips exactly, the `-1` sentinel
+  * included.
+  *
+  * Why no collection field: the state encoder is resolved and bound
+  * again in every micro-batch, outside the query plan, so the
+  * optimizer never normalizes its lambda variables. A `Seq` or `Array`
+  * field decodes through `MapObjects`, whose lambda variable gets a
+  * fresh id at each binding; the generated projection then differs in
+  * every batch only by that name, misses Spark's codegen cache and is
+  * compiled again per batch. Binary and scalar columns decode without
+  * a lambda, so the projection is compiled once per query.
+  *
+  * The state schema is not the one a `Seq[Int]`-valued state wrote: a
+  * checkpoint written with that layout cannot be resumed. */
+case class StoredTargetState(
+    live: Array[Byte],
+    ovr: Array[Byte],
     isOverridden: Boolean,
     deadlineMs: Long,
     lastTsm: Long,
@@ -75,9 +101,9 @@ case class EngineOutput(
   *    `src/receiver/main.cpp:36`).
   *
   * Scale posture: state is O(1) per target (two 8-int frames + a
-  * deadline); the only shuffle is the groupByKey on target_id, and
-  * Spark's state store partitions it across executors — arbitrary
-  * target cardinality.
+  * deadline, stored as a [[StoredTargetState]]); the only shuffle is
+  * the grouping on the `targetId` column, and Spark's state store
+  * partitions it across executors — arbitrary target cardinality.
   */
 object Engine {
   val ChannelCount = 8
@@ -96,6 +122,27 @@ object Engine {
   def initialState: TargetState =
     TargetState(Seq.fill(ChannelCount)(0), Seq.fill(ChannelCount)(-1),
       isOverridden = false, 0L, 0L, 0L)
+
+  /** [[TargetState]] → its stored form. */
+  def stored(s: TargetState): StoredTargetState =
+    StoredTargetState(pack(s.live), pack(s.ovr), s.isOverridden, s.deadlineMs,
+      s.lastTsm, s.wallAtLast)
+
+  /** Stored form → [[TargetState]]; `restored(stored(s)) == s`. */
+  def restored(s: StoredTargetState): TargetState =
+    TargetState(unpack(s.live), unpack(s.ovr), s.isOverridden, s.deadlineMs,
+      s.lastTsm, s.wallAtLast)
+
+  private def pack(channels: Seq[Int]): Array[Byte] = {
+    val buf = java.nio.ByteBuffer.allocate(4 * channels.size) // big-endian
+    channels.foreach(buf.putInt)
+    buf.array()
+  }
+
+  private def unpack(bytes: Array[Byte]): Seq[Int] = {
+    val buf = java.nio.ByteBuffer.wrap(bytes)
+    Vector.fill(bytes.length / 4)(buf.getInt())
+  }
 
   /** ST2 sentinel merge, scala form (engine-internal twin of
     * `ChannelFunctions.sentinelMergeArray`). */
@@ -165,9 +212,10 @@ object Engine {
     * a processing-time timer even with no input — the reference's
     * sample-and-hold upsampling (30 Hz SBUS re-emission of a 2 Hz
     * input, `src/receiver/main.cpp:62-74`). Timeout rows carry kind
-    * "timeout". */
+    * "timeout". State crosses the store as a [[StoredTargetState]],
+    * converted here and nowhere else. */
   def processGroup(holdEmitMs: Option[Long])(id: Int, events: Iterator[EngineEvent],
-      state: GroupState[TargetState]): Iterator[EngineOutput] = {
+      state: GroupState[StoredTargetState]): Iterator[EngineOutput] = {
     def arm(s: TargetState, sinceTsm: Long): Unit = {
       // next wake-up: the override deadline and/or the hold re-emission
       val deadlineDelay =
@@ -181,16 +229,16 @@ object Engine {
     def wallNow: Long =
       try state.getCurrentProcessingTimeMs()
       catch { case _: Exception => 0L }
+    val held = state.getOption.map(restored).getOrElse(initialState)
     if (state.hasTimedOut) {
-      val s = state.getOption.getOrElse(initialState)
       // The stream is quiet: decide whether the wall-clock TTL deadline
       // has elapsed (vs a shorter hold re-emission firing first). The
       // TTL budget in wall time equals the event-time budget armed at
       // the last event: deadlineMs - lastTsm.
-      val ttlFired = s.isOverridden &&
-        wallNow - s.wallAtLast >= s.deadlineMs - s.lastTsm
-      val cleared = if (ttlFired) s.copy(isOverridden = false) else s
-      state.update(cleared)
+      val ttlFired = held.isOverridden &&
+        wallNow - held.wallAtLast >= held.deadlineMs - held.lastTsm
+      val cleared = if (ttlFired) held.copy(isOverridden = false) else held
+      state.update(stored(cleared))
       // Stamp the emission with the probe time mapped into event time
       // (lastTsm + wall-clock elapsed since it), so hold re-emissions
       // order correctly by tsm downstream and an active override's
@@ -201,7 +249,7 @@ object Engine {
       arm(cleared, probeTsm)
       Iterator.single(snapshot(id, cleared, -1L, probeTsm, kind = "timeout"))
     } else {
-      var s = state.getOption.getOrElse(initialState)
+      var s = held
       val ordered = events.toSeq.sortBy(e => (e.tsm, if (e.kind == "command") 0 else 1, e.seq))
       val out = Seq.newBuilder[EngineOutput]
       var lastTsm = 0L
@@ -212,7 +260,7 @@ object Engine {
         lastTsm = math.max(lastTsm, e.tsm)
       }
       s = s.copy(wallAtLast = wallNow)
-      state.update(s)
+      state.update(stored(s))
       arm(s, lastTsm)
       out.result().iterator
     }
@@ -224,12 +272,15 @@ object Engine {
     *
     * @param holdEmitMs T2 sample-and-hold: re-emit each target's held
     *                   state every `holdEmitMs` of wall-clock quiet
-    *                   (None = emit only on input / TTL expiry) */
+    *                   (None = emit only on input / TTL expiry)
+    *
+    * Events are grouped on the `targetId` column, not by a typed key
+    * lambda: no per-event object is built to compute the key. */
   def effectiveStates(events: Dataset[EngineEvent],
       holdEmitMs: Option[Long] = None): Dataset[EngineOutput] = {
     import events.sparkSession.implicits._
     events
-      .groupByKey(_.targetId)
+      .groupBy(col("targetId")).as[Int, EngineEvent]
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout)(
         processGroup(holdEmitMs))
   }

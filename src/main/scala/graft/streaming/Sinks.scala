@@ -2,9 +2,13 @@ package graft.streaming
 
 import graft.functions.ChannelFunctions.sbusRescale
 import graft.operators.Telemetry
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
+import org.apache.spark.unsafe.types.UTF8String
+import scala.collection.immutable.ArraySeq
 
 /** S4/S6 — output sinks: the ESP-NOW per-target fan-out and the SBUS
   * re-emission, as `foreachBatch` writers over the engine's snapshot
@@ -15,10 +19,13 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
   * input, `src/receiver/main.cpp:62-74`).
   *
   * The transport is pluggable (`send` callbacks) — production would
-  * bind a radio/UART driver; tests bind recorders. Delivery iterates
-  * partitions distributed-side: the snapshot relation is bounded by
-  * the target count (keyed state emits one row per target), so no
-  * collect, no driver bottleneck, at any input scale.
+  * bind a radio/UART driver; tests bind recorders. The fan-out and
+  * SBUS paths iterate partitions distributed-side and bring nothing
+  * back to the driver. The telemetry writer does bring results back:
+  * one small result per partition, at most one entry per target plus
+  * a row count, which the driver merges into the one document. Its
+  * driver-side cost is bounded by partitions × targets, not by the
+  * input rate.
   */
 object Sinks {
 
@@ -145,14 +152,18 @@ object Sinks {
     * for it per batch.
     *
     * One Spark job per micro-batch, one pass over the batch's rows:
-    * each partition counts its engine rows (responses included) and
-    * keeps each target's freshest snapshot or timeout row, by largest
-    * `(tsm, seq)`; the driver merges the partitions' results by the
-    * same rule, drops ids the registry does not list and renders the
-    * document. The document is emitted only when the count is above
-    * zero — one document for a batch with at least one engine row,
-    * none for an empty or no-data batch. Every batch, emitting or not,
-    * runs the stateful plan once, which is what commits its state.
+    * a single `SparkContext.runJob` over the batch's own physical rows
+    * (`queryExecution.toRdd`), so no second plan is analysed or
+    * compiled to turn them into objects. Each partition reads the
+    * columns it needs by ordinal, counts its engine rows (responses
+    * included) and keeps each target's freshest snapshot or timeout
+    * row, by largest `(tsm, seq)`, copying only the rows it keeps; the
+    * driver merges the partitions' results by the same rule
+    * ([[keepFreshest]]), drops ids the registry does not list and
+    * renders the document. The document is emitted only when the count
+    * is above zero — one document for a batch with at least one engine
+    * row, none for an empty or no-data batch. Every batch, emitting or
+    * not, runs the stateful plan once, which is what commits its state.
     * Emission goes through [[deliverOnce]]: a replayed batch whose
     * document was already emitted runs its job again but does not emit
     * (crash between emit and marker → one reprint). */
@@ -168,21 +179,38 @@ object Sinks {
       .trigger(Trigger.ProcessingTime("500 milliseconds"))
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[EngineOutput], batchId: Long) =>
-        val parts = batch.rdd.mapPartitions { rows =>
-          var n = 0L
-          val states = rows.foldLeft(Map.empty[Int, EngineOutput]) { (m, o) =>
-            n += 1
-            if (o.kind == "snapshot" || o.kind == "timeout") keepFreshest(m, o) else m
-          }
-          Iterator.single((n, states.values.toArray))
-        }.collect()
+        val Seq(idAt, kindAt, seqAt, tsmAt, effectiveAt, overriddenAt, remainingAt) =
+          Seq("targetId", "kind", "seq", "tsm", "effective", "isOverridden", "remainingMs")
+            .map(batch.schema.fieldIndex)
+        // the (TaskContext, Iterator) form: for an Iterator-only function
+        // runJob adds a wrapper lambda whose closure cleaning re-reads
+        // SparkContext's class file every batch
+        val parts = batch.sparkSession.sparkContext.runJob(batch.queryExecution.toRdd,
+          (_: TaskContext, rows: Iterator[InternalRow]) => {
+            var n = 0L
+            val states = rows.foldLeft(Map.empty[Int, Freshest]) { (m, r) =>
+              n += 1
+              val kind = r.getUTF8String(kindAt)
+              if (kind == SnapshotKind || kind == TimeoutKind) {
+                val (id, tsm, seq) = (r.getInt(idAt), r.getLong(tsmAt), r.getLong(seqAt))
+                keepFreshest(m, id, tsm, seq) {
+                  Freshest(id, tsm, seq,
+                    ArraySeq.unsafeWrapArray(r.getArray(effectiveAt).toIntArray()),
+                    r.getBoolean(overriddenAt), r.getLong(remainingAt))
+                }
+              } else m
+            }
+            (n, states.values.toArray)
+          })
         if (parts.map(_._1).sum > 0)
           deliverOnce(s"$checkpointDir/telemetry-delivered", batchId) {
-            val states = parts.iterator.flatMap(_._2).foldLeft(Map.empty[Int, EngineOutput])(keepFreshest)
-            emit(Telemetry.targetsUpdate(states.values.toSeq.flatMap { o =>
-              registered.get(o.targetId).map { case (id, name, mac, connected, lastSend) =>
-                Telemetry.Target(id, name, mac, o.effective, connected,
-                  lastSend, o.isOverridden, o.remainingMs)
+            val states = parts.iterator.flatMap(_._2).foldLeft(Map.empty[Int, Freshest]) {
+              (m, f) => keepFreshest(m, f.targetId, f.tsm, f.seq)(f)
+            }
+            emit(Telemetry.targetsUpdate(states.values.toSeq.flatMap { f =>
+              registered.get(f.targetId).map { case (id, name, mac, connected, lastSend) =>
+                Telemetry.Target(id, name, mac, f.effective, connected,
+                  lastSend, f.isOverridden, f.remainingMs)
               }
             }))
           }
@@ -190,12 +218,22 @@ object Sinks {
       }
   }
 
-  /** `states` with `o` in place of its target's entry when `o` is
-    * fresher: a larger `(tsm, seq)`. */
-  private def keepFreshest(states: Map[Int, EngineOutput], o: EngineOutput): Map[Int, EngineOutput] =
-    states.get(o.targetId) match {
-      case Some(s) if s.tsm > o.tsm || (s.tsm == o.tsm && s.seq >= o.seq) => states
-      case _ => states.updated(o.targetId, o)
+  private val SnapshotKind = UTF8String.fromString("snapshot")
+  private val TimeoutKind = UTF8String.fromString("timeout")
+
+  /** What the telemetry document keeps of a target's freshest
+    * snapshot or timeout row. */
+  private final case class Freshest(targetId: Int, tsm: Long, seq: Long,
+      effective: Seq[Int], isOverridden: Boolean, remainingMs: Long)
+
+  /** `states` with `entry` in place of target `id`'s entry when the
+    * row at `(tsm, seq)` is fresher: a larger `(tsm, seq)`. `entry` is
+    * built only then. */
+  private def keepFreshest(states: Map[Int, Freshest], id: Int, tsm: Long, seq: Long)(
+      entry: => Freshest): Map[Int, Freshest] =
+    states.get(id) match {
+      case Some(s) if s.tsm > tsm || (s.tsm == tsm && s.seq >= seq) => states
+      case _ => states.updated(id, entry)
     }
 
   /** Update-mode streaming aggregation → keyed upsert sink: running

@@ -71,6 +71,31 @@ class EngineSpec extends SparkSpec {
     assert(s3.deadlineMs == 8000L)
   }
 
+  test("stored state: TargetState -> stored form -> TargetState is the identity") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    val channel = Gen.oneOf(Gen.const(-1), Gen.const(0), Gen.choose(1000, 2000),
+      Gen.choose(65536, Int.MaxValue), Gen.const(Int.MinValue), Gen.const(Int.MaxValue),
+      Gen.choose(Int.MinValue, Int.MaxValue))
+    val channels = Gen.choose(0, 12).flatMap(Gen.listOfN(_, channel))
+    val state = for {
+      live <- channels; ovr <- channels; on <- Gen.oneOf(true, false)
+      deadline <- Gen.long; last <- Gen.long; wall <- Gen.long
+    } yield TargetState(live, ovr, on, deadline, last, wall)
+    val edges = Seq(
+      Engine.initialState,
+      TargetState(Seq.fill(8)(-1), Seq.fill(8)(-1), isOverridden = true, -1L, -1L, -1L),
+      TargetState(Seq(Int.MinValue, Int.MaxValue, 65535, 65536, -1, 0, 1000, 2000),
+        Seq(70000, -1, Int.MaxValue, Int.MinValue, 1500, -2, 1, 131071),
+        isOverridden = true, Long.MaxValue, Long.MinValue, 0L))
+    val params = SCTest.Parameters.default.withMinSuccessfulTests(500)
+    assert(SCTest.check(params, Prop.forAll(state)(s => Engine.restored(Engine.stored(s)) == s)).passed)
+    edges.foreach(s => assert(Engine.restored(Engine.stored(s)) == s))
+    // and through the state store's own row encoding: BINARY + scalars
+    val viaRows = edges.map(Engine.stored).toDS().collect().map(Engine.restored)
+    assert(viaRows.toSeq == edges)
+    assert(Engine.stored(Engine.initialState).live.length == 4 * Engine.ChannelCount)
+  }
+
   /** `processAllAvailable` never returns under ProcessingTimeTimeout
     * (the stateful operator keeps requesting no-data micro-batches to
     * check wall-clock timeouts), so streaming assertions poll the
@@ -194,6 +219,36 @@ class EngineSpec extends SparkSpec {
         .as[EngineOutput].collect().last
       assert(!last.isOverridden, "TTL must expire on wall clock under hold mode")
       assert(last.effective == Seq.fill(8)(1500))
+    } finally query.stop()
+  }
+
+  test("streaming: steady micro-batches compile no new code") {
+    // The state codec must be compiled once per query, not once per
+    // micro-batch. Progress is read from `lastProgress` only, so no
+    // query of the test itself compiles anything inside the window.
+    import org.apache.spark.metrics.source.CodegenMetrics
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val input = MemoryStream[EngineEvent]
+    val query = Engine.effectiveStates(input.toDS())
+      .writeStream.format("memory").queryName("engine_codegen")
+      .outputMode("append").start()
+    def lastBatch: Long = Option(query.lastProgress).map(_.batchId).getOrElse(-1L)
+    def awaitBatch(b: Long): Unit = {
+      val deadline = System.currentTimeMillis() + 60000
+      while (lastBatch < b && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(lastBatch >= b, s"timed out waiting for batch $b, last $lastBatch")
+    }
+    try {
+      // hour-long overrides: every target holds a pending timeout, so
+      // each trigger runs a no-data batch through the state operator
+      input.addData((1 to 4).flatMap(id => Seq(frame(id, id, 1000L, 1500),
+        command(id, 10L + id, 2000L, Seq(1800), 3600000L))): _*)
+      awaitBatch(3) // the data batch and the first no-data batches warm up
+      val from = lastBatch
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      awaitBatch(from + 10)
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+      assert(compiles == 0, s"$compiles compiles over ${lastBatch - from} steady batches")
     } finally query.stop()
   }
 
