@@ -21,19 +21,51 @@ object Layout {
     * and Spark's bucket spec share the Murmur3 hash, so every output
     * task holds whole buckets and writes ONE file per bucket it owns
     * (≤ numBuckets files total) instead of tasks × buckets tiny files
-    * (32 scan partitions × 32 buckets = up to 1024 files per build —
-    * the dominant cost of every index build AND of each later bucketed
+    * (P scan partitions × B buckets = up to P·B files per build — the
+    * dominant cost of every index build AND of each later bucketed
     * scan's file opens). Bucket contents, sort order, and every serve
     * plan are unchanged; the added exchange is the standard
-    * write-clustering trade a 100 TB ingest wants anyway. */
+    * write-clustering trade a 100 TB ingest wants anyway. `mode`
+    * Append adds files to an existing table, whose bucket spec must
+    * equal this one ([[appendBucketed]]). */
   def writeBucketed(df: DataFrame, table: String, key: String,
-      numBuckets: Int): Unit =
+      numBuckets: Int, mode: SaveMode = SaveMode.Overwrite): Unit =
     df.repartition(numBuckets, col(key))
       .write
-      .mode(SaveMode.Overwrite)
+      .mode(mode)
       .bucketBy(numBuckets, key)
       .sortBy(key)
       .saveAsTable(table)
+
+  /** Append `df` to a table [[writeBucketed]] wrote, at the TABLE's
+    * bucket count read from the catalog, not the session's: Spark
+    * rejects an append whose bucket spec differs from the table's, so
+    * an index built under one shuffle parallelism stays appendable
+    * under another. */
+  def appendBucketed(df: DataFrame, table: String, key: String): Unit =
+    writeBucketed(df, table, key, bucketCount(df.sparkSession, table),
+      SaveMode.Append)
+
+  /** Bucket count of the bucketed managed table `table`, from the
+    * session catalog. */
+  def bucketCount(spark: SparkSession, table: String): Int = {
+    val id = spark.sessionState.sqlParser.parseTableIdentifier(table)
+    spark.sessionState.catalog.getTableMetadata(id).bucketSpec
+      .getOrElse(throw new IllegalArgumentException(s"$table is not bucketed"))
+      .numBuckets
+  }
+
+  /** Bucket count of a banked index built now: the session's shuffle
+    * parallelism (`spark.sql.shuffle.partitions`, which
+    * [[graft.Sessions.sqlConf]] sets to the core count). The serve
+    * plans keep their index scans BUCKETED — the exchange-free joins
+    * and aggregations on the bucket key need it — so a scan runs one
+    * task per bucket: at this count one scan is one task wave, and the
+    * build writes one file per core instead of a fixed count sized
+    * for some other machine. Appends keep the table's own count
+    * ([[appendBucketed]]). */
+  def indexBuckets(spark: SparkSession): Int =
+    spark.conf.get("spark.sql.shuffle.partitions").toInt
 
   /** True when the executed plan of `df` contains any shuffle exchange
     * — the property bucketing is meant to eliminate. */

@@ -98,11 +98,6 @@ object Pipeline {
     * [[corpusScaledClusters]] — the knob that bounds the per-cluster
     * quadratic work in q51 and the per-query candidate list in q31. */
   private[operators] val ClusterTargetOccupancy = 32
-  /** Bucket count of the index-at-rest membership table (q85): matches
-    * the session's shuffle parallelism so a bucketed scan feeds every
-    * core; at a real deployment size to cluster-count / file-size
-    * targets, not to cores. */
-  private val IvfIndexBuckets = 32
 
   /** Occupancy-driven bit derivation, the library's one scale knob
     * shape: the smallest `b` in [minBits, MaxHyperplanes] with
@@ -778,6 +773,14 @@ object Pipeline {
     * row-identical to q31 (same build pipeline, same serve) — the
     * oracle twin IS q31's.
     *
+    * Scale posture: the serve reads the membership twice, once for
+    * the broadcast query side and once for the probe side, and both
+    * scans stay bucketed (the TopK aggregation's clustering on
+    * `cluster` keeps them so), so each runs one task per bucket. The
+    * index has one bucket per shuffle partition
+    * ([[Layout.indexBuckets]]): each scan is one task wave at any core
+    * count.
+    *
     * The production split this encodes: index construction is INGEST
     * work, paid once per corpus version by `Layout.writeIvfIndex`;
     * queries pay only lookup + rank. Within one session the build runs
@@ -902,7 +905,7 @@ object Pipeline {
     ensureCurrent(spark, idx, corpusFingerprint(e)) {
       val (members, routing) = mapSideFineClustersWithRouting(e,
         labelCentroids(spark, dir), ClusterTargetOccupancy)
-      Layout.writeIvfIndex(members, routing, idx, IvfIndexBuckets)
+      Layout.writeIvfIndex(members, routing, idx, Layout.indexBuckets(spark))
     }
     idx
   }
@@ -921,11 +924,13 @@ object Pipeline {
     *
     * Scale posture (100 TB): identical to q85 except the broadcast
     * query relation is ≤ (1 + b_c) rows per query (b_c ≤ 32 active
-    * bits); the members side stays a bucketed exchange-free scan, and
-    * per-query candidates stay O(occupancy × probes) — at the 32-target
-    * occupancy and b_c ≈ 30, ~10³ candidate rows per query at ANY
-    * corpus size. The index is NOT rebuilt: nprobe is a query-time
-    * decision, as in any production IVF deployment. */
+    * bits); the members side stays a bucketed exchange-free scan of
+    * one task per bucket — one wave, as the index has one bucket per
+    * shuffle partition — and per-query candidates stay
+    * O(occupancy × probes) — at the 32-target occupancy and b_c ≈ 30,
+    * ~10³ candidate rows per query at ANY corpus size. The index is
+    * NOT rebuilt: nprobe is a query-time decision, as in any
+    * production IVF deployment. */
   def q118MultiProbeAnn(spark: SparkSession, dir: String): DataFrame =
     annServe(spark.table(ensureIvfIndex(spark, dir)), probeRadius = 1)
 
@@ -2187,7 +2192,7 @@ object Pipeline {
         Future {
           val (members, routing) = mapSideFineClustersWithRouting(e,
             labelCentroids(spark, dir), ClusterTargetOccupancy)
-          Layout.writeIvfIndex(members, routing, ivf, IvfIndexBuckets)
+          Layout.writeIvfIndex(members, routing, ivf, Layout.indexBuckets(spark))
           indexAppend(spark, ivf, delta)
         },
         Future {
@@ -2367,20 +2372,17 @@ object Pipeline {
     * (append cheaply between rebuilds; rebuild when occupancy drift
     * erodes the per-query candidate bound). Spark validates the bucket
     * spec on append, so the layout invariant the serve path relies on
-    * cannot silently degrade. */
+    * cannot silently degrade; the append writes at the table's own
+    * bucket count ([[Layout.appendBucketed]]), so an index built under
+    * another shuffle parallelism stays appendable. */
   def indexAppend(spark: SparkSession, name: String,
       vectors: DataFrame): Unit =
-    routeThroughIndex(spark.table(name + "_routing"),
-        vectors.select(col("vec_id"),
-          col("e").cast("array<double>").as("e")), "e")
-      .select(col("vec_id"), col("e"), col("cluster"), col("mask"))
-      // r21: cluster the batch by the bucket hash first (the
-      // writeBucketed discipline) — ≤ numBuckets files per append
-      // instead of tasks × buckets
-      .repartition(IvfIndexBuckets, col("cluster"))
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .bucketBy(IvfIndexBuckets, "cluster").sortBy("cluster")
-      .saveAsTable(name)
+    Layout.appendBucketed(
+      routeThroughIndex(spark.table(name + "_routing"),
+          vectors.select(col("vec_id"),
+            col("e").cast("array<double>").as("e")), "e")
+        .select(col("vec_id"), col("e"), col("cluster"), col("mask")),
+      name, "cluster")
 
   /** Occupancy-drift report for a persisted IVF index — the REBUILD
     * trigger [[indexAppend]]'s frozen routing makes necessary: per
@@ -3279,7 +3281,7 @@ object Pipeline {
       corpus: DataFrame): Unit = {
     val d = tokenizedDocs(corpus)
     Layout.writeInvertedIndex(bm25Postings(d), bm25Stats(d), name,
-      IvfIndexBuckets)
+      Layout.indexBuckets(spark))
   }
 
   /** Serve the standing BM25 query set from a persisted inverted
@@ -3310,8 +3312,9 @@ object Pipeline {
   /** Incremental postings maintenance — [[indexAppend]]'s posture
     * applied to the text index: NEW documents tokenize through the
     * build's exact pipeline ([[tokenizedDocs]]) and bucket-append on
-    * the term key (Spark validates the bucket spec, so the serve
-    * path's pushdown invariant cannot silently degrade), and the
+    * the term key at the table's own bucket count (Spark validates
+    * the bucket spec, so the serve path's pushdown invariant cannot
+    * silently degrade — [[Layout.appendBucketed]]), and the
     * one-row corpus stats update INCREMENTALLY from the stored values
     * plus the batch's own aggregate — the existing corpus is never
     * re-read, let alone re-tokenized.
@@ -3332,13 +3335,7 @@ object Pipeline {
     val batch = bm25Stats(d).collect().head
     if (batch.getDouble(0) == 0.0) return
     val (n2, avg2) = (batch.getDouble(0), batch.getDouble(1))
-    bm25Postings(d)
-      // r21: cluster by the bucket hash first (the writeBucketed
-      // discipline) — ≤ numBuckets files per append
-      .repartition(IvfIndexBuckets, col("t"))
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .bucketBy(IvfIndexBuckets, "t").sortBy("t")
-      .saveAsTable(name)
+    Layout.appendBucketed(bm25Postings(d), name, "t")
     val old = spark.table(name + "_stats")
       .collect().headOption.map(r => (r.getDouble(0), r.getDouble(1)))
       .getOrElse((0.0, 0.0))
@@ -5077,7 +5074,7 @@ object Pipeline {
       val (members, routing) = mapSideFineClustersWithRouting(e,
         labelCentroids(spark, dir), ClusterTargetOccupancy)
       Layout.writeIvfIndex(members.withColumn("codes", codesCol),
-        routing, idx, IvfIndexBuckets)
+        routing, idx, Layout.indexBuckets(spark))
     }
     idx
   }
@@ -5104,7 +5101,7 @@ object Pipeline {
       val e = pqVectors(spark, dir)
       val (members, routing) = mapSideFineClustersWithRouting(e,
         kMeansCentroids(e), ClusterTargetOccupancy)
-      Layout.writeIvfIndex(members, routing, idx, IvfIndexBuckets)
+      Layout.writeIvfIndex(members, routing, idx, Layout.indexBuckets(spark))
     }
     idx
   }

@@ -112,9 +112,19 @@ object Engine {
     * 175-177, 185, 195, 208, 219-221`). */
   def invalidCountMsg(n: Int): String = s"Invalid channel count. Expected 1-8, got $n"
   val durationMsg: String = "Duration must be at least 1ms"
+  val nonIntMsg: String = "Channel values must be integers"
   val rangeMsg: String = "Channel values must be between 1000-2000 or -1 to skip"
   def successMsg(targetId: Int, durationMs: Long): String =
     s"Channels updated for target $targetId with ${durationMs}ms timeout"
+
+  /** Command channel value that stands for a JSON value which is not
+    * an integer (`null`), so [[validate]] can report it in the
+    * reference's cascade position (`main.cpp:192-197`, after count and
+    * duration) without widening [[EngineEvent]]. A literal
+    * `-2147483648` is out of range either way: the command parser
+    * turns it into another out-of-range value, so this value never
+    * arrives from a genuine integer. */
+  val NotAnInteger: Int = Int.MinValue
 
   /** Initial register state: all-zero frame (the reference's zeroed
     * `ChannelData`, observable as the −1467 SBUS artifact before any
@@ -150,11 +160,13 @@ object Engine {
     incoming.zipAll(current, -1, 0).map { case (n, o) => if (n == -1) o else n }
 
   /** F1 validation cascade in reference order: count → duration →
-    * per-value range (`src/transmitter/main.cpp:172-210`). */
+    * non-integer value → per-value range
+    * (`src/transmitter/main.cpp:172-210`). */
   def validate(e: EngineEvent): Option[String] =
     if (e.channels.isEmpty || e.channels.size > ChannelCount)
       Some(invalidCountMsg(e.channels.size))
     else if (e.durationMs < 1) Some(durationMsg)
+    else if (e.channels.contains(NotAnInteger)) Some(nonIntMsg)
     else if (e.channels.exists(v => v != -1 && (v < 1000 || v > 2000)))
       Some(rangeMsg)
     else None

@@ -18,8 +18,10 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * a two-installment stream equals the batch append sequence of the
   * same waves, spec-proven in IndexMaintainSpec): routing/codebooks
   * stay FROZEN at build time, appends land in the build's layout
-  * (bucket specs validated by Spark on every append), and the drift
-  * that freezing accumulates is surfaced PER BATCH through the
+  * (bucket specs validated by Spark on every append; each append
+  * writes at the table's own bucket count, whatever the session's
+  * shuffle parallelism), and the drift that freezing accumulates is
+  * surfaced PER BATCH through the
   * existing reports ([[Pipeline.indexOccupancyReport]]'s occupancy,
   * [[Pipeline.pqIndexDriftReport]]'s quantization error) via the
   * `onDrift` callback — the rebuild tripwire a deployment wires to

@@ -116,10 +116,10 @@ object Sources {
     * pre-dispatch outcome of the reference's serial loop:
     *
     *  - `commands`: envelope-complete `override_channels` lines as
-    *    engine events (deeper validation — count/duration/range —
-    *    happens inside the engine, which emits its own responses, so
-    *    batch `Router.q32` and the streaming path produce the same
-    *    response classes);
+    *    engine events (deeper validation — count/duration/non-integer
+    *    value/range — happens inside the engine, which emits its own
+    *    responses, so batch `Router.q32` and the streaming path produce
+    *    the same response classes);
     *  - `responses`: the verbatim error envelopes the reference prints
     *    for lines that never reach a handler — malformed JSON
     *    (`src/transmitter/main.cpp:235-239`), missing `"command"`
@@ -185,7 +185,14 @@ object Sources {
         lit("command").as("kind"),
         col("__seq").as("seq"),
         nowMs.as("tsm"),
-        col("p.channels").as("channels"),
+        // a null element is not an integer: it becomes the engine's
+        // NotAnInteger marker, and a literal NotAnInteger (out of range
+        // either way) becomes 0, so the engine reports each in its
+        // cascade position and the event decoder never sees a null
+        transform(col("p.channels"), c =>
+          when(c.isNull, lit(Engine.NotAnInteger))
+            .when(c === Engine.NotAnInteger, lit(0)).otherwise(c))
+          .as("channels"),
         col("p.duration").as("durationMs"))
       .as[EngineEvent]
     // Verbatim pre-dispatch responses (same classification order and

@@ -483,6 +483,53 @@ class LayoutSpec extends SparkSpec {
       "empty append must change neither postings nor stats")
   }
 
+  test("banked indexes have one bucket per shuffle partition; q85's members scans run one task per bucket") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val ivf = Pipeline.ivfIndexTable(sfDir)
+    val serve = Pipeline.q85IndexedAnn(spark, sfDir)
+    Pipeline.q86IndexedBm25(spark, sfDir).collect()
+    assert(Layout.bucketCount(spark, ivf) == n, "IVF membership bucket count")
+    assert(Layout.bucketCount(spark, Pipeline.invIndexTable(sfDir)) == n,
+      "inverted postings bucket count")
+    // the serve keeps its membership scans bucketed, so each scan's
+    // task count is the bucket count
+    serve.collect()
+    val scans = new AdaptiveSparkPlanHelper {}
+      .collect(serve.queryExecution.executedPlan) {
+        case s: FileSourceScanExec
+            if s.tableIdentifier.exists(_.table.equalsIgnoreCase(ivf)) => s
+      }
+    assert(scans.nonEmpty, "no members scan in q85's executed plan")
+    scans.foreach { s =>
+      assert(s.bucketedScan, "q85's members scan must stay bucketed")
+      assert(s.inputRDDs().head.getNumPartitions == n,
+        s"members scan plans ${s.inputRDDs().head.getNumPartitions} partitions, want $n")
+    }
+  }
+
+  test("invIndexAppend into an index built at another bucket count keeps the table's count") {
+    val shared = Pipeline.invIndexTable(sfDir)
+    if (!spark.catalog.tableExists(shared))
+      Pipeline.q86IndexedBm25(spark, sfDir).collect()
+    // append mutates — private copy at 32 buckets, which differs from
+    // the test session's shuffle parallelism
+    val idx = shared + "_apdx"
+    Layout.writeInvertedIndex(spark.table(shared),
+      spark.table(shared + "_stats"), idx, 32)
+    assert(spark.conf.get("spark.sql.shuffle.partitions").toInt != 32)
+    val before = spark.table(idx).count()
+    Pipeline.invIndexAppend(spark, idx, graft.Tables.documents(spark, sfDir)
+      .select((col("doc_id") + 9000000L).as("doc_id"), col("text"))
+      .filter(col("doc_id") % 7 === 0))
+    assert(spark.table(idx).count() > before, "append landed no postings")
+    assert(Layout.bucketCount(spark, idx) == 32,
+      "append must keep the table's own bucket count")
+    assert(!Layout.hasShuffle(spark.table(idx).groupBy(col("t")).count()),
+      "term aggregation must stay exchange-free after append")
+  }
+
   test("persisted PQ index: q103 serves q101's exact rows from 4-int codes") {
     val atRest = Pipeline.q103IndexedPqAnn(spark, sfDir).collect().toSeq
     val inSession = Pipeline.q101PqAnn(spark, sfDir).collect().toSeq

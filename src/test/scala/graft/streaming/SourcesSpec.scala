@@ -84,6 +84,49 @@ class SourcesSpec extends SparkSpec {
       r.message == "Channel values must be between 1000-2000 or -1 to skip"))
   }
 
+  test("streaming: a null channel value gets the non-integer error and leaves the stream and the state alone") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sq = spark.sqlContext
+    val mem = MemoryStream[String]
+    val cmds = Sources.commandsFromJsonLines(mem.toDF(), nowMs = lit(1000L)).commands
+    val q = Engine.effectiveStates(cmds).writeStream
+      .format("memory").queryName("null_channel_engine").outputMode("append").start()
+    // processAllAvailable does not return under ProcessingTimeTimeout:
+    // poll the sink while the query lives
+    def awaitRows(n: Int): Array[EngineOutput] = {
+      val deadline = System.currentTimeMillis() + 60000
+      def rows = spark.table("null_channel_engine").as[EngineOutput].collect()
+      while (q.isActive && rows.count(_.kind == "response") < n &&
+          System.currentTimeMillis() < deadline) Thread.sleep(100)
+      assert(q.isActive, s"the stream died: ${q.exception}")
+      rows
+    }
+    try {
+      mem.addData("""{"command": "override_channels", "target_id": 3, "channels": [1500], "duration": 600000}""")
+      val held = awaitRows(1).filter(_.kind == "snapshot").last
+      assert(held.isOverridden && held.effective.head == 1500)
+      mem.addData(
+        """{"command": "override_channels", "target_id": 3, "channels": [1500, null], "duration": 5000}""",
+        // the reference's cascade: count and duration errors come first
+        """{"command": "override_channels", "target_id": 3, "channels": [null], "duration": 0}""",
+        """{"command": "override_channels", "target_id": 3, "channels": [1,2,3,4,5,6,7,8,null], "duration": 5000}""",
+        // a literal -2147483648 is an integer, out of range
+        """{"command": "override_channels", "target_id": 3, "channels": [-2147483648], "duration": 5000}""")
+      val out = awaitRows(5)
+      val msgs = out.filter(_.kind == "response").map(r => (r.status, r.message)).sorted
+      assert(msgs.toSeq == Seq(
+        ("error", "Channel values must be between 1000-2000 or -1 to skip"),
+        ("error", "Channel values must be integers"),
+        ("error", "Duration must be at least 1ms"),
+        ("error", "Invalid channel count. Expected 1-8, got 9"),
+        ("success", "Channels updated for target 3 with 600000ms timeout")))
+      // every rejected command left the override as the first one set it
+      out.filter(_.kind == "snapshot").foreach { o =>
+        assert(o.isOverridden && o.ovr == held.ovr && o.deadlineMs == held.deadlineMs)
+      }
+    } finally q.stop()
+  }
+
   test("packet decode: valid frames reach the engine, short packets dead-letter") {
     val good = Sinks.packFrame(Seq.fill(8)(1500))
     val bad = Array[Byte](1, 2, 3)
