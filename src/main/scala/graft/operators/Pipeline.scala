@@ -142,6 +142,14 @@ object Pipeline {
   private def docs(spark: SparkSession, dir: String): DataFrame =
     Tables.spread(Tables.documents(spark, dir))
 
+  /** The embedding corpus as `(vec_id, e: array<double>)`, spread for
+    * the per-row vector work — the input of every vector index, serve
+    * and sweep. */
+  private def corpusVectors(spark: SparkSession, dir: String): DataFrame =
+    Tables.spread(Tables.embeddings(spark, dir))
+      .select(col("vec_id"),
+        transform(col("embedding"), x => x.cast("double")).as("e"))
+
   /** Documents with exact duplicates re-inserted (doc_id % 7 == 0 →
     * second copy under doc_id + 1000000). */
   private def dupDocs(spark: SparkSession, dir: String): DataFrame = {
@@ -285,7 +293,8 @@ object Pipeline {
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
   }
 
-  /** L3 — brute-force cosine top-k: the query set (vec_id < 10) is
+  /** L3 — brute-force cosine top-k ([[cosineServe]] over [[AllPairs]]):
+    * the query set (vec_id < 10) is
     * broadcast against all vectors; ranking is the bounded top-k
     * AGGREGATOR (`functions.TopK`) — each scan partition reduces to a
     * k-element buffer map-side and only #partitions × k rows reach the
@@ -294,19 +303,10 @@ object Pipeline {
     * paid two shuffle+sort stages); ordering (cosine desc, vec_id asc)
     * is identical, asserted interchangeable in TopKSpec. */
   def q25SimilarityTopk(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.spread(Tables.embeddings(spark, dir))
-      .select(col("vec_id"), col("embedding"), vecNorm(col("embedding")).as("nrm"))
-    val q = e.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"), col("nrm").as("qn"))
-    val scored = e.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .withColumn("cosine",
-        round(vecDot(col("qe"), col("embedding")) / (col("qn") * col("nrm")), 4))
-      .select(col("query_id"), col("vec_id"), col("cosine"))
-    scored.groupBy(col("query_id"))
-      .agg(graft.functions.TopK.topK(TopK, col("vec_id"), col("cosine")).as("topk"))
-      .select(col("query_id"), posexplode(col("topk")).as(Seq("pos", "s")))
-      .select(col("query_id"), (col("pos") + 1).cast("int").as("rk"),
-        col("s.id").as("vec_id"), col("s.score").as("cosine"))
+    val e = corpusVectors(spark, dir)
+    cosineServe(e, e.filter(col("vec_id") < NumQueries)
+        .select(col("vec_id").as("query_id"), col("e").as("qe")),
+      AllPairs, 4, TopK)
       .orderBy(col("query_id"), col("rk"))
   }
 
@@ -708,8 +708,7 @@ object Pipeline {
     * k-element buffer map-side — no WindowExec, no per-query sort of
     * the whole candidate list through one task. */
   def q31IvfAnn(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.spread(Tables.embeddings(spark, dir))
-      .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("e"))
+    val e = corpusVectors(spark, dir)
     // The fine-cluster membership is the IVF index: it feeds both the
     // query-set lookup and the member lists. Real IVF systems persist
     // the index by construction; one cached copy is its in-session
@@ -725,43 +724,103 @@ object Pipeline {
     annServe(members)
   }
 
-  /** The IVF serve path shared by q31 (in-session index), q85 (index
-    * at rest) and q118 (multi-probe): candidate lists via the
-    * corpus-query cluster join, ranked by the bounded
-    * [[graft.functions.TopK]] Aggregator — one query_id exchange over
-    * O(occupancy × probes)-per-query candidate rows plus the
-    * ≤ queries·k result sort, regardless of corpus size. `probeRadius`
-    * is the serve-time nprobe knob ([[probeExpand]]): the INDEX is
-    * untouched, only the broadcast query relation widens, so a
-    * deployment retunes recall without rebuilding anything. */
-  private[operators] def annServe(members: DataFrame, probeRadius: Int = 0): DataFrame = {
-    val q = probeExpand(
-      members.filter(col("vec_id") < NumQueries)
-        .select(col("vec_id").as("query_id"), col("e").as("qe"),
-          col("cluster"), col("mask"))
-        // r22: norms hoisted below the candidate join (vecCosinePre —
-        // one norm loop per row instead of per candidate pair)
-        .withColumn("nq", vecNorm(col("qe"))),
-      probeRadius)
-    val scored = members.withColumn("ne", vecNorm(col("e")))
-      .join(broadcast(q), Seq("cluster"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cosine",
-        round(vecCosinePre(col("qe"), col("nq"), col("e"), col("ne")), 4))
-      .select(col("query_id"), col("vec_id"), col("cosine"))
-    scored.groupBy(col("query_id"))
-      .agg(graft.functions.TopK.topK(TopK, col("vec_id"), col("cosine")).as("topk"))
-      .select(col("query_id"), posexplode(col("topk")).as(Seq("pos", "s")))
-      .select(col("query_id"), (col("pos") + 1).cast("int").as("rk"),
-        col("s.id").as("vec_id"), col("s.score").as("cosine"))
-      .orderBy(col("query_id"), col("rk"))
+  // ------------------------- the vector serves: candidates → score → top-k
+
+  /** Which members a broadcast query is scored against in
+    * [[cosineServe]] and [[adcServe]]. */
+  private[operators] sealed trait Candidates
+
+  /** Every member except the query's own id: the exact scan. */
+  private[operators] case object AllPairs extends Candidates
+
+  /** Members in one of the query's probe clusters: the query relation
+    * carries `(cluster, mask)`, from the membership or from
+    * [[routeThroughIndex]], widens through [[probeExpand]] at
+    * `radius`, and equi-joins the members on `cluster`. Member queries
+    * drop their own id; an external lookup keeps it
+    * (`excludeSelf = false`), so a re-presented vector finds itself. */
+  private[operators] final case class InClusters(radius: Int,
+      excludeSelf: Boolean = true) extends Candidates
+
+  /** Members that arrive already paired: each row names the query it
+    * is a candidate for in `query_id` (q55's shortlist). */
+  private[operators] case object Listed extends Candidates
+
+  /** The candidate pairs of `members (vec_id, …)` against the broadcast
+    * `queries (query_id, …)` under `rule`. */
+  private def candidatePairs(members: DataFrame, queries: DataFrame,
+      rule: Candidates): DataFrame = rule match {
+    case AllPairs =>
+      members.join(broadcast(queries), col("vec_id") =!= col("query_id"))
+    case InClusters(radius, excludeSelf) =>
+      val pairs = members.join(broadcast(probeExpand(queries, radius)),
+        Seq("cluster"))
+      if (excludeSelf) pairs.filter(col("vec_id") =!= col("query_id"))
+      else pairs
+    case Listed =>
+      members.join(broadcast(queries), Seq("query_id"))
   }
 
-  /** Session-stable table name for the persisted IVF index of one
-    * data directory (the sf dirs produce distinct names, so a test at
-    * sf0.001 can never serve a stale sf0.01 index). */
-  private[graft] def ivfIndexTable(dir: String): String =
-    "graft_ivf_" + dir.toLowerCase.replaceAll("[^a-z0-9]+", "_")
+  /** The one rank stage of the vector serves: the `k` best
+    * `(vec_id, score)` per query by the bounded [[graft.functions.TopK]]
+    * aggregator (score desc, vec_id asc — interchangeable with the
+    * `(score desc, id asc)` `row_number` window, TopKSpec), as rows
+    * `(query_id, rk, vec_id, <score>)`. Each scan partition reduces to
+    * a k-element buffer map-side: one query_id exchange of
+    * ≤ partitions·k rows per query, no window, no candidate sort. */
+  private def topKPerQuery(scored: DataFrame, k: Int,
+      score: String): DataFrame =
+    scored.groupBy(col("query_id"))
+      .agg(graft.functions.TopK.topK(k, col("vec_id"), col(score)).as("topk"))
+      .select(col("query_id"), posexplode(col("topk")).as(Seq("pos", "s")))
+      .select(col("query_id"), (col("pos") + 1).cast("int").as("rk"),
+        col("s.id").as("vec_id"), col("s.score").as(score))
+
+  /** The cosine serve behind every cosine ranking here (q25's exact
+    * scan, the IVF serves, the hybrid dense legs, q55's re-rank, the
+    * sweeps' exact top-5): `members (vec_id, e, …)` against the
+    * broadcast `queries (query_id, qe, …)` under `rule`, scored
+    * `round(cosine, scale)` and ranked to the `k` best per query —
+    * `(query_id, rk, vec_id, cosine)`, unordered. Both sides' norms
+    * are hoisted below the candidate join ([[vecCosinePre]]: one norm
+    * loop per row instead of per pair, bit-identical scores), the
+    * query's before its probe expansion. */
+  private[operators] def cosineServe(members: DataFrame, queries: DataFrame,
+      rule: Candidates, scale: Int, k: Int): DataFrame =
+    topKPerQuery(
+      candidatePairs(members.withColumn("ne", vecNorm(col("e"))),
+        queries.withColumn("nq", vecNorm(col("qe"))), rule)
+        .withColumn("cosine",
+          round(vecCosinePre(col("qe"), col("nq"), col("e"), col("ne")), scale))
+        .select(col("query_id"), col("vec_id"), col("cosine")),
+      k, "cosine")
+
+  /** The `vec_id < 10` members of an IVF membership as the query panel
+    * `(query_id, qe, cluster, mask)` of the member-query serves. */
+  private def memberQueries(members: DataFrame): DataFrame =
+    members.filter(col("vec_id") < NumQueries)
+      .select(col("vec_id").as("query_id"), col("e").as("qe"),
+        col("cluster"), col("mask"))
+
+  /** The IVF serve of q31 (in-session index), q85 (index at rest),
+    * q118 (multi-probe) and q130 (trained router): the member panel
+    * through [[cosineServe]] over its probed clusters — one query_id
+    * exchange over O(occupancy × probes)-per-query candidate rows plus
+    * the ≤ queries·k result sort, regardless of corpus size.
+    * `probeRadius` is the serve-time nprobe knob ([[probeExpand]]):
+    * the INDEX is untouched, only the broadcast query relation widens,
+    * so a deployment retunes recall without rebuilding anything. */
+  private[operators] def annServe(members: DataFrame, probeRadius: Int = 0): DataFrame =
+    cosineServe(members, memberQueries(members), InClusters(probeRadius), 4, TopK)
+      .orderBy(col("query_id"), col("rk"))
+
+  /** Session-stable name of the banked artifact `kind` (ivf, inv, pq,
+    * ivfpq, tcivf, pqres, bpe) of one data directory: the directory
+    * lowercased, each non-alphanumeric run collapsed to `_`. The sf
+    * dirs produce distinct names, so a test at sf0.001 can never serve
+    * a stale sf0.01 index. */
+  private[graft] def bankedTable(kind: String, dir: String): String =
+    s"graft_${kind}_" + dir.toLowerCase.replaceAll("[^a-z0-9]+", "_")
       .stripPrefix("_").stripSuffix("_")
 
   /** L3 — ANN served from the index AT REST (VERDICT r11 §next-2):
@@ -897,16 +956,27 @@ object Pipeline {
   /** Build-if-absent-or-stale for the persisted IVF index of `dir` —
     * the shared ingest stage of q85 and q118 (whichever runs first in
     * a session pays the build; the build is deterministic, so order is
-    * immaterial). Returns the members table name. */
+    * immaterial). Returns the members table name. The corpus is read
+    * inside the by-name arguments, like every ensure here: a memo hit
+    * reads nothing, not even the Parquet schema. */
   private def ensureIvfIndex(spark: SparkSession, dir: String): String = {
-    val idx = ivfIndexTable(dir)
-    val e = Tables.spread(Tables.embeddings(spark, dir))
-      .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("e"))
-    ensureCurrent(spark, idx, corpusFingerprint(e)) {
-      val (members, routing) = mapSideFineClustersWithRouting(e,
-        labelCentroids(spark, dir), ClusterTargetOccupancy)
+    val idx = bankedTable("ivf", dir)
+    ensureCurrent(spark, idx, corpusFingerprint(corpusVectors(spark, dir))) {
+      val (members, routing) = mapSideFineClustersWithRouting(
+        corpusVectors(spark, dir), labelCentroids(spark, dir),
+        ClusterTargetOccupancy)
       Layout.writeIvfIndex(members, routing, idx, Layout.indexBuckets(spark))
     }
+    idx
+  }
+
+  /** Build-if-absent-or-stale for the inverted index of `dir`'s
+    * documents — the shared ingest stage of q86 and the at-rest hybrid
+    * serve. Returns the postings table name (stats at `<name>_stats`). */
+  private def ensureInvIndex(spark: SparkSession, dir: String): String = {
+    val idx = bankedTable("inv", dir)
+    ensureCurrent(spark, idx, corpusFingerprint(docs(spark, dir)))(
+      buildInvIndex(spark, idx, docs(spark, dir)))
     idx
   }
 
@@ -991,7 +1061,7 @@ object Pipeline {
   def q133HybridRrf(spark: SparkSession, dir: String): DataFrame = {
     val q = docs(spark, dir).filter(col("doc_id") < 10)
       .select(col("doc_id").as("query_id"), col("text"))
-      .join(pqVectors(spark, dir).select(col("vec_id"), col("e")),
+      .join(corpusVectors(spark, dir).select(col("vec_id"), col("e")),
         col("query_id") === col("vec_id"))
       .select(col("query_id"), col("text"), col("e").as("qe"))
     hybridRrfServe(spark, dir, q)
@@ -1023,9 +1093,9 @@ object Pipeline {
     // them (guide §2.6); both return bounded local snapshots
     val (sparse, dense) = par2(
       sparseLeg(queries, d),
-      denseLeg(queries, pqVectors(spark, dir)))
+      denseLeg(corpusVectors(spark, dir), queries, AllPairs))
     if (coverage)
-      rrfFuseCoverage(sparse, dense, pqVectors(spark, dir).select(col("vec_id")))
+      rrfFuseCoverage(sparse, dense, corpusVectors(spark, dir).select(col("vec_id")))
     else rrfFuseWeighted(sparse, dense, ws, wd)
   }
 
@@ -1273,28 +1343,21 @@ object Pipeline {
     snapshotAndFree(leg, qterms, tf)
   }
 
-  /** The dense (exact round-6 cosine) leg over `e(vec_id, e)`:
-    * `(query_id, doc_id, drk ≤ HybridLegK)` — returned as a bounded
+  /** The dense (round-6 cosine) leg: [[cosineServe]] of the
+    * `(query_id, qe)` queries against `members (vec_id, e, …)` under
+    * `rule` — every corpus vector for the exact leg (q133/q135), the
+    * probed IVF clusters for the at-rest and pruned legs (q138/q139) —
+    * as `(query_id, doc_id, drk ≤ HybridLegK)`. Returned as a bounded
     * LOCAL relation (snapshot), so q136's five re-fusions re-rank it
-    * for free instead of re-scanning the corpus per grid row. */
-  private def denseLeg(queries: DataFrame, e: DataFrame): DataFrame = {
-    // r22: norms hoisted below the cross join (vecCosinePre — each
-    // side's norm loop runs once per ROW instead of once per PAIR;
-    // bit-identical scores)
-    val q = queries.select(col("query_id"),
-      transform(col("qe"), x => x.cast("double")).as("qe"))
-      .withColumn("nq", vecNorm(col("qe")))
-    val leg = e.withColumn("ne", vecNorm(col("e"))).crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("doc_id"),
-        round(vecCosinePre(col("qe"), col("nq"), col("e"), col("ne")), 6)
-          .as("c6"))
-      .withColumn("drk", row_number().over(Window.partitionBy(col("query_id"))
-        .orderBy(col("c6").desc, col("doc_id"))))
-      .filter(col("drk") <= HybridLegK)
-      .select(col("query_id"), col("doc_id"), col("drk"))
-    snapshotAndFree(leg)
-  }
+    * for free instead of re-scanning the corpus per grid row;
+    * `residents` are released once it is taken. */
+  private def denseLeg(members: DataFrame, queries: DataFrame,
+      rule: Candidates, residents: DataFrame*): DataFrame =
+    snapshotAndFree(
+      cosineServe(members, queries, rule, 6, HybridLegK)
+        .select(col("query_id"), col("vec_id").as("doc_id"),
+          col("rk").as("drk")),
+      residents: _*)
 
   /** Run two INDEPENDENT derivations concurrently (guide §2.6:
     * actions are only sequential because the driver calls them
@@ -1325,41 +1388,6 @@ object Pipeline {
       java.util.Arrays.asList(snapshot: _*), bounded.schema)
   }
 
-  /** The dense leg served from the persisted IVF INDEX (q85/q118's
-    * members relation) at a probe radius: candidates from the
-    * cluster-bucketed join — O(occupancy × probes) per query, never a
-    * corpus scan — ranked by round-6 cosine to `(query_id, doc_id,
-    * drk ≤ HybridLegK)`. The q133 exact leg's production form: the
-    * candidate set is IVF-pruned, so a true neighbour outside the
-    * probed clusters is invisible — exactly the recall q114/q128
-    * price. */
-  private def denseLegFromIndex(members: DataFrame, routing: DataFrame,
-      queries: DataFrame, probeRadius: Int): DataFrame = {
-    // stored-routing assignment: EXTERNAL query vectors land exactly
-    // where the build would have put them (routeThroughIndex is the
-    // shared lookup/append assignment), so a corpus vector re-queried
-    // under a novel id probes its own home cluster
-    val routed = probeExpand(
-      routeThroughIndex(routing,
-        queries.select(col("query_id"),
-          transform(col("qe"), x => x.cast("double")).as("qe")), "qe")
-        // r22: query norm hoisted once per query, below the candidate
-        // join (vecCosinePre — bit-identical scores)
-        .withColumn("nq", vecNorm(col("qe"))),
-      probeRadius)
-    val leg = members.withColumn("ne", vecNorm(col("e")))
-      .join(broadcast(routed), Seq("cluster"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("doc_id"),
-        round(vecCosinePre(col("qe"), col("nq"), col("e"), col("ne")), 6)
-          .as("c6"))
-      .withColumn("drk", row_number().over(Window.partitionBy(col("query_id"))
-        .orderBy(col("c6").desc, col("doc_id"))))
-      .filter(col("drk") <= HybridLegK)
-      .select(col("query_id"), col("doc_id"), col("drk"))
-    snapshotAndFree(leg)
-  }
-
   /** The at-rest hybrid serve for ANY query relation `(query_id,
     * text, qe)` — both legs from banked indexes, both knobs
     * serve-time: the entry point a production retrieval deployment
@@ -1370,10 +1398,7 @@ object Pipeline {
       probeRadius: Int = 1, coverage: Boolean = false,
       maxScorePrune: Boolean = false): DataFrame = {
     val idx = ensureIvfIndex(spark, dir)
-    val inv = invIndexTable(dir)
-    val corpus = docs(spark, dir)
-    ensureCurrent(spark, inv, corpusFingerprint(corpus))(
-      buildInvIndex(spark, inv, corpus))
+    val inv = ensureInvIndex(spark, dir)
     // the sparse-leg plan knob defaults to the unpruned plan — see
     // sparseLegAdaptive's honest negative verdict on max-score at
     // every measured scale (PLANS §r20); either setting is
@@ -1382,8 +1407,16 @@ object Pipeline {
     val (sparse, dense) = par2(
       sparseLegAdaptive(queries, spark.table(inv),
         spark.table(inv + "_stats"), maxScorePrune),
-      denseLegFromIndex(spark.table(idx),
-        spark.table(idx + "_routing"), queries, probeRadius))
+      // the dense leg's production form: the candidate set is
+      // IVF-pruned, so a true neighbour outside the probed clusters is
+      // invisible — exactly the recall q114/q128 price. Stored-routing
+      // assignment lands EXTERNAL query vectors exactly where the
+      // build would have put them, so a corpus vector re-queried under
+      // a novel id probes its own home cluster
+      denseLeg(spark.table(idx),
+        routeThroughIndex(spark.table(idx + "_routing"),
+          queries.select(col("query_id"), col("qe")), "qe"),
+        InClusters(probeRadius)))
     // the at-rest dense corpus membership IS the index member list
     if (coverage)
       rrfFuseCoverage(sparse, dense, spark.table(idx).select(col("vec_id")))
@@ -1405,7 +1438,7 @@ object Pipeline {
   def q138HybridAtRest(spark: SparkSession, dir: String): DataFrame = {
     val queries = docs(spark, dir).filter(col("doc_id") < 10)
       .select(col("doc_id").as("query_id"), col("text"))
-      .join(pqVectors(spark, dir)
+      .join(corpusVectors(spark, dir)
         .select(col("vec_id").as("query_id"), col("e").as("qe")), "query_id")
     hybridServeAtRest(spark, dir, queries)
   }
@@ -1553,7 +1586,7 @@ object Pipeline {
     // the legs come back as bounded local snapshots (legK·|panel|);
     // r21: they are independent pipelines — overlap them (guide §2.6)
     val (sparse, dense) = par2(
-      sparseLeg(queries, dPlant), denseLeg(queries, ePlant))
+      sparseLeg(queries, dPlant), denseLeg(ePlant, queries, AllPairs))
     val fused = rrfFuse(sparse, dense)
     def evalMethod(rel: DataFrame, rankName: String, method: String,
         depth: Int): DataFrame =
@@ -1638,25 +1671,12 @@ object Pipeline {
         labelCentroids(spark, dir), ClusterTargetOccupancy)
         .persist(CacheLevel)
       members.count()
-      val q = probeExpand(
+      denseLeg(members,
         members.join(queries.select(col("query_id")),
             col("vec_id") === col("query_id"))
           .select(col("vec_id").as("query_id"), col("e").as("qe"),
-            col("cluster"), col("mask"))
-          // r22: norms hoisted below the candidate join (vecCosinePre)
-          .withColumn("nq", vecNorm(col("qe"))),
-        1)
-      val leg = members.withColumn("ne", vecNorm(col("e")))
-        .join(broadcast(q), Seq("cluster"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id").as("doc_id"),
-          round(vecCosinePre(col("qe"), col("nq"), col("e"), col("ne")), 6)
-            .as("c6"))
-        .withColumn("drk", row_number().over(Window.partitionBy(col("query_id"))
-          .orderBy(col("c6").desc, col("doc_id"))))
-        .filter(col("drk") <= HybridLegK)
-        .select(col("query_id"), col("doc_id"), col("drk"))
-      snapshotAndFree(leg, members)
+            col("cluster"), col("mask")),
+        InClusters(1), members)
     })
     val fused = rrfFuse(sparse, denseP)
     def evalMethod(rel: DataFrame, rankName: String, method: String,
@@ -1718,7 +1738,7 @@ object Pipeline {
     // them for free — the knob costs |grid| re-ranks, not serves;
     // r21: the legs overlap (guide §2.6)
     val (sparse, dense) = par2(
-      sparseLeg(queries, dPlant), denseLeg(queries, ePlant))
+      sparseLeg(queries, dPlant), denseLeg(ePlant, queries, AllPairs))
     val rows = FusionWeights.map { case (ws, wd) =>
       twinEval(queries, rrfFuseWeighted(sparse, dense, ws, wd), "rk")
         .select(lit(ws).cast("int").as("w_sparse_q"),
@@ -1750,7 +1770,7 @@ object Pipeline {
     val (queries, dPlant, ePlant) = retrievalEvalFixture(spark, dir)
     // r21: the legs overlap (guide §2.6)
     val (sparse, dense) = par2(
-      sparseLeg(queries, dPlant), denseLeg(queries, ePlant))
+      sparseLeg(queries, dPlant), denseLeg(ePlant, queries, AllPairs))
     val plain = rrfFuse(sparse, dense)
     val cov = rrfFuseCoverage(sparse, dense, ePlant.select(col("vec_id")))
     def evalMethod(rel: DataFrame, method: String): DataFrame =
@@ -2177,7 +2197,7 @@ object Pipeline {
     val (ivf, pq, inv) = (s"graft_q150_ivf_$suf", s"graft_q150_pq_$suf",
       s"graft_q150_inv_$suf")
     try {
-      val e = pqVectors(spark, dir)
+      val e = corpusVectors(spark, dir)
       // r21 (guide §2.6): the three families are INDEPENDENT
       // build-then-append pipelines over different tables — run them
       // concurrently so each family's stage tails back-fill the
@@ -2309,41 +2329,15 @@ object Pipeline {
       .orderBy(col("bands"), col("rows_per_band"), col("cap"))
   }
 
-  /** Serve EXTERNAL query vectors `(query_id, qe)` from a persisted
-    * IVF index — the production similarity-search entry point. Query
-    * routing reuses the index's own stored decisions: nearest coarse
-    * centroid by the exact build-time argmax key (the collected
-    * routing relation is ≤ 64 rows by construction), then that
-    * centroid's stored sub-bucket mask over the query's SRP bits. The
-    * members side stays a bucketed scan joined to a BROADCAST of the
-    * routed queries — no corpus exchange at any query-set size that
-    * broadcasts. */
-  def indexLookup(members: DataFrame, routing: DataFrame,
-      queries: DataFrame, k: Int = TopK): DataFrame = {
-    val routed = routeThroughIndex(routing,
-      queries.select(col("query_id"), col("qe")), "qe").drop("mask")
-      // r22: norms hoisted below the candidate join (vecCosinePre)
-      .withColumn("nq", vecNorm(col("qe")))
-    val scored = members.withColumn("ne", vecNorm(col("e")))
-      .join(broadcast(routed), Seq("cluster"))
-      .withColumn("cosine",
-        round(vecCosinePre(col("qe"), col("nq"), col("e"), col("ne")), 4))
-      .select(col("query_id"), col("vec_id"), col("cosine"))
-    scored.groupBy(col("query_id"))
-      .agg(graft.functions.TopK.topK(k, col("vec_id"), col("cosine")).as("topk"))
-      .select(col("query_id"), posexplode(col("topk")).as(Seq("pos", "s")))
-      .select(col("query_id"), (col("pos") + 1).cast("int").as("rk"),
-        col("s.id").as("vec_id"), col("s.score").as("cosine"))
-      .orderBy(col("query_id"), col("rk"))
-  }
-
-  /** Assign rows a `cluster` by the index's STORED routing decisions:
-    * nearest stored centroid via the exact build-time argmax key, that
-    * centroid's stored mask over the row's SRP bits. The shared
-    * assignment of [[indexLookup]] (queries) and [[indexAppend]] (new
-    * corpus vectors) — both must land where the build would have
-    * landed them. */
-  private def routeThroughIndex(routing: DataFrame, rows: DataFrame,
+  /** Assign rows a `cluster` (and `mask`) by the index's STORED
+    * routing decisions: nearest stored centroid via the exact
+    * build-time argmax key (the collected routing relation is ≤ 64
+    * rows by construction), that centroid's stored mask over the row's
+    * SRP bits. The shared assignment of external queries
+    * ([[cosineServe]] under [[InClusters]], the at-rest dense leg, the
+    * routed IVF-PQ serve) and [[indexAppend]] (new corpus vectors) —
+    * both must land where the build would have landed them. */
+  private[operators] def routeThroughIndex(routing: DataFrame, rows: DataFrame,
       vecCol: String): DataFrame = {
     val route = routing
       .select(col("label").cast("long"), col("cvec").cast("array<double>"),
@@ -3051,8 +3045,7 @@ object Pipeline {
     * q31: IVF prunes by PARTITIONING the corpus, quantization prunes
     * the BYTES per candidate — production systems stack both. */
   def q55QuantizedAnn(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.spread(Tables.embeddings(spark, dir))
-      .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("e"))
+    val e = corpusVectors(spark, dir)
     // the quantized index: persisted like q31's assignment — it IS the
     // structure a production system keeps resident
     val quant = e
@@ -3080,16 +3073,10 @@ object Pipeline {
       .select(col("query_id"), explode(col("short")).as("s"))
       .select(col("query_id"), col("s.id").as("vec_id"))
     // pass 2: exact re-rank of the shortlist only
-    val qe = e.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("e").as("qvec"))
-    val exact = approx.join(e, "vec_id").join(broadcast(qe), "query_id")
-      .withColumn("cosine", round(vecCosine(col("qvec"), col("e")), 4))
-      .select(col("query_id"), col("vec_id"), col("cosine"))
-    exact.groupBy(col("query_id"))
-      .agg(graft.functions.TopK.topK(TopK, col("vec_id"), col("cosine")).as("topk"))
-      .select(col("query_id"), posexplode(col("topk")).as(Seq("pos", "s")))
-      .select(col("query_id"), (col("pos") + 1).cast("int").as("rk"),
-        col("s.id").as("vec_id"), col("s.score").as("cosine"))
+    cosineServe(approx.join(e, "vec_id"),
+      e.filter(col("vec_id") < NumQueries)
+        .select(col("vec_id").as("query_id"), col("e").as("qe")),
+      Listed, 4, TopK)
       .orderBy(col("query_id"), col("rk"))
   }
 
@@ -3248,12 +3235,6 @@ object Pipeline {
       .orderBy(col("rk"))
   }
 
-  /** Session-stable table name for the persisted inverted index of one
-    * data directory (distinct per sf dir, like [[ivfIndexTable]]). */
-  private[operators] def invIndexTable(dir: String): String =
-    "graft_inv_" + dir.toLowerCase.replaceAll("[^a-z0-9]+", "_")
-      .stripPrefix("_").stripSuffix("_")
-
   /** L4 — BM25 served from the inverted index AT REST: q85's
     * index-at-rest posture applied to text retrieval. Build-if-absent
     * writes the FULL postings relation `(t, doc_id, dl, tf)` bucketed
@@ -3268,13 +3249,8 @@ object Pipeline {
     * matching-docs accumulation and the 10-row result sort. Result is
     * row-identical to q57, so the oracle twin IS q57's — the hash
     * match proves the postings round-trip loses nothing. */
-  def q86IndexedBm25(spark: SparkSession, dir: String): DataFrame = {
-    val idx = invIndexTable(dir)
-    val corpus = docs(spark, dir)
-    ensureCurrent(spark, idx, corpusFingerprint(corpus))(
-      buildInvIndex(spark, idx, corpus))
-    invIndexBm25(spark, idx)
-  }
+  def q86IndexedBm25(spark: SparkSession, dir: String): DataFrame =
+    invIndexBm25(spark, ensureInvIndex(spark, dir))
 
   /** Build the inverted index at rest over `corpus` (doc_id, text). */
   def buildInvIndex(spark: SparkSession, name: String,
@@ -3783,8 +3759,7 @@ object Pipeline {
     * [[kMeansCentroids]] centroids (k scaled to the corpus), final
     * assignment, and per-cluster membership + centroid norm. */
   def q53KmeansClusters(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.spread(Tables.embeddings(spark, dir))
-      .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("e"))
+    val e = corpusVectors(spark, dir)
     // the centroid relation feeds the final assignment AND the report
     // join; it is tiny (≤64 rows) — persist beats re-running Lloyd
     val cent = kMeansCentroids(e)
@@ -4558,10 +4533,6 @@ object Pipeline {
   def q100BpeMerges(spark: SparkSession, dir: String): DataFrame =
     spark.table(ensureBpeMerges(spark, dir)).orderBy(col("it"))
 
-  /** Managed-table name of the banked BPE merge table for `dir`. */
-  private[graft] def bpeMergesTable(dir: String): String =
-    "graft_bpe_" + dir.replaceAll("[^A-Za-z0-9]", "_")
-
   /** Build-if-absent-or-stale for the banked BPE merge table of `dir`
     * (VERDICT r17 §next-2: PQ codebooks, IVF memberships, and the
     * inverted index already bank with fingerprints; the tokenizer was
@@ -4574,11 +4545,10 @@ object Pipeline {
     * table read. Returns the table name. */
   private[graft] def ensureBpeMerges(spark: SparkSession,
       dir: String): String = {
-    val tbl = bpeMergesTable(dir)
-    val corpus = docs(spark, dir)
-    ensureCurrent(spark, tbl, corpusFingerprint(corpus)) {
-      val (rounds, _, release) = bpeLearnRounds(
-        corpus.select(col("doc_id"), split(col("text"), " ").as("toks")))
+    val tbl = bankedTable("bpe", dir)
+    ensureCurrent(spark, tbl, corpusFingerprint(docs(spark, dir))) {
+      val (rounds, _, release) = bpeLearnRounds(docs(spark, dir)
+        .select(col("doc_id"), split(col("text"), " ").as("toks")))
       release()
       Layout.writeMerges(spark, rounds, tbl)
     }
@@ -4727,9 +4697,9 @@ object Pipeline {
     * (q31/q85): route to a cluster, then ADC-rank only its inverted
     * list — IVF-PQ; the per-list machinery here is unchanged. */
   def q101PqAnn(spark: SparkSession, dir: String): DataFrame = {
-    val e = pqVectors(spark, dir)
+    val e = corpusVectors(spark, dir)
     val seeds = trainedPqSeeds(spark, dir)
-    pqFlaggedServe(pqCodes(e, seeds), e, seeds)
+    adcServe(pqCodes(e, seeds), e, pqPanel(e), AllPairs, seeds)
   }
 
   /** The trained raw-vector codebook for a corpus, built ONCE and
@@ -4755,17 +4725,11 @@ object Pipeline {
     * stale codes (ADVICE r15). Returns the code-relation table name. */
   private[graft] def ensurePqIndex(spark: SparkSession,
       dir: String): String = {
-    val idx = pqIndexTable(dir)
-    ensureCurrent(spark, idx, corpusFingerprint(pqVectors(spark, dir)))(
-      buildPqIndex(pqVectors(spark, dir), idx))
+    val idx = bankedTable("pq", dir)
+    ensureCurrent(spark, idx, corpusFingerprint(corpusVectors(spark, dir)))(
+      buildPqIndex(corpusVectors(spark, dir), idx))
     idx
   }
-
-  /** The embeddings relation in PQ shape: `(vec_id, e: array<double>)`. */
-  private def pqVectors(spark: SparkSession, dir: String): DataFrame =
-    Tables.spread(Tables.embeddings(spark, dir))
-      .select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("e"))
 
   /** Lloyd refinement rounds applied to the PQ codebook after
     * hash-threshold seeding (VERDICT r13 §next-3). Untrained seeded
@@ -4890,66 +4854,58 @@ object Pipeline {
     (enc.getField("codes"), enc.getField("qerr_micro"))
   }
 
-  /** A query relation `(qid, qe)` annotated with its ADC lookup table:
+  /** The ADC lookup-table column over a query-side vector column:
     * 4·k int64 micro-distances, s-major, codeword order = the codes'
     * index order. */
-  private[graft] def pqQueryRel(queries: DataFrame,
-      seeds: Seq[(Long, Seq[Double])]): DataFrame =
-    queries.select(col("qid"), col("qe"), pqQueryTableCol(seeds).as("tq"))
-
-  /** The ADC lookup-table column over a query-vector column `qe`. */
-  private def pqQueryTableCol(seeds: Seq[(Long, Seq[Double])]): Column = {
+  private def pqQueryTableCol(seeds: Seq[(Long, Seq[Double])],
+      v: Column): Column = {
     val cbs = pqCodebookCols(seeds)
     concat((0 until PqSubspaces).map(s =>
       transform(cbs(s), c =>
-        round(l2sq6(pqSubvec(col("qe"), s), c) * lit(1.0e6), 0).cast("long"))): _*)
+        round(l2sq6(pqSubvec(v, s), c) * lit(1.0e6), 0).cast("long"))): _*)
   }
 
-  /** ADC top-k: broadcast the table-annotated queries against the code
-    * relation, fold 4 `element_at` lookups per pair (exact int64 in
-    * any order), rank per query. */
-  private[graft] def pqAdcTop(codes: DataFrame, queryRel: DataFrame,
-      k: Int): DataFrame = {
-    val adc = codes.join(broadcast(queryRel), col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"),
-        (0 until PqSubspaces).map(s =>
-            element_at(col("tq"), col("codes")(s) + lit(s * k) + 1))
-          .reduce(_ + _).as("adc_micro"))
-    adc.withColumn("rk", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("adc_micro"), col("vec_id"))))
-      .filter(col("rk") <= TopK)
-  }
-
-  /** The q101/q103 serve tail: ADC top-5 per `%97` corpus query, each
-    * row flagged against the exact rounded-L2 top-5 (the q25
-    * brute-force shape). `codes` may come from an in-session encode
-    * (q101) or the index at rest (q103) — rows are identical. */
-  private def pqFlaggedServe(codes: DataFrame, e: DataFrame,
-      seeds: Seq[(Long, Seq[Double])]): DataFrame = {
-    val queries = pqQueryRel(
-      e.filter(col("vec_id") % 97 === 0)
-        .select(col("vec_id").as("qid"), col("e").as("qe")), seeds)
-    val top = pqAdcTop(codes.select(col("vec_id"), col("codes")),
-      queries, seeds.length)
-    val byQ = Window.partitionBy(col("qid"))
-    val exact = e.join(broadcast(queries.select(col("qid"), col("qe"))),
-        col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"), l2sq6(col("e"), col("qe")).as("d6"))
-      .withColumn("xr", row_number().over(byQ.orderBy(col("d6"), col("vec_id"))))
-      .filter(col("xr") <= TopK)
-      .select(col("qid"), col("vec_id"), lit(true).as("in_exact_top5"))
-    top.join(exact, Seq("qid", "vec_id"), "left")
-      .select(col("qid"), col("rk").cast("int").as("rk"), col("vec_id"),
-        col("adc_micro"),
+  /** The ADC serve behind every PQ query (q101/q103 over all pairs,
+    * the IVF-PQ family over probed clusters): each query's lookup
+    * table is built once from `basis` (the raw `qe`, or q109's
+    * residual) BEFORE any probe expansion, `codes (vec_id, codes, …)`
+    * is ranked by the 4-lookup integer ADC sum (exact int64 in any
+    * order), and each of the [[TopK]] rows is flagged `in_exact_top5`
+    * against the exact rounded-L2 top-5 of `vectors (vec_id, e, …)`
+    * over the SAME candidate rule — a left join of the two rankings.
+    * Both rank stages are [[topKPerQuery]] on the negated distance
+    * (ascending distance, then vec_id). Output `(qid, rk, vec_id,
+    * adc_micro, in_exact_top5)`, ordered. */
+  private def adcServe(codes: DataFrame, vectors: DataFrame,
+      queries: DataFrame, rule: Candidates,
+      seeds: Seq[(Long, Seq[Double])], basis: Column = col("qe")): DataFrame = {
+    val q = queries.withColumn("tq", pqQueryTableCol(seeds, basis))
+    val adcMicro = (0 until PqSubspaces).map(s =>
+        element_at(col("tq"), col("codes")(s) + lit(s * seeds.length) + 1))
+      .reduce(_ + _)
+    val adc = candidatePairs(codes, q, rule)
+      .select(col("query_id"), col("vec_id"),
+        (-adcMicro).cast("double").as("neg_adc"))
+    val exact = candidatePairs(vectors, q, rule)
+      .select(col("query_id"), col("vec_id"),
+        (-l2sq6(col("e"), col("qe"))).as("neg_d6"))
+    topKPerQuery(adc, TopK, "neg_adc")
+      .join(topKPerQuery(exact, TopK, "neg_d6")
+          .select(col("query_id"), col("vec_id"),
+            lit(true).as("in_exact_top5")),
+        Seq("query_id", "vec_id"), "left")
+      .select(col("query_id").as("qid"), col("rk"), col("vec_id"),
+        (-col("neg_adc")).cast("long").as("adc_micro"),
         coalesce(col("in_exact_top5"), lit(false)).as("in_exact_top5"))
       .orderBy(col("qid"), col("rk"))
   }
 
-  // -------------------------------------- q103: PQ index AT REST
+  /** The q101/q103 query panel: every `%97` corpus vector. */
+  private def pqPanel(e: DataFrame): DataFrame =
+    e.filter(col("vec_id") % 97 === 0)
+      .select(col("vec_id").as("query_id"), col("e").as("qe"))
 
-  /** Managed-table name for the q103 PQ index, keyed by corpus dir. */
-  private[graft] def pqIndexTable(dir: String): String =
-    "graft_pq_" + dir.replaceAll("[^A-Za-z0-9]", "_")
+  // -------------------------------------- q103: PQ index AT REST
 
   /** Build a PQ index AT REST from `(vec_id, e)` vectors: hash-seeded
     * codebook, map-side encode, then [[Layout.writePqIndex]]. The
@@ -5035,20 +4991,12 @@ object Pipeline {
     * once per corpus version; queries pay table lookups. */
   def q103IndexedPqAnn(spark: SparkSession, dir: String): DataFrame = {
     val idx = ensurePqIndex(spark, dir)
-    pqFlaggedServe(spark.table(idx), pqVectors(spark, dir),
+    val e = corpusVectors(spark, dir)
+    adcServe(spark.table(idx), e, pqPanel(e), AllPairs,
       storedPqSeeds(spark, idx))
   }
 
   // ---------------------------------------- q107: IVF-PQ composed
-
-  /** Managed-table name for the COMPOSED IVF-PQ index of a corpus dir
-    * (VERDICT r18 §next-2): fine-cluster membership + raw vectors +
-    * 4-int PQ codes as ONE cluster-bucketed relation, routing sidecar
-    * at `<name>_routing` (the [[Layout.writeIvfIndex]] layout with a
-    * `codes` column). */
-  private[graft] def ivfPqIndexTable(dir: String): String =
-    "graft_ivfpq_" + dir.toLowerCase.replaceAll("[^a-z0-9]+", "_")
-      .stripPrefix("_").stripSuffix("_")
 
   /** Build-if-absent-or-stale for the COMPOSED IVF-PQ index (VERDICT
     * r18 §next-2 — q107/q120/q121 used to re-derive membership AND
@@ -5066,9 +5014,9 @@ object Pipeline {
     * like every banked artifact. */
   private[graft] def ensureIvfPqIndex(spark: SparkSession,
       dir: String): String = {
-    val idx = ivfPqIndexTable(dir)
-    ensureCurrent(spark, idx, corpusFingerprint(pqVectors(spark, dir))) {
-      val e = pqVectors(spark, dir)
+    val idx = bankedTable("ivfpq", dir)
+    ensureCurrent(spark, idx, corpusFingerprint(corpusVectors(spark, dir))) {
+      val e = corpusVectors(spark, dir)
       val seeds = trainedPqSeeds(spark, dir)
       val (codesCol, _) = pqCodeColumns(seeds)
       val (members, routing) = mapSideFineClustersWithRouting(e,
@@ -5078,12 +5026,6 @@ object Pipeline {
     }
     idx
   }
-
-  /** Managed-table name for the TRAINED-COARSE IVF index (q130's
-    * router at rest). */
-  private[graft] def trainedIvfIndexTable(dir: String): String =
-    "graft_tcivf_" + dir.toLowerCase.replaceAll("[^a-z0-9]+", "_")
-      .stripPrefix("_").stripSuffix("_")
 
   /** Build-if-absent-or-stale for the TRAINED-COARSE IVF index
     * (VERDICT r18 §next-2's q130 half: the Lloyd-trained membership —
@@ -5096,9 +5038,9 @@ object Pipeline {
     * q130 scaladoc promised). */
   private[graft] def ensureTrainedIvfIndex(spark: SparkSession,
       dir: String): String = {
-    val idx = trainedIvfIndexTable(dir)
-    ensureCurrent(spark, idx, corpusFingerprint(pqVectors(spark, dir))) {
-      val e = pqVectors(spark, dir)
+    val idx = bankedTable("tcivf", dir)
+    ensureCurrent(spark, idx, corpusFingerprint(corpusVectors(spark, dir))) {
+      val e = corpusVectors(spark, dir)
       val (members, routing) = mapSideFineClustersWithRouting(e,
         kMeansCentroids(e), ClusterTargetOccupancy)
       Layout.writeIvfIndex(members, routing, idx, Layout.indexBuckets(spark))
@@ -5132,48 +5074,8 @@ object Pipeline {
     * candidate rows. Warm serve pays table lookups, never a build. */
   def q107IvfPqAnn(spark: SparkSession, dir: String): DataFrame = {
     val members = spark.table(ensureIvfPqIndex(spark, dir))
-    val seeds = trainedPqSeeds(spark, dir)
-    ivfPqServe(members.filter(col("vec_id") < NumQueries)
-        .select(col("vec_id").as("qid"), col("e").as("qe"), col("cluster"),
-          pqQueryTableCol(seeds).as("tq")),
-      members, seeds.length)
-  }
-
-  /** The composed IVF-PQ serve tail shared by q107 (member queries),
-    * q120 (probe-expanded queries), and q145 (routing-assigned
-    * external queries): ADC-rank the banked codes of each query's
-    * probed cluster(s) against its broadcast lookup table, flag
-    * against the exact rounded-L2 top-5 of the SAME candidate set.
-    * `queries` carries `(qid, qe, cluster, tq)` — one row per (query,
-    * probe); `members` is the banked `(vec_id, e, cluster, codes)`
-    * relation. */
-  private def ivfPqServe(queries: DataFrame, members: DataFrame,
-      k: Int): DataFrame = {
-    val byQ = Window.partitionBy(col("qid"))
-    val top = members.select(col("vec_id"), col("cluster"), col("codes"))
-      .join(broadcast(queries.select(col("qid"), col("tq"), col("cluster"))),
-        Seq("cluster"))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"),
-        (0 until PqSubspaces).map(s =>
-            element_at(col("tq"), col("codes")(s) + lit(s * k) + 1))
-          .reduce(_ + _).as("adc_micro"))
-      .withColumn("rk", row_number().over(
-        byQ.orderBy(col("adc_micro"), col("vec_id"))))
-      .filter(col("rk") <= TopK)
-    val exact = members.select(col("vec_id"), col("e"), col("cluster"))
-      .join(broadcast(queries.select(col("qid"), col("qe"), col("cluster"))),
-        Seq("cluster"))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"), l2sq6(col("e"), col("qe")).as("d6"))
-      .withColumn("xr", row_number().over(byQ.orderBy(col("d6"), col("vec_id"))))
-      .filter(col("xr") <= TopK)
-      .select(col("qid"), col("vec_id"), lit(true).as("in_exact_top5"))
-    top.join(exact, Seq("qid", "vec_id"), "left")
-      .select(col("qid"), col("rk").cast("int").as("rk"), col("vec_id"),
-        col("adc_micro"),
-        coalesce(col("in_exact_top5"), lit(false)).as("in_exact_top5"))
-      .orderBy(col("qid"), col("rk"))
+    adcServe(members, members, memberQueries(members), InClusters(0),
+      trainedPqSeeds(spark, dir))
   }
 
   /** L3 — the composed index serving EXTERNAL queries (q145): q107's
@@ -5182,7 +5084,7 @@ object Pipeline {
     * instead of looked up in the membership, which is how a production
     * deployment serves vectors that are NOT corpus members. For member
     * vectors the routing assignment equals the build assignment (the
-    * denseLegFromIndex contract), so the result is row-identical to
+    * at-rest dense leg's contract), so the result is row-identical to
     * q107 and the oracle twin IS q107's — the hash match certifies the
     * whole banked round-trip (membership + codes + codebook + routing)
     * end to end. Serve cost: one ≤64-row routing collect + q107's
@@ -5221,17 +5123,14 @@ object Pipeline {
       queries: DataFrame, probeRadius: Int = 0): DataFrame = {
     val idx = ensureIvfPqIndex(spark, dir)
     val members = spark.table(idx)
-    val seeds = trainedPqSeeds(spark, dir)
-    // the ADC table derives from the RAW query vector — once per
-    // query, before the expansion, then carried per probe row (the
-    // q120 discipline; the q107 codebook quantizes raw vectors, one
-    // global basis, so the table is valid across ANY probed cluster)
-    val routed = routeThroughIndex(spark.table(idx + "_routing"),
-        queries.select(col("query_id").as("qid"),
-          transform(col("qe"), x => x.cast("double")).as("qe")), "qe")
-      .select(col("qid"), col("qe"), col("cluster"), col("mask"),
-        pqQueryTableCol(seeds).as("tq"))
-    ivfPqServe(probeExpand(routed, probeRadius), members, seeds.length)
+    // the ADC table derives from the RAW query vector (the q107
+    // codebook quantizes raw vectors, one global basis, so the table
+    // is valid across ANY probed cluster)
+    adcServe(members, members,
+      routeThroughIndex(spark.table(idx + "_routing"),
+        queries.select(col("query_id"),
+          transform(col("qe"), x => x.cast("double")).as("qe")), "qe"),
+      InClusters(probeRadius), trainedPqSeeds(spark, dir))
   }
 
   /** L3 — the composed index serving external queries at nprobe > 1
@@ -5284,24 +5183,11 @@ object Pipeline {
     * nothing: the probe expansion is a Generate on ≤10 rows. */
   def q120MultiProbeIvfPq(spark: SparkSession, dir: String): DataFrame = {
     val members = spark.table(ensureIvfPqIndex(spark, dir))
-    val seeds = trainedPqSeeds(spark, dir)
-    // the ADC table derives from the RAW query vector — once per
-    // query, before the expansion, then carried per probe row
-    val probed = probeExpand(
-      members.filter(col("vec_id") < NumQueries)
-        .select(col("vec_id").as("qid"), col("e").as("qe"),
-          pqQueryTableCol(seeds).as("tq"), col("cluster"), col("mask")),
-      1)
-    ivfPqServe(probed, members, seeds.length)
+    adcServe(members, members, memberQueries(members), InClusters(1),
+      trainedPqSeeds(spark, dir))
   }
 
   // ------------------------------- q109: residual IVF-PQ composed
-
-  /** Managed-table base name for the q109 residual codebook (the
-    * codebook lands at `<base>_codebook`, the [[storedPqSeeds]]
-    * contract). */
-  private[graft] def pqResidualCodebookTable(dir: String): String =
-    "graft_pqres_" + dir.replaceAll("[^A-Za-z0-9]", "_")
 
   /** The trained RESIDUAL codebook for a corpus — [[trainedPqSeeds]]'
     * train-once discipline for q109's basis: residuals depend on the
@@ -5315,13 +5201,15 @@ object Pipeline {
     * input is only evaluated on a build. */
   private[graft] def trainedResidualPqSeeds(spark: SparkSession,
       dir: String, residuals: => DataFrame): Seq[(Long, Seq[Double])] = {
-    val base = pqResidualCodebookTable(dir)
+    // the codebook lands at `<base>_codebook`, the [[storedPqSeeds]]
+    // contract
+    val base = bankedTable("pqres", dir)
     // the staleness key is the SOURCE corpus: residuals derive
     // deterministically from it (embeddings → centroids → r), so a
     // matching source fingerprint proves the banked codewords current
     // without forcing the residual lineage on a served path
     ensureCurrent(spark, base + "_codebook",
-        corpusFingerprint(pqVectors(spark, dir))) {
+        corpusFingerprint(corpusVectors(spark, dir))) {
       import spark.implicits._
       Layout.writeCodebook(pqSeeds(residuals).toDF("label", "cvec"),
         base + "_codebook")
@@ -5352,8 +5240,8 @@ object Pipeline {
     * against the ≤64-row routing sidecar to form residuals — map-side,
     * over the bucketed scan. */
   def q109IvfPqResidual(spark: SparkSession, dir: String): DataFrame = {
-    val (coded, queries, k) = residualServeRelations(spark, dir)
-    ivfPqServe(queries.drop("mask"), coded, k)
+    val (coded, queries, seeds) = residualServeRelations(spark, dir)
+    adcServe(coded, coded, queries, InClusters(0), seeds, col("rq"))
   }
 
   /** The residual serve's two relations, derived from the BANKED
@@ -5362,12 +5250,13 @@ object Pipeline {
     * in-plan, against the banked residual codebook): `coded` =
     * `(vec_id, e RAW, cluster, codes RESIDUAL)` — ADC ranks residual
     * codes, the exact flag ranks raw vectors (basis-invariant within
-    * a cell: ‖v−q‖ = ‖r_v−r_q‖) — and `queries` = `(qid, qe RAW,
-    * cluster, mask, tq RESIDUAL)` for the ≤10-query panel. The
-    * centroid relation is the index's own `_routing` sidecar (the
-    * collected [[labelCentroids]] rows at rest — no recompute). */
-  private def residualServeRelations(spark: SparkSession,
-      dir: String): (DataFrame, DataFrame, Int) = {
+    * a cell: ‖v−q‖ = ‖r_v−r_q‖) — and `queries` = `(query_id, qe RAW,
+    * rq RESIDUAL, cluster, mask)` for the ≤10-query panel, plus the
+    * residual codebook the lookup tables derive from. The centroid
+    * relation is the index's own `_routing` sidecar (the collected
+    * [[labelCentroids]] rows at rest — no recompute). */
+  private def residualServeRelations(spark: SparkSession, dir: String)
+      : (DataFrame, DataFrame, Seq[(Long, Seq[Double])]) = {
     val idx = ensureIvfPqIndex(spark, dir)
     val members = spark.table(idx)
     val cents = spark.table(idx + "_routing")
@@ -5380,21 +5269,18 @@ object Pipeline {
     val seeds = trainedResidualPqSeeds(spark, dir,
       withRes.select(col("vec_id"), col("r").as("e")))
     val (codesCol, _) = pqCodeColumns(seeds)
-    // the rename dance binds the encode/table expressions (which read
-    // `e`/`qe`) to the RESIDUAL while the output keeps the raw vector
-    // under the serve tail's expected name
+    // the rename dance binds the encode expression (which reads `e`)
+    // to the RESIDUAL while the output keeps the raw vector under the
+    // serve's expected name
     val coded = withRes
       .select(col("vec_id"), col("cluster"), col("e").as("raw"),
         col("r").as("e"))
       .withColumn("codes", codesCol)
       .select(col("vec_id"), col("cluster"), col("raw").as("e"), col("codes"))
     val queries = withRes.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("qid"), col("e").as("rawq"),
-        col("r").as("qe"), col("cluster"), col("mask"))
-      .withColumn("tq", pqQueryTableCol(seeds))
-      .select(col("qid"), col("rawq").as("qe"), col("cluster"),
-        col("mask"), col("tq"))
-    (coded, queries, seeds.length)
+      .select(col("vec_id").as("query_id"), col("e").as("qe"),
+        col("r").as("rq"), col("cluster"), col("mask"))
+    (coded, queries, seeds)
   }
 
   /** L3 — MULTI-PROBE RESIDUAL IVF-PQ (q109 at nprobe > 1): the
@@ -5418,8 +5304,8 @@ object Pipeline {
     * expansion — valid across every probed sub-bucket (same coarse
     * cell). */
   def q121MultiProbeResidual(spark: SparkSession, dir: String): DataFrame = {
-    val (coded, queries, k) = residualServeRelations(spark, dir)
-    ivfPqServe(probeExpand(queries, 1), coded, k)
+    val (coded, queries, seeds) = residualServeRelations(spark, dir)
+    adcServe(coded, coded, queries, InClusters(1), seeds, col("rq"))
   }
 
   // ------------------------------------ q106: corpus snapshot diff
@@ -6137,7 +6023,7 @@ object Pipeline {
     * audit a deployment runs on SAMPLED queries per corpus version.
     * The report is two fixed-width rows. */
   def q114AnnRecallSweep(spark: SparkSession, dir: String): DataFrame =
-    annRecallSweep(pqVectors(spark, dir), labelCentroids(spark, dir))
+    annRecallSweep(corpusVectors(spark, dir), labelCentroids(spark, dir))
 
   /** The recall/efficiency sweep HARNESS q114 and q119 share: given a
     * `(vec_id, e)` corpus and a coarse centroid relation, measure
@@ -6154,26 +6040,13 @@ object Pipeline {
     val members = mapSideFineClusters(e, cent, ClusterTargetOccupancy)
       .persist(CacheLevel)
     members.count()
-    val queries = members.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("qid"), col("e").as("qe"),
-        col("cluster"), col("mask"))
-      // r22: query norm hoisted once, below every scoring join here
-      // (the exact corpus scan AND each radius's candidate join)
-      .withColumn("nq", vecNorm(col("qe")))
-    val byQ = Window.partitionBy(col("qid"))
-    // exact full-corpus top-5 per query: the q31 ranking discipline
-    // (round-4 cosine desc, vec_id tiebreak — unique, both engines
-    // pick one winner)
-    val exact = e.withColumn("ne", vecNorm(col("e")))
-      .join(broadcast(queries.select(col("qid"), col("qe"), col("nq"))),
-        col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"),
-        round(vecCosinePre(col("qe"), col("nq"), col("e"), col("ne")), 4)
-          .as("c4"))
-      .withColumn("xr",
-        row_number().over(byQ.orderBy(col("c4").desc, col("vec_id"))))
-      .filter(col("xr") <= TopK)
-      .select(col("qid"), col("vec_id"))
+    val queries = memberQueries(members)
+    // exact full-corpus top-5 per query: q25's exact scan (round-4
+    // cosine desc, vec_id tiebreak — unique, both engines pick one
+    // winner)
+    val exact = cosineServe(e, queries.select(col("query_id"), col("qe")),
+        AllPairs, 4, TopK)
+      .select(col("query_id"), col("vec_id"))
       // EVERY radius scores against it — persist the ≤ queries·k rows
       // or the harness corpus scan runs once per sweep branch
       .persist(NarrowCacheLevel)
@@ -6182,28 +6055,30 @@ object Pipeline {
     // so this sweep measures byte-for-byte the candidate sets the
     // q118/q120/q121 serve paths scan at each radius. r21: ALL radii
     // ride one tagged query relation through ONE candidate join, one
-    // (radius, qid) window, and one aggregation — the per-radius
+    // (radius, query_id) window, and one aggregation — the per-radius
     // union used to recompute the candidate join twice per radius
     // (n_candidates + top-k branches) inside a single wide job.
     // Per-radius candidate sets, ranks, and counts are unchanged
-    // (exact is unique per (qid, vec_id), so the left join is
+    // (exact is unique per (query_id, vec_id), so the left join is
     // multiplicity-1 and the conditional count equals the former
     // top-k semi-join count).
     val nQueries = queries.count()
-    val tagged = radii.map(r => probeExpand(queries, r)
-      .select(lit(r).cast("int").as("radius"), col("qid"), col("qe"),
+    // the query norm is hoisted once per query, before the expansion
+    val tagged = radii.map(r =>
+        probeExpand(queries.withColumn("nq", vecNorm(col("qe"))), r)
+      .select(lit(r).cast("int").as("radius"), col("query_id"), col("qe"),
         col("nq"), col("cluster"))).reduce(_ unionByName _)
-    val byRQ = Window.partitionBy(col("radius"), col("qid"))
+    val byRQ = Window.partitionBy(col("radius"), col("query_id"))
     val agg = members.select(col("vec_id"), col("e"),
         vecNorm(col("e")).as("ne"), col("cluster"))
       .join(broadcast(tagged), Seq("cluster"))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("radius"), col("qid"), col("vec_id"),
+      .filter(col("vec_id") =!= col("query_id"))
+      .select(col("radius"), col("query_id"), col("vec_id"),
         round(vecCosinePre(col("qe"), col("nq"), col("e"), col("ne")), 4)
           .as("c4"))
       .withColumn("rk",
         row_number().over(byRQ.orderBy(col("c4").desc, col("vec_id"))))
-      .join(exact.withColumn("hit", lit(1)), Seq("qid", "vec_id"), "left")
+      .join(exact.withColumn("hit", lit(1)), Seq("query_id", "vec_id"), "left")
       .groupBy(col("radius"))
       .agg(count(lit(1)).as("n_cand"),
         sum(when(col("rk") <= TopK && col("hit").isNotNull, 1L)
@@ -6247,7 +6122,7 @@ object Pipeline {
     * kMeansCentroids' bounded O(n·k·d) map-side Lloyd pass (≤64-row
     * broadcast, one corpus scan per iteration). */
   def q119TrainedCoarseSweep(spark: SparkSession, dir: String): DataFrame = {
-    val e = pqVectors(spark, dir)
+    val e = corpusVectors(spark, dir)
     annRecallSweep(e, kMeansCentroids(e))
   }
 
@@ -6265,7 +6140,7 @@ object Pipeline {
     * bound stays O(occupancy × probes) = O(32 · (1 + b + b²/2)) per
     * query at any corpus size, query side always broadcast. */
   def q128RecallSweepR2(spark: SparkSession, dir: String): DataFrame = {
-    val e = pqVectors(spark, dir)
+    val e = corpusVectors(spark, dir)
     annRecallSweep(e, labelCentroids(spark, dir), Seq(0, 1, 2))
   }
 

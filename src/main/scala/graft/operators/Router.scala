@@ -78,12 +78,25 @@ object Router {
 
   /** The full router as an oracle-checkable rollup: every response class
     * with its verbatim message, counted. */
-  def q32CommandRouter(spark: SparkSession, dir: String): DataFrame = {
+  def q32CommandRouter(spark: SparkSession, dir: String): DataFrame =
+    classify(rawLines(spark, dir))
+      .groupBy(col("rtype"), col("status"), col("message"))
+      .agg(count(lit(1)).as("n"))
+      .orderBy(col("rtype"), col("status"), col("message"))
+
+  /** The handler's response to every non-empty command line of
+    * `lines` (a `line` column) against the 8-target registry: one row
+    * `(line, rtype, status, message)` per line, in the reference's
+    * cascade order. A `null` channel element is not an integer
+    * (`main.cpp:192-197`), as in [[graft.streaming.Engine]]'s
+    * validation. */
+  private[operators] def classify(lines: DataFrame): DataFrame = {
+    val spark = lines.sparkSession
     // PERMISSIVE from_json yields a struct of nulls for malformed input;
     // the corrupt-record column is the real dead-letter discriminator.
     val schema = "command STRING, target_id STRING, channels ARRAY<STRING>, " +
       "duration STRING, _corrupt_record STRING"
-    val parsed = rawLines(spark, dir)
+    val parsed = lines
       .filter(length(trim(col("line"))) > 0) // empty-line drop (:308)
       .withColumn("p", from_json(col("line"),
         org.apache.spark.sql.types.StructType.fromDDL(schema),
@@ -94,7 +107,10 @@ object Router {
         toIntSafe(col("p.target_id")).cast("long") === col("reg_id"), "left")
     val n = size(col("p.channels"))
     val dur = toIntSafe(col("p.duration"))
-    val nonInt = exists(col("p.channels"), c => !c.rlike("^-?[0-9]+$"))
+    // a null element is not an integer; without the explicit test the
+    // predicate is NULL there and `exists` never yields true
+    val nonInt = exists(col("p.channels"),
+      c => c.isNull || !c.rlike("^-?[0-9]+$"))
     val outOfRange = exists(col("p.channels"),
       c => toIntSafe(c) =!= -1 && (toIntSafe(c) < 1000 || toIntSafe(c) > 2000))
     def out(rtype: String, status: String, message: Column): Column =
@@ -126,12 +142,9 @@ object Router {
           out("response", "success",
             concat(lit("Channels updated for target "), col("p.target_id"),
               lit(" with "), col("p.duration"), lit("ms timeout"))))
-    joined.select(col("event_id"), classified.as("c"))
-      .select(col("c.rtype").as("rtype"), col("c.status").as("status"),
-        col("c.message").as("message"))
-      .groupBy(col("rtype"), col("status"), col("message"))
-      .agg(count(lit(1)).as("n"))
-      .orderBy(col("rtype"), col("status"), col("message"))
+    joined.select(col("line"), classified.as("c"))
+      .select(col("line"), col("c.rtype").as("rtype"),
+        col("c.status").as("status"), col("c.message").as("message"))
   }
 
   /** DuckDB twin — identical corpus synthesis and classification via the
@@ -184,7 +197,7 @@ object Router {
        |      ('response', 'error', 'Invalid channel count. Expected 1-8, got ' || CAST(len(chans) AS VARCHAR))
        |    WHEN TRY_CAST(duration AS INT) IS NULL OR TRY_CAST(duration AS INT) < 1 THEN
        |      ('response', 'error', 'Duration must be at least 1ms')
-       |    WHEN len(list_filter(chans, c -> NOT regexp_full_match(c, '-?[0-9]+'))) > 0 THEN
+       |    WHEN len(list_filter(chans, c -> c IS NULL OR NOT regexp_full_match(c, '-?[0-9]+'))) > 0 THEN
        |      ('response', 'error', 'Channel values must be integers')
        |    WHEN len(list_filter(chans, c -> TRY_CAST(c AS INT) <> -1
        |      AND (TRY_CAST(c AS INT) < 1000 OR TRY_CAST(c AS INT) > 2000))) > 0 THEN

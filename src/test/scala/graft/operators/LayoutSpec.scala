@@ -213,7 +213,7 @@ class LayoutSpec extends SparkSpec {
     val atRest = Pipeline.q85IndexedAnn(spark, sfDir).collect().toSeq
     val inSession = Pipeline.q31IvfAnn(spark, sfDir).collect().toSeq
     assert(atRest == inSession, "index round-trip changed the ANN answer")
-    val members = spark.table(Pipeline.ivfIndexTable(sfDir))
+    val members = spark.table(Pipeline.bankedTable("ivf", sfDir))
     // the property the bucketed write bought, on the READ path: both
     // an aggregation and a self-join on the cluster key plan with
     // zero shuffle exchanges — at 100 TB the serve path never moves
@@ -236,7 +236,7 @@ class LayoutSpec extends SparkSpec {
     // corpus regeneration)
     val dir = java.nio.file.Files.createTempDirectory("graft-fpr").toString
     Tables.embeddings(spark, sfDir).write.parquet(dir + "/embeddings.parquet")
-    val idx = Pipeline.pqIndexTable(dir)
+    val idx = Pipeline.bankedTable("pq", dir)
     def codebookFiles(): Set[String] = {
       val p = new org.apache.hadoop.fs.Path(
         spark.conf.get("spark.sql.warehouse.dir"),
@@ -284,7 +284,7 @@ class LayoutSpec extends SparkSpec {
     // discipline — the shared per-SF table must stay pristine)
     val dir = java.nio.file.Files.createTempDirectory("graft-bpe").toString
     Tables.documents(spark, sfDir).write.parquet(dir + "/documents.parquet")
-    val tbl = Pipeline.bpeMergesTable(dir)
+    val tbl = Pipeline.bankedTable("bpe", dir)
     def mergeFiles(): Set[String] = {
       val p = new org.apache.hadoop.fs.Path(
         spark.conf.get("spark.sql.warehouse.dir"), tbl.toLowerCase)
@@ -327,7 +327,7 @@ class LayoutSpec extends SparkSpec {
 
   test("indexAppend: new vectors land in their routed buckets, serve finds them, layout invariant holds") {
     import spark.implicits._
-    val shared = Pipeline.ivfIndexTable(sfDir)
+    val shared = Pipeline.bankedTable("ivf", sfDir)
     if (!spark.catalog.tableExists(shared))
       Pipeline.q85IndexedAnn(spark, sfDir).collect()
     // append mutates — work on a private copy so the shared per-SF
@@ -359,8 +359,9 @@ class LayoutSpec extends SparkSpec {
     val queries = sources.toSeq
       .map(r => (r.getLong(0), r.getSeq[Double](1)))
       .toDF("query_id", "qe")
-    val hits = Pipeline.indexLookup(after,
-        spark.table(idx + "_routing"), queries, k = 3)
+    val hits = Pipeline.cosineServe(after,
+        Pipeline.routeThroughIndex(spark.table(idx + "_routing"), queries, "qe"),
+        Pipeline.InClusters(0, excludeSelf = false), 4, 3)
       .collect().groupBy(_.getLong(0))
     sources.foreach { r =>
       val twins = hits(r.getLong(0)).filter(h =>
@@ -402,8 +403,8 @@ class LayoutSpec extends SparkSpec {
       "flooded cluster's average occupancy must triple")
   }
 
-  test("indexLookup routes external query vectors to their build-time clusters") {
-    val idx = Pipeline.ivfIndexTable(sfDir)
+  test("external lookup routes query vectors to their build-time clusters") {
+    val idx = Pipeline.bankedTable("ivf", sfDir)
     if (!spark.catalog.tableExists(idx))
       Pipeline.q85IndexedAnn(spark, sfDir).collect()
     val (members, routing) = Layout.readIvfIndex(spark, idx)
@@ -414,7 +415,9 @@ class LayoutSpec extends SparkSpec {
     // cluster the build assigned the vector to
     val queries = members.filter(col("vec_id") % 97 === 3).limit(5)
       .select(col("vec_id").as("query_id"), col("e").as("qe"))
-    val got = Pipeline.indexLookup(members, routing, queries, k = 1).collect()
+    val got = Pipeline.cosineServe(members,
+        Pipeline.routeThroughIndex(routing, queries, "qe"),
+        Pipeline.InClusters(0, excludeSelf = false), 4, 1).collect()
     assert(got.length == queries.count(), "a query missed its own cluster")
     got.foreach { r =>
       assert(r.getAs[Long]("vec_id") == r.getAs[Long]("query_id"),
@@ -431,7 +434,7 @@ class LayoutSpec extends SparkSpec {
     val atRest = Pipeline.q86IndexedBm25(spark, sfDir).collect().toSeq
     val inSession = Pipeline.q57Bm25(spark, sfDir).collect().toSeq
     assert(atRest == inSession, "index round-trip changed the BM25 answer")
-    val postings = spark.table(Pipeline.invIndexTable(sfDir))
+    val postings = spark.table(Pipeline.bankedTable("inv", sfDir))
     // the property the term-bucketed write bought on the READ path:
     // per-term aggregation (document frequency) plans with zero
     // shuffle exchanges
@@ -487,11 +490,11 @@ class LayoutSpec extends SparkSpec {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val ivf = Pipeline.ivfIndexTable(sfDir)
+    val ivf = Pipeline.bankedTable("ivf", sfDir)
     val serve = Pipeline.q85IndexedAnn(spark, sfDir)
     Pipeline.q86IndexedBm25(spark, sfDir).collect()
     assert(Layout.bucketCount(spark, ivf) == n, "IVF membership bucket count")
-    assert(Layout.bucketCount(spark, Pipeline.invIndexTable(sfDir)) == n,
+    assert(Layout.bucketCount(spark, Pipeline.bankedTable("inv", sfDir)) == n,
       "inverted postings bucket count")
     // the serve keeps its membership scans bucketed, so each scan's
     // task count is the bucket count
@@ -510,7 +513,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("invIndexAppend into an index built at another bucket count keeps the table's count") {
-    val shared = Pipeline.invIndexTable(sfDir)
+    val shared = Pipeline.bankedTable("inv", sfDir)
     if (!spark.catalog.tableExists(shared))
       Pipeline.q86IndexedBm25(spark, sfDir).collect()
     // append mutates — private copy at 32 buckets, which differs from
@@ -537,8 +540,8 @@ class LayoutSpec extends SparkSpec {
     // the compression contract: every stored row is k-bounded small
     // ints — the 128x-smaller relation the serve scan actually reads
     val k = Pipeline.storedPqSeeds(spark,
-      Pipeline.pqIndexTable(sfDir)).length
-    val codes = spark.table(Pipeline.pqIndexTable(sfDir)).collect()
+      Pipeline.bankedTable("pq", sfDir)).length
+    val codes = spark.table(Pipeline.bankedTable("pq", sfDir)).collect()
     assert(codes.nonEmpty)
     codes.foreach { r =>
       val cs = r.getSeq[Int](1)
@@ -549,7 +552,7 @@ class LayoutSpec extends SparkSpec {
 
   test("pqIndexAppend: frozen codebook, exact stats merge, drift trigger on shifted data") {
     import spark.implicits._
-    val shared = Pipeline.pqIndexTable(sfDir)
+    val shared = Pipeline.bankedTable("pq", sfDir)
     if (!spark.catalog.tableExists(shared))
       Pipeline.q103IndexedPqAnn(spark, sfDir).collect()
     // append mutates — private copy (the IVF-append discipline)

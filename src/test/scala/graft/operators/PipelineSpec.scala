@@ -96,6 +96,82 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  test("cosine serve: ties go to the smaller id, self-matches drop only where asked, at most k per query") {
+    // query 0's cluster holds four members at round-4 cosine 1.0 (5's
+    // tiny off-axis component rounds away) including query 0 itself;
+    // query 1's holds itself, an exact twin and one 0.7071 member
+    val members = Seq(
+      (0L, Seq(1.0, 0.0), 1L), (3L, Seq(3.0, 0.0), 1L),
+      (5L, Seq(2.0, 0.00001), 1L), (8L, Seq(1.0, 0.0), 1L),
+      (7L, Seq(1.0, 1.0), 1L),
+      (1L, Seq(0.0, 1.0), 2L), (9L, Seq(0.0, 1.0), 2L),
+      (11L, Seq(1.0, 1.0), 2L)).toDF("vec_id", "e", "cluster")
+    val queries = Seq((0L, Seq(1.0, 0.0), 1L, 0L), (1L, Seq(0.0, 1.0), 2L, 0L))
+      .toDF("query_id", "qe", "cluster", "mask")
+    def serve(rule: Pipeline.Candidates, k: Int): Map[Long, Seq[(Int, Long, Double)]] =
+      Pipeline.cosineServe(members, queries, rule, 4, k).collect()
+        .map(r => (r.getAs[Long]("query_id"),
+          (r.getAs[Int]("rk"), r.getAs[Long]("vec_id"), r.getAs[Double]("cosine"))))
+        .groupBy(_._1).map { case (q, rs) => q -> rs.map(_._2).sortBy(_._1).toSeq }
+    // all pairs: the query's own id is out; of the tied rest the two
+    // smallest ids win, across clusters
+    assert(serve(Pipeline.AllPairs, 2) == Map(
+      0L -> Seq((1, 3L, 1.0), (2, 5L, 1.0)),
+      1L -> Seq((1, 9L, 1.0), (2, 7L, 0.7071))))
+    // the lookup form of the cluster rule keeps the query's own id: it
+    // wins its tie as the smallest, and members of other clusters
+    // never appear
+    assert(serve(Pipeline.InClusters(0, excludeSelf = false), 2) == Map(
+      0L -> Seq((1, 0L, 1.0), (2, 3L, 1.0)),
+      1L -> Seq((1, 1L, 1.0), (2, 9L, 1.0))))
+    assert(serve(Pipeline.InClusters(0), 2) == Map(
+      0L -> Seq((1, 3L, 1.0), (2, 5L, 1.0)),
+      1L -> Seq((1, 9L, 1.0), (2, 11L, 0.7071))))
+    // k bounds the rows per query; a smaller candidate set returns all
+    // of itself, ranked 1..n
+    val wide = serve(Pipeline.InClusters(0, excludeSelf = false), 4)
+    assert(wide(0L).map(_._2) == Seq(0L, 3L, 5L, 8L))
+    assert(wide(1L) == Seq((1, 1L, 1.0), (2, 9L, 1.0), (3, 11L, 0.7071)))
+  }
+
+  test("banked serves: after one warm call, building q85 and q86 again runs no Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    Pipeline.q85IndexedAnn(spark, sfDir).collect()
+    Pipeline.q86IndexedBm25(spark, sfDir).collect()
+    val tag = s"pipeline-spec-build-${System.nanoTime()}"
+    val marker = tag + "-barrier"
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+    @volatile var markerSeen = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach { g =>
+            if (g == marker) markerSeen = true
+            else jobs.merge(g, 1, (a: Int, b: Int) => a + b)
+          }
+    }
+    sc.addSparkListener(listener)
+    try {
+      def build(name: String)(f: => Unit): Unit = {
+        sc.setJobGroup(s"$tag-$name", s"build $name")
+        try f finally sc.clearJobGroup()
+      }
+      build("q85")(Pipeline.q85IndexedAnn(spark, sfDir))
+      build("q86")(Pipeline.q86IndexedBm25(spark, sfDir))
+      // a job from the same listener queue, started after the builds:
+      // once the listener sees it, it has seen every build job
+      sc.setJobGroup(marker, "listener barrier")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 60000
+      while (!markerSeen && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(markerSeen, "the listener never saw the barrier job")
+      for (name <- Seq("q85", "q86"))
+        assert(jobs.getOrDefault(s"$tag-$name", 0) == 0,
+          s"building $name ran ${jobs.get(s"$tag-$name")} Spark jobs, want 0")
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("q30 embedding near-dup recovers the constructed perturbed pairs") {
     val pairs = Pipeline.q30EmbeddingNearDup(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
@@ -1757,7 +1833,7 @@ class PipelineSpec extends SparkSpec {
 
   test("train-once: q101 banks the trained codebook at rest, bit-identical to a retrain") {
     Pipeline.q101PqAnn(spark, sfDir).collect()
-    val idx = Pipeline.pqIndexTable(sfDir)
+    val idx = Pipeline.bankedTable("pq", sfDir)
     assert(spark.catalog.tableExists(idx),
       "q101 served without leaving the index at rest")
     // the stored codebook must equal a deterministic in-session
@@ -2333,7 +2409,7 @@ class PipelineSpec extends SparkSpec {
     import spark.implicits._
     // ensure the inverted index is banked (the q138 path does)
     Pipeline.q138HybridAtRest(spark, sfDir).collect()
-    val inv = Pipeline.invIndexTable(sfDir)
+    val inv = Pipeline.bankedTable("inv", sfDir)
     val postings = spark.table(inv)
     val stats = spark.table(inv + "_stats")
     // q138's panel PLUS the degenerate paths: a query with no corpus
@@ -2362,7 +2438,7 @@ class PipelineSpec extends SparkSpec {
   test("sparse-leg plan knob: both settings serve identical rows; default is the unpruned plan") {
     import spark.implicits._
     Pipeline.q138HybridAtRest(spark, sfDir).collect()
-    val inv = Pipeline.invIndexTable(sfDir)
+    val inv = Pipeline.bankedTable("inv", sfDir)
     val postings = spark.table(inv)
     val stats = spark.table(inv + "_stats")
     val queries = graft.Tables.spread(graft.Tables.documents(spark, sfDir))

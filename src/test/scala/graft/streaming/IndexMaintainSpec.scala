@@ -75,7 +75,7 @@ class IndexMaintainSpec extends SparkSpec {
   test("streamed IVF append equals the batch append sequence; occupancy report rides every batch") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
-    val shared = Pipeline.ivfIndexTable(sfDir)
+    val shared = Pipeline.bankedTable("ivf", sfDir)
     if (!spark.catalog.tableExists(shared))
       Pipeline.q85IndexedAnn(spark, sfDir).collect()
     // private copies: A takes the stream, B the batch sequence

@@ -11,7 +11,7 @@ class QuantizeSpec extends SparkSpec {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     // a persisted index to read the frozen codebook from
-    val idx = Pipeline.pqIndexTable(sfDir)
+    val idx = Pipeline.bankedTable("pq", sfDir)
     if (!spark.catalog.tableExists(idx))
       Pipeline.q103IndexedPqAnn(spark, sfDir).collect()
     val vecs = Tables.embeddings(spark, sfDir)
@@ -52,7 +52,7 @@ class QuantizeSpec extends SparkSpec {
   test("driftByWindow: stationary window quiet, shifted window trips the flag") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
-    val idx = Pipeline.pqIndexTable(sfDir)
+    val idx = Pipeline.bankedTable("pq", sfDir)
     if (!spark.catalog.tableExists(idx))
       Pipeline.q103IndexedPqAnn(spark, sfDir).collect()
     val vecs = Tables.embeddings(spark, sfDir)
