@@ -49,7 +49,7 @@ object Bench {
     // The iterative CC queries' deliberate localCheckpoint releases used
     // to be silenced HERE, process-wide — hiding genuine block-loss
     // WARNs for the whole run. The suppression now lives scoped inside
-    // Graph.checkpointRound around exactly the deliberate unpersist.
+    // Residents.checkpoint around exactly the deliberate unpersist.
     // q59's sequence-packing window runs over the corpus/100 bucket-summary
     // relation — a bounded, by-design single-partition frame (PLANS.md).
     // Spark still emits the "No Partition Defined" WARN for it, and two of

@@ -15,7 +15,7 @@ object Verify {
     val spark = Sessions.localBuilder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // the CC queries' checkpoint-release WARN suppression is scoped
-    // inside Graph.checkpointRound (see Bench.scala)
+    // inside Residents.checkpoint (see Bench.scala)
     // q59's by-design bounded single-partition window (see Bench.scala)
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec",

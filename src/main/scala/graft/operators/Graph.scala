@@ -25,89 +25,18 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Eager localCheckpoint that also hands back a DETERMINISTIC release
-    * for the blocks it created. `localCheckpoint` alone frees its
-    * storage only when the driver GCs the RDD reference and the
-    * ContextCleaner runs — in an iterative loop that pins O(rounds)
-    * superseded copies in the block manager, evicting other persisted
-    * stages.
-    *
-    * The checkpointed RDD is taken DIRECTLY from the returned Dataset's
-    * plan: `Dataset.localCheckpoint` roots the new plan at exactly one
-    * `LogicalRDD` wrapping the persisted RDD. (An earlier form diffed
-    * the global `getPersistentRDDs` set around the call — racy under
-    * concurrent queries, whose freshly-persisted RDDs would land in the
-    * diff and get released from under them.)
-    *
-    * CAUTION: unpersisting a localCheckpointed RDD is LOSSY, not a
-    * recompute — checkpointing truncates lineage, so once its blocks
-    * are dropped any plan still reading the relation FAILS rather than
-    * re-deriving it. Callers must invoke the release only after every
-    * consumer of the superseded round has executed (the iterative loops
-    * below do: round N+1 is fully materialized by its own eager
-    * checkpoint before round N is released). */
-  private[operators] def checkpointRound(df: DataFrame): (DataFrame, () => Unit) = {
-    val cp = df.localCheckpoint(true)
-    val rdds = cp.queryExecution.analyzed.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }
-    (cp, () => {
-      // Spark WARNs on every unpersist of a locally-checkpointed RDD
-      // ("lineage has been truncated ..."). Here the release is the
-      // whole point and provably safe (CAUTION above), so the logger is
-      // raised to ERROR for exactly this call — NOT process-wide as the
-      // Bench/Verify mains once did, which would also have hidden a
-      // genuine block-loss WARN from any unrelated stage. The window is
-      // a few synchronous log calls wide; a concurrent query's WARN
-      // landing inside it is the accepted residual risk.
-      val name = "org.apache.spark.rdd.MapPartitionsRDD"
-      val prev = org.apache.logging.log4j.LogManager.getLogger(name).getLevel
-      org.apache.logging.log4j.core.config.Configurator.setLevel(
-        name, org.apache.logging.log4j.Level.ERROR)
-      try rdds.foreach(_.unpersist(blocking = false))
-      finally org.apache.logging.log4j.core.config.Configurator.setLevel(name, prev)
-    })
-  }
-
-  /** Bookkeeping for an iterative checkpoint loop: every checkpoint
-    * registers its release; whatever is still pending when the loop
-    * exits — normally the last round, or everything after a mid-round
-    * exception — is released in the loop's `finally` via
-    * [[releaseAll]]. Releases are idempotent (a handle removes itself
-    * on first call), so eager per-round frees compose with the final
-    * sweep. A relation that must OUTLIVE the loop (an operator's
-    * returned result) is kept alive with [[detach]]; its blocks then
-    * belong to the caller and are reclaimed by the ContextCleaner when
-    * the result is dropped. */
-  private[operators] final class CheckpointScope {
-    private val pending = scala.collection.mutable.LinkedHashSet.empty[() => Unit]
-
-    def checkpoint(df: DataFrame): (DataFrame, () => Unit) = {
-      val (cp, free) = checkpointRound(df)
-      val handle: () => Unit = new (() => Unit) {
-        def apply(): Unit = if (pending.remove(this)) free()
-      }
-      pending += handle
-      (cp, handle)
-    }
-
-    /** Remove from the scope WITHOUT freeing. */
-    def detach(release: () => Unit): Unit = pending.remove(release)
-
-    /** Free every checkpoint still pending (newest first — the reverse
-      * of creation order, so a dependent relation is never orphaned
-      * before its own release runs). */
-    def releaseAll(): Unit = pending.toList.reverse.foreach(_.apply())
-  }
-
   /** Connected components by alternating star contractions.
     *
+    * @param r     the caller's scope: the returned labels are a
+    *              checkpoint held in it (every round's relations are
+    *              released before returning, or by the scope if a round
+    *              throws)
     * @param edges undirected edge relation with two long columns
     *              `src`, `dst` (self-loops and duplicates tolerated)
     * @return one row per node appearing in `edges`: (node, label)
     *         where label = min node id of its component
     */
-  def connectedComponentsStar(edges: DataFrame): DataFrame = {
+  def connectedComponentsStar(r: Residents, edges: DataFrame): DataFrame = {
     // canonical directed form: every edge points big -> small, one row
     // per undirected pair. Each round ends in an EAGER localCheckpoint:
     // the round's plan references the previous round's relation several
@@ -116,90 +45,79 @@ object Graph {
     // exponentially in the round count — analysis alone OOMs around
     // round ~15. Checkpointing bounds every round's plan to one round's
     // operators (the same idiom GraphX/ALS use for iterative lineage).
-    // The scope's finally releases whatever is still pending — the last
-    // round's edges on success, every live round on an exception —
-    // because checkpoint blocks bypass the CacheManager: clearCache()
-    // cannot reclaim them, only these callbacks (or driver GC) can.
-    val scope = new CheckpointScope
-    try {
-      var (e, freeE) = scope.checkpoint(edges
-        .select(greatest(col("src"), col("dst")).as("u"),
-          least(col("src"), col("dst")).as("v"))
-        .filter(col("u") =!= col("v"))
-        .distinct())
-      var eCount = e.count()
-      val isolated = edges.filter(col("src") === col("dst"))
-        .select(col("src").as("node")).distinct()
+    var e = r.checkpoint(edges
+      .select(greatest(col("src"), col("dst")).as("u"),
+        least(col("src"), col("dst")).as("v"))
+      .filter(col("u") =!= col("v"))
+      .distinct())
+    var eCount = e.count()
+    val isolated = edges.filter(col("src") === col("dst"))
+      .select(col("src").as("node")).distinct()
 
-      var converged = false
-      var rounds = 0
-      // O(log² n) worst-case round bound (Kiveris et al. Thm 1); 60
-      // covers any realistic corpus, and non-convergence THROWS below —
-      // a partially-contracted edge set would silently mislabel nodes
-      val maxRounds = 60
-      while (!converged && rounds < maxRounds) {
-        // LARGE-STAR over symmetric neighborhoods: every node u links its
-        // strictly-larger neighbors to m = min(Γ(u) ∪ {u}).
-        val sym = e.select(col("u"), col("v"))
-          .union(e.select(col("v").as("u"), col("u").as("v")))
-        val mLarge = sym.groupBy(col("u"))
-          .agg(least(min(col("v")), first(col("u"))).as("m"))
-        // r21: the large-star round output is a LAZY persist, not an
-        // eager checkpoint — `next`'s own materialization computes it
-        // once and its two readers (mSmall + the small-star join) hit
-        // the cache, saving one job per round; `next`'s eager
-        // checkpoint still truncates the round's lineage (large
-        // derives from `e`, a checkpointed LogicalRDD root, so plan
-        // depth stays bounded per round).
-        val large = sym.join(mLarge, "u")
-          .filter(col("v") > col("u"))
-          .select(col("v").as("u"), col("m").as("v"))
-          .distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // SMALL-STAR on the canonical (big -> small) form: every node u
-        // links its smaller neighbors and itself to their minimum.
-        val mSmall = large.groupBy(col("u")).agg(min(col("v")).as("m"))
-        val (next, freeNext) = scope.checkpoint(large.join(mSmall, "u")
-          .filter(col("v") =!= col("m"))
-          .select(col("v").as("u"), col("m").as("v"))
-          .union(mSmall.select(col("u"), col("m").as("v")))
-          .distinct())
-        val freeLarge: () => Unit = () => large.unpersist(blocking = false)
-        // fixpoint = identical canonical edge sets. r21: ONE probe job
-        // — both relations are distinct by construction, so "next ⊆ e"
-        // is "every next row finds its e row" (count(inE) == count(*)
-        // over a multiplicity-1 left join), and with equal counts that
-        // is set equality — the same decision the former count() +
-        // except().isEmpty pair made in two jobs, minus except's extra
-        // distinct exchange.
-        val probe = next.join(e.withColumn("inE", lit(1)), Seq("u", "v"), "left")
-          .agg(count(lit(1)).as("n"), count(col("inE")).as("m")).head()
-        val nextCount = probe.getLong(0)
-        converged = nextCount == eCount && probe.getLong(1) == nextCount
-        freeLarge()
-        freeE()
-        e = next
-        freeE = freeNext
-        eCount = nextCount
-        rounds += 1
-      }
-      if (!converged)
-        throw new IllegalStateException(
-          s"connectedComponentsStar did not converge in $maxRounds rounds " +
-            s"($eCount canonical edges remain) — labels would be partial")
-      // at the fixpoint every edge is (member -> component min): centers
-      // label themselves, members take their star center. The labels
-      // are MATERIALIZED (eager checkpoint) and DETACHED from the scope
-      // so the finally can release the final round's edge blocks before
-      // returning; the result's own blocks belong to the caller.
-      val (labels, keep) = scope.checkpoint(
-        e.select(col("u").as("node"), col("v").as("label"))
-          .union(e.select(col("v").as("node"), col("v").as("label")))
-          .union(isolated.select(col("node"), col("node").as("label")))
-          .groupBy(col("node")).agg(min(col("label")).as("label")))
-      scope.detach(keep)
-      labels
-    } finally scope.releaseAll()
+    var converged = false
+    var rounds = 0
+    // O(log² n) worst-case round bound (Kiveris et al. Thm 1); 60
+    // covers any realistic corpus, and non-convergence THROWS below —
+    // a partially-contracted edge set would silently mislabel nodes
+    val maxRounds = 60
+    while (!converged && rounds < maxRounds) {
+      // LARGE-STAR over symmetric neighborhoods: every node u links its
+      // strictly-larger neighbors to m = min(Γ(u) ∪ {u}).
+      val sym = e.select(col("u"), col("v"))
+        .union(e.select(col("v").as("u"), col("u").as("v")))
+      val mLarge = sym.groupBy(col("u"))
+        .agg(least(min(col("v")), first(col("u"))).as("m"))
+      // r21: the large-star round output is a LAZY persist, not an
+      // eager checkpoint — `next`'s own materialization computes it
+      // once and its two readers (mSmall + the small-star join) hit
+      // the cache, saving one job per round; `next`'s eager
+      // checkpoint still truncates the round's lineage (large
+      // derives from `e`, a checkpointed LogicalRDD root, so plan
+      // depth stays bounded per round).
+      val large = r.persist(sym.join(mLarge, "u")
+        .filter(col("v") > col("u"))
+        .select(col("v").as("u"), col("m").as("v"))
+        .distinct(), org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // SMALL-STAR on the canonical (big -> small) form: every node u
+      // links its smaller neighbors and itself to their minimum.
+      val mSmall = large.groupBy(col("u")).agg(min(col("v")).as("m"))
+      val next = r.checkpoint(large.join(mSmall, "u")
+        .filter(col("v") =!= col("m"))
+        .select(col("v").as("u"), col("m").as("v"))
+        .union(mSmall.select(col("u"), col("m").as("v")))
+        .distinct())
+      // fixpoint = identical canonical edge sets. r21: ONE probe job
+      // — both relations are distinct by construction, so "next ⊆ e"
+      // is "every next row finds its e row" (count(inE) == count(*)
+      // over a multiplicity-1 left join), and with equal counts that
+      // is set equality — the same decision the former count() +
+      // except().isEmpty pair made in two jobs, minus except's extra
+      // distinct exchange.
+      val probe = next.join(e.withColumn("inE", lit(1)), Seq("u", "v"), "left")
+        .agg(count(lit(1)).as("n"), count(col("inE")).as("m")).head()
+      val nextCount = probe.getLong(0)
+      converged = nextCount == eCount && probe.getLong(1) == nextCount
+      r.release(large)
+      r.release(e)
+      e = next
+      eCount = nextCount
+      rounds += 1
+    }
+    if (!converged)
+      throw new IllegalStateException(
+        s"connectedComponentsStar did not converge in $maxRounds rounds " +
+          s"($eCount canonical edges remain) — labels would be partial")
+    // at the fixpoint every edge is (member -> component min): centers
+    // label themselves, members take their star center. The labels are
+    // MATERIALIZED (eager checkpoint) so the final round's edge blocks
+    // can be released before returning.
+    val labels = r.checkpoint(
+      e.select(col("u").as("node"), col("v").as("label"))
+        .union(e.select(col("v").as("node"), col("v").as("label")))
+        .union(isolated.select(col("node"), col("node").as("label")))
+        .groupBy(col("node")).agg(min(col("label")).as("label")))
+    r.release(e)
+    labels
   }
 
   /** Triangle participation over the STRONG-TIE co-order supplier

@@ -768,11 +768,12 @@ object Multimodal {
     * the exact face shuffles 16-byte digests; the near face shuffles
     * 14-bit band keys and verifies with one codegen'd
     * `bit_count(xor)` per candidate. The decoded signature relation
-    * is persisted once and feeds all three stages (the q88 resident-
-    * support acceptance: session-scoped, reclaimed by clearCache). */
-  def q97ImageDedup(spark: SparkSession, dir: String): DataFrame = {
-    val sig = imageSignatures(imageCorpus(spark, dir))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    * is persisted once and feeds all three stages; the report (a few
+    * rows) is snapshotted, so the signatures are released before the
+    * query returns. */
+  def q97ImageDedup(spark: SparkSession, dir: String): DataFrame = Residents { r =>
+    val sig = r.persist(imageSignatures(imageCorpus(spark, dir)),
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     sig.count()
     val groups = sig.groupBy(col("digest"))
       .agg(min(col("media_id")).as("media_id"),
@@ -809,8 +810,8 @@ object Multimodal {
         sum(when(col("id2") - col("id1") === VariantOffset, 1L)
           .otherwise(0L)).as("n_variant"))
       .select(lit("near").as("stage"), col("k"), col("n"), col("n_variant"))
-    exact.unionByName(ahash).unionByName(near)
-      .orderBy(col("stage"), col("k"))
+    r.snapshot(exact.unionByName(ahash).unionByName(near)
+      .orderBy(col("stage"), col("k")))
   }
 
   /** DuckDB twin of [[q97ImageDedup]]: pixels, both hashes, the digest
@@ -992,10 +993,11 @@ object Multimodal {
     * Scale posture (100 TB of audio): signatures are 3 fixed-width
     * columns — payloads never survive past the partition-wise decode;
     * both faces are pure digest/fingerprint groupBys (map-side partials,
-    * no joins, never all-pairs). */
-  def q98AudioDedup(spark: SparkSession, dir: String): DataFrame = {
-    val sig = audioSignatures(audioDedupCorpus(spark, dir))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    * no joins, never all-pairs). The report is snapshotted, so the
+    * signature relation is released before the query returns. */
+  def q98AudioDedup(spark: SparkSession, dir: String): DataFrame = Residents { r =>
+    val sig = r.persist(audioSignatures(audioDedupCorpus(spark, dir)),
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     sig.count()
     val groups = sig.groupBy(col("digest"))
       .agg(min(col("media_id")).as("media_id"),
@@ -1014,7 +1016,7 @@ object Multimodal {
       .agg(count(lit(1)).as("n"),
         sum(col("has_var")).cast("long").as("n_variant"))
       .select(lit("gain").as("stage"), col("k"), col("n"), col("n_variant"))
-    exact.unionByName(gain).orderBy(col("stage"), col("k"))
+    r.snapshot(exact.unionByName(gain).orderBy(col("stage"), col("k")))
   }
 
   /** DuckDB twin of [[q98AudioDedup]]: the amplitude profile, the
@@ -1196,10 +1198,12 @@ object Multimodal {
     * partition-wise decode — the join carries (id, 24-bit key, count)
     * rows only; blocking on the frame key is never all-pairs and the
     * per-key group is bounded by how many videos genuinely share a
-    * frame (the same bound any inverted frame index serves). */
-  def q99VideoDedup(spark: SparkSession, dir: String): DataFrame = {
-    val sig = videoFrameSignatures(videoDedupCorpus(spark, dir))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    * frame (the same bound any inverted frame index serves). The report
+    * is snapshotted, so the frame relation is released before the
+    * query returns. */
+  def q99VideoDedup(spark: SparkSession, dir: String): DataFrame = Residents { r =>
+    val sig = r.persist(videoFrameSignatures(videoDedupCorpus(spark, dir)),
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     sig.count()
     val vids = sig.groupBy(col("digest"))
       .agg(min(col("media_id")).as("media_id"),
@@ -1223,7 +1227,7 @@ object Multimodal {
         sum(when(col("id2") - col("id1") === VariantOffset, 1L).otherwise(0L))
           .as("n_variant"))
       .select(lit("near").as("stage"), col("k"), col("n"), col("n_variant"))
-    exact.unionByName(near).orderBy(col("stage"), col("k"))
+    r.snapshot(exact.unionByName(near).orderBy(col("stage"), col("k")))
   }
 
   /** DuckDB twin of [[q99VideoDedup]]: frame colors (so keys), the

@@ -3,10 +3,10 @@ package graft.operators
 import graft.Tables
 import graft.expressions.VectorFunctions.{centroidArgmax, vecCosine, vecCosinePre, vecDot, vecNorm}
 import graft.functions.TextFunctions._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, IntegerType, LongType, StructField, StructType}
 
 /** LLM-training-data pipeline operators over `documents.parquet` and
   * `embeddings.parquet`: deduplication (exact, MinHash+LSH, SimHash),
@@ -510,36 +510,27 @@ object Pipeline {
     * Returns `(vec_id, e, cluster, mask)` with `cluster = coarse · 2^32
     * + subbucket` (exact in longs; coarse labels are small ints) and
     * `mask` = the cluster's active sub-bucket bits (for
-    * [[hammingProbes]]). Both DuckDB twins derive the identical ids. */
-  def corpusScaledClusters(e: DataFrame, cent: DataFrame, targetOcc: Int): DataFrame =
-    corpusScaledClustersWithRelease(e, cent, targetOcc)._1
-
-  /** As [[corpusScaledClusters]], plus the release for the internal
-    * assignment cache. The (vec_id, coarse) assignment is the expensive
-    * stage (centroid crossJoin + argmax) and feeds BOTH the occupancy
-    * aggregate and the member join, so it persists (narrow 16-byte
-    * pairs, not vectors — q31's persisted-IVF-index rationale). Within
-    * one registered query (q31/q51) the cache is session-scoped like
-    * every other persisted stage here — the bench's clearCache reclaims
-    * it; callers that build MANY clusterings in one session (tests,
-    * tuning sweeps) should invoke the release once their derived
-    * relation is materialized, or the caches accumulate. */
-  def corpusScaledClustersWithRelease(e: DataFrame, cent: DataFrame,
-      targetOcc: Int): (DataFrame, () => Unit) = {
-    val asg = assignToCentroids(e, cent)
-      .persist(NarrowCacheLevel)
+    * [[hammingProbes]]). Both DuckDB twins derive the identical ids.
+    *
+    * The (vec_id, coarse) assignment is the expensive stage (centroid
+    * crossJoin + argmax) and feeds BOTH the occupancy aggregate and the
+    * member join, so it persists in the caller's scope `r` (narrow
+    * 16-byte pairs, not vectors — q31's persisted-IVF-index
+    * rationale): the returned relation reads it until `r` ends. */
+  def corpusScaledClusters(r: Residents, e: DataFrame, cent: DataFrame,
+      targetOcc: Int): DataFrame = {
+    val asg = r.persist(assignToCentroids(e, cent), NarrowCacheLevel)
     val occ = asg.groupBy(col("cluster")).agg(count(lit(1)).as("n_c"))
     // `mask` (the cluster's active sub-bucket bits) rides along so
     // consumers can MULTI-PROBE: enumerate Hamming-neighbour sub-buckets
     // without re-deriving the per-cluster bit count
-    val fine = e.join(asg, "vec_id").join(broadcast(occ), "cluster")
+    e.join(asg, "vec_id").join(broadcast(occ), "cluster")
       .withColumn("mask",
         pow(lit(2.0), occBitsCol(col("n_c"), 0, targetOcc)).cast("long") - 1L)
       .select(col("vec_id"), col("e"),
         (col("cluster").cast("long") * lit(4294967296L) +
           srpSignature(col("e")).bitwiseAND(col("mask"))).as("cluster"),
         col("mask"))
-    (fine, () => { asg.unpersist(blocking = false); () })
   }
 
   /** [[corpusScaledClusters]] as PURE MAP STAGES over `base` — zero
@@ -1091,47 +1082,47 @@ object Pipeline {
       .select(col("doc_id"), col("toks"), size(col("toks")).as("dl"))
     // r21: the two legs are independent collect pipelines — overlap
     // them (guide §2.6); both return bounded local snapshots
-    val (sparse, dense) = par2(
-      sparseLeg(queries, d),
-      denseLeg(corpusVectors(spark, dir), queries, AllPairs))
+    val (sparse, dense) = Residents { r =>
+      par2(sparseLeg(r, queries, d),
+        denseLeg(r, corpusVectors(spark, dir), queries, AllPairs))
+    }
     if (coverage)
       rrfFuseCoverage(sparse, dense, corpusVectors(spark, dir).select(col("vec_id")))
     else rrfFuseWeighted(sparse, dense, ws, wd)
   }
 
-  /** Per-query distinct-token relation `(query_id, t)` — persisted;
-    * [[bm25MicroLeg]] releases it. */
-  private def queryTerms(queries: DataFrame): DataFrame =
-    queries
+  /** Per-query distinct-token relation `(query_id, t)`, persisted in
+    * `r`. */
+  private def queryTerms(r: Residents, queries: DataFrame): DataFrame =
+    r.persist(queries
       .select(col("query_id"),
-        explode(array_distinct(split(col("text"), " "))).as("t"))
-      .persist(NarrowCacheLevel)
+        explode(array_distinct(split(col("text"), " "))).as("t")),
+      NarrowCacheLevel)
 
   /** The sparse (per-query BM25) leg over a tokenized corpus
     * `d(doc_id, toks, dl)`: `(query_id, doc_id, srk ≤ HybridLegK)`.
     * Per-term weights round to integer micro-units BEFORE the per-doc
-    * sum (order-free across partitions). */
-  private def sparseLeg(queries: DataFrame, d: DataFrame): DataFrame = {
-    val qterms = queryTerms(queries)
+    * sum (order-free across partitions). Its residents are held in
+    * `r`; the leg itself is a bounded local snapshot. */
+  private def sparseLeg(r: Residents, queries: DataFrame,
+      d: DataFrame): DataFrame = {
+    val qterms = queryTerms(r, queries)
     val qvocab = qterms.select(col("t")).distinct()
     // r22 (guide §2.4): the corpus is referenced twice — postings (tf)
     // and corpus stats — and each reference re-ran the scan + split
     // tokenization (the profile's duplicate 26 task-seconds stage on
     // every eval query). Tokenize ONCE: the serialized persist fills
     // during tf's materialization scan and the stats aggregate reads
-    // the cache; released before return (no cross-query state).
-    val dTok = d.persist(CacheLevel)
-    val tf = dTok.select(col("doc_id"), col("dl"), explode(col("toks")).as("t"))
+    // the cache.
+    val dTok = r.persist(d, CacheLevel)
+    val tf = r.persist(dTok.select(col("doc_id"), col("dl"), explode(col("toks")).as("t"))
       .join(broadcast(qvocab), "t")
       .groupBy(col("doc_id"), col("dl"), col("t"))
-      .agg(count(lit(1)).cast("double").as("tf"))
-      .persist(NarrowCacheLevel)
+      .agg(count(lit(1)).cast("double").as("tf")), NarrowCacheLevel)
     tf.count()
     val stats = dTok.agg(count(lit(1)).cast("double").as("nn"),
       avg(col("dl")).as("avgdl"))
-    val out = bm25MicroLeg(qterms, tf, stats)
-    dTok.unpersist(blocking = false)
-    out
+    bm25MicroLeg(r, qterms, tf, stats)
   }
 
   /** The sparse leg served from an inverted index AT REST (q86's
@@ -1142,15 +1133,14 @@ object Pipeline {
     * per-term lists, so document frequency computed from the FILTERED
     * relation equals the corpus df and the leg is row-identical to
     * [[sparseLeg]] over the same corpus. */
-  private[operators] def sparseLegFromPostings(queries: DataFrame,
-      postings: DataFrame, stats: DataFrame): DataFrame = {
-    val qterms = queryTerms(queries)
+  private[operators] def sparseLegFromPostings(r: Residents,
+      queries: DataFrame, postings: DataFrame, stats: DataFrame): DataFrame = {
+    val qterms = queryTerms(r, queries)
     val qvocab = qterms.select(col("t")).distinct()
-    val tf = postings.join(broadcast(qvocab), "t")
-      .select(col("doc_id"), col("dl"), col("t"), col("tf"))
-      .persist(NarrowCacheLevel)
+    val tf = r.persist(postings.join(broadcast(qvocab), "t")
+      .select(col("doc_id"), col("dl"), col("t"), col("tf")), NarrowCacheLevel)
     tf.count()
-    bm25MicroLeg(qterms, tf, stats)
+    bm25MicroLeg(r, qterms, tf, stats)
   }
 
   /** The sparse leg's serve-time plan knob — an HONEST NEGATIVE
@@ -1176,12 +1166,12 @@ object Pipeline {
     * Callers flipping it on owe their own A/B at their panel shape;
     * both branches are row-identical for the top-k, so the knob can
     * never change an answer — only a growth curve. */
-  private[operators] def sparseLegAdaptive(queries: DataFrame,
+  private[operators] def sparseLegAdaptive(r: Residents, queries: DataFrame,
       postings: DataFrame, stats: DataFrame,
       maxScorePrune: Boolean = false): DataFrame =
     if (maxScorePrune)
-      sparseLegFromPostingsMaxScore(queries, postings, stats)
-    else sparseLegFromPostings(queries, postings, stats)
+      sparseLegFromPostingsMaxScore(r, queries, postings, stats)
+    else sparseLegFromPostings(r, queries, postings, stats)
 
   /** Per-(doc, term) BM25 weights in integer micro-units over a
     * query-vocabulary tf relation — the one scoring derivation behind
@@ -1241,19 +1231,18 @@ object Pipeline {
     * frequent terms' long posting lists no longer fan out per query.
     * Driver-side state is bounded by the query panel: (term, ub)
     * snapshots and θ per query — the HybridLegK panel discipline. */
-  private[operators] def sparseLegFromPostingsMaxScore(queries: DataFrame,
-      postings: DataFrame, stats: DataFrame): DataFrame = {
+  private[operators] def sparseLegFromPostingsMaxScore(r: Residents,
+      queries: DataFrame, postings: DataFrame, stats: DataFrame): DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
-    val qterms = queryTerms(queries)
+    val qterms = queryTerms(r, queries)
     val qvocab = qterms.select(col("t")).distinct()
-    val tf = postings.join(broadcast(qvocab), "t")
-      .select(col("doc_id"), col("dl"), col("t"), col("tf"))
-      .persist(NarrowCacheLevel)
+    val tf = r.persist(postings.join(broadcast(qvocab), "t")
+      .select(col("doc_id"), col("dl"), col("t"), col("tf")), NarrowCacheLevel)
     tf.count()
     // weights once, shared by both phases (phase A reads the rare
     // slice, phase B the candidate-filtered whole)
-    val wmicro = bm25WMicro(tf, stats).persist(NarrowCacheLevel)
+    val wmicro = r.persist(bm25WMicro(tf, stats), NarrowCacheLevel)
     wmicro.count()
     // per-query (term, ub) — a bounded driver snapshot (panel × query
     // vocabulary); terms absent from the corpus drop here exactly as
@@ -1292,10 +1281,9 @@ object Pipeline {
       val cut = if (theta <= 0L || cut0 < 0) ts.length else cut0 + 1
       ts.take(cut).map { case (t, _) => (q, t) }
     }.toDF("query_id", "t")
-    val cand = wmicro.join(broadcast(e2), "t")
+    val cand = r.persist(wmicro.join(broadcast(e2), "t")
       .filter(col("doc_id") =!= col("query_id"))
-      .select(col("query_id"), col("doc_id")).distinct()
-      .persist(NarrowCacheLevel)
+      .select(col("query_id"), col("doc_id")).distinct(), NarrowCacheLevel)
     cand.count()
     val docAny = cand.select(col("doc_id")).distinct()
     // exact scores, candidates only: the doc_id semi cuts posting
@@ -1312,16 +1300,14 @@ object Pipeline {
         byQ.orderBy(col("s_micro").desc, col("doc_id"))))
       .filter(col("srk") <= HybridLegK)
       .select(col("query_id"), col("doc_id"), col("srk"))
-    val out = snapshotAndFree(leg, qterms, tf, wmicro)
-    cand.unpersist(blocking = false)
-    out
+    r.snapshot(leg)
   }
 
   /** Shared BM25 scoring behind [[sparseLeg]] and
     * [[sparseLegFromPostings]]: micro-unit per-term weights, integer
-    * per-(query, doc) sums, top-[[HybridLegK]] per query; releases the
-    * callers' `qterms`/`tf` residents via [[snapshotAndFree]]. */
-  private def bm25MicroLeg(qterms: DataFrame, tf: DataFrame,
+    * per-(query, doc) sums, top-[[HybridLegK]] per query, snapshotted
+    * so the callers' `qterms`/`tf` residents can go with `r`. */
+  private def bm25MicroLeg(r: Residents, qterms: DataFrame, tf: DataFrame,
       stats: DataFrame): DataFrame = {
     // the ONE weight derivation (bm25WMicro) — the max-score serve's
     // exactness certificate is row-for-row parity with this leg, so
@@ -1335,12 +1321,11 @@ object Pipeline {
         .orderBy(col("s_micro").desc, col("doc_id"))))
       .filter(col("srk") <= HybridLegK)
       .select(col("query_id"), col("doc_id"), col("srk"))
-    // snapshot-and-release (the annRecallSweep discipline): the leg is
-    // ≤ legK rows per query — a bounded local relation — so the
-    // corpus-sized qterms/tf residents free HERE instead of lingering
-    // for the session (a leaked persist reads as GC pressure on every
-    // LATER query in a shared session, not on this one)
-    snapshotAndFree(leg, qterms, tf)
+    // the leg is ≤ legK rows per query — a bounded local relation — so
+    // the corpus-sized qterms/tf residents free with the caller's scope
+    // instead of lingering for the session (a leaked persist reads as
+    // GC pressure on every LATER query in a shared session)
+    r.snapshot(leg)
   }
 
   /** The dense (round-6 cosine) leg: [[cosineServe]] of the
@@ -1349,15 +1334,11 @@ object Pipeline {
     * probed IVF clusters for the at-rest and pruned legs (q138/q139) —
     * as `(query_id, doc_id, drk ≤ HybridLegK)`. Returned as a bounded
     * LOCAL relation (snapshot), so q136's five re-fusions re-rank it
-    * for free instead of re-scanning the corpus per grid row;
-    * `residents` are released once it is taken. */
-  private def denseLeg(members: DataFrame, queries: DataFrame,
-      rule: Candidates, residents: DataFrame*): DataFrame =
-    snapshotAndFree(
-      cosineServe(members, queries, rule, 6, HybridLegK)
-        .select(col("query_id"), col("vec_id").as("doc_id"),
-          col("rk").as("drk")),
-      residents: _*)
+    * for free instead of re-scanning the corpus per grid row. */
+  private def denseLeg(r: Residents, members: DataFrame, queries: DataFrame,
+      rule: Candidates): DataFrame =
+    r.snapshot(cosineServe(members, queries, rule, 6, HybridLegK)
+      .select(col("query_id"), col("vec_id").as("doc_id"), col("rk").as("drk")))
 
   /** Run two INDEPENDENT derivations concurrently (guide §2.6:
     * actions are only sequential because the driver calls them
@@ -1365,27 +1346,24 @@ object Pipeline {
     * first job's stage tails leave idle). Results and all Spark state
     * are unaffected: the thunks share no relation except persisted
     * ones, whose concurrent materialization the block manager
-    * serializes per block. Exceptions from either side propagate. */
-  private def par2[A, B](fa: => A, fb: => B): (A, B) = {
+    * serializes per block. Returns only once BOTH sides have finished,
+    * even when one fails — a caller's scope then never releases a
+    * relation a still-running side reads, nor drops a table under it —
+    * and then rethrows the first failure (`fa`'s before `fb`'s, the
+    * other added as suppressed). */
+  private[operators] def par2[A, B](fa: => A, fb: => B): (A, B) = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val f = Future(fa)
-    val b = fb
-    (Await.result(f, Duration.Inf), b)
-  }
-
-  /** Collect a BOUNDED relation into a local snapshot, release the
-    * given resident relations, and return the snapshot as a
-    * LocalRelation DataFrame — the annRecallSweep discipline as a
-    * helper. Callers must only pass relations whose row count is
-    * bounded by construction (legK·|queries|, ≤|lang| reports…). */
-  private def snapshotAndFree(bounded: DataFrame,
-      residents: DataFrame*): DataFrame = {
-    val snapshot = bounded.collect()
-    residents.foreach(_.unpersist(blocking = false))
-    bounded.sparkSession.createDataFrame(
-      java.util.Arrays.asList(snapshot: _*), bounded.schema)
+    import scala.util.{Failure, Success, Try}
+    val f = Future(fa)(ExecutionContext.global)
+    val b = Try(fb)
+    (Await.ready(f, Duration.Inf).value.get, b) match {
+      case (Success(x), Success(y)) => (x, y)
+      case (a, _) =>
+        val errs = Seq(a, b).collect { case Failure(e) => e }
+        errs.tail.foreach(errs.head.addSuppressed)
+        throw errs.head
+    }
   }
 
   /** The at-rest hybrid serve for ANY query relation `(query_id,
@@ -1404,8 +1382,8 @@ object Pipeline {
     // every measured scale (PLANS §r20); either setting is
     // row-identical for the top-k, so no oracle row depends on it
     // r21: overlap the two independent leg pipelines (guide §2.6)
-    val (sparse, dense) = par2(
-      sparseLegAdaptive(queries, spark.table(inv),
+    val (sparse, dense) = Residents { r => par2(
+      sparseLegAdaptive(r, queries, spark.table(inv),
         spark.table(inv + "_stats"), maxScorePrune),
       // the dense leg's production form: the candidate set is
       // IVF-pruned, so a true neighbour outside the probed clusters is
@@ -1413,10 +1391,10 @@ object Pipeline {
       // assignment lands EXTERNAL query vectors exactly where the
       // build would have put them, so a corpus vector re-queried under
       // a novel id probes its own home cluster
-      denseLeg(spark.table(idx),
+      denseLeg(r, spark.table(idx),
         routeThroughIndex(spark.table(idx + "_routing"),
           queries.select(col("query_id"), col("qe")), "qe"),
-        InClusters(probeRadius)))
+        InClusters(probeRadius))) }
     // the at-rest dense corpus membership IS the index member list
     if (coverage)
       rrfFuseCoverage(sparse, dense, spark.table(idx).select(col("vec_id")))
@@ -1581,12 +1559,12 @@ object Pipeline {
     * twin-lookup join per method and three 1-row aggregates. Like
     * q114's exact top-5, the planted-twin audit is the OFFLINE
     * harness — run on a seeded sample against the production index. */
-  def q135RetrievalEval(spark: SparkSession, dir: String): DataFrame = {
-    val (queries, dPlant, ePlant) = retrievalEvalFixture(spark, dir)
+  def q135RetrievalEval(spark: SparkSession, dir: String): DataFrame = Residents { r =>
+    val (queries, dPlant, ePlant) = retrievalEvalFixture(r, spark, dir)
     // the legs come back as bounded local snapshots (legK·|panel|);
     // r21: they are independent pipelines — overlap them (guide §2.6)
     val (sparse, dense) = par2(
-      sparseLeg(queries, dPlant), denseLeg(ePlant, queries, AllPairs))
+      sparseLeg(r, queries, dPlant), denseLeg(r, ePlant, queries, AllPairs))
     val fused = rrfFuse(sparse, dense)
     def evalMethod(rel: DataFrame, rankName: String, method: String,
         depth: Int): DataFrame =
@@ -1597,8 +1575,8 @@ object Pipeline {
       .unionByName(evalMethod(dense, "drk", "dense", HybridLegK))
       .unionByName(evalMethod(fused, "rk", "hybrid", HybridTopK))
       .orderBy(col("method"))
-    // 3-row report: snapshot, release the fixture's query panel
-    snapshotAndFree(out, queries)
+    // 3-row report: snapshot, so the fixture's query panel can go
+    r.snapshot(out)
   }
 
   /** The evaluation QUERY PANEL is bounded: the first
@@ -1617,8 +1595,8 @@ object Pipeline {
     * id+10^6, embedding twins (the q51 ±0.2% perturbation) only at
     * the %99 subset — the deliberate modality-coverage asymmetry the
     * eval measures. */
-  private def retrievalEvalFixture(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame) = {
+  private def retrievalEvalFixture(r: Residents, spark: SparkSession,
+      dir: String): (DataFrame, DataFrame, DataFrame) = {
     val d0 = docs(spark, dir).select(col("doc_id"), col("text"))
     val dPlant = d0
       .unionByName(d0.filter(col("doc_id") % 33 === 0)
@@ -1638,12 +1616,11 @@ object Pipeline {
           x.cast("double") * (lit(1.0) + lit(0.002) * ((col("vec_id") + i) % 3 - 1))).as("e"))
       .select((col("vec_id") + 1000000L).as("vec_id"), col("e"))
     val ePlant = base.unionByName(pert)
-    val queries = d0
+    val queries = r.persist(d0
       .filter(col("doc_id") % 33 === 0 && col("doc_id") < 33L * EvalPanelCap)
       .select(col("doc_id").as("query_id"), col("text"))
       .join(base.select(col("vec_id").as("query_id"), col("e").as("qe")),
-        "query_id")
-      .persist(NarrowCacheLevel)
+        "query_id"), NarrowCacheLevel)
     // r22: materialize the panel BEFORE the callers' par2 legs — a
     // lazily-persisted relation referenced by two concurrent jobs runs
     // its docs∩embeddings build twice (the block manager keeps one
@@ -1662,21 +1639,20 @@ object Pipeline {
     * EVAL-side complement of q114's recall-per-candidate table (q114
     * prices pruning against the exact top-5; this prices it against a
     * task: find the planted twin). */
-  def q139PrunedEval(spark: SparkSession, dir: String): DataFrame = {
-    val (queries, dPlant, ePlant) = retrievalEvalFixture(spark, dir)
+  def q139PrunedEval(spark: SparkSession, dir: String): DataFrame = Residents { r =>
+    val (queries, dPlant, ePlant) = retrievalEvalFixture(r, spark, dir)
     // r21: the sparse leg and the IVF-pruned dense pipeline (members
     // build + leg snapshot) are independent — overlap them (§2.6)
-    val (sparse, denseP) = par2(sparseLeg(queries, dPlant), {
-      val members = mapSideFineClusters(ePlant,
-        labelCentroids(spark, dir), ClusterTargetOccupancy)
-        .persist(CacheLevel)
+    val (sparse, denseP) = par2(sparseLeg(r, queries, dPlant), {
+      val members = r.persist(mapSideFineClusters(ePlant,
+        labelCentroids(spark, dir), ClusterTargetOccupancy), CacheLevel)
       members.count()
-      denseLeg(members,
+      denseLeg(r, members,
         members.join(queries.select(col("query_id")),
             col("vec_id") === col("query_id"))
           .select(col("vec_id").as("query_id"), col("e").as("qe"),
             col("cluster"), col("mask")),
-        InClusters(1), members)
+        InClusters(1))
     })
     val fused = rrfFuse(sparse, denseP)
     def evalMethod(rel: DataFrame, rankName: String, method: String,
@@ -1687,7 +1663,7 @@ object Pipeline {
     val out = evalMethod(denseP, "drk", "dense_ivf", HybridLegK)
       .unionByName(evalMethod(fused, "rk", "hybrid_ivf", HybridTopK))
       .orderBy(col("method"))
-    snapshotAndFree(out, queries)
+    r.snapshot(out)
   }
 
   /** One-row twin-retrieval metrics of a ranked relation
@@ -1732,13 +1708,13 @@ object Pipeline {
     * top-10, hits@1, and integer micro-MRR — a deployment reads where
     * MRR peaks and fixes its weights there, exactly as q114 fixes
     * nprobe and q131 fixes the banding. */
-  def q136FusionWeights(spark: SparkSession, dir: String): DataFrame = {
-    val (queries, dPlant, ePlant) = retrievalEvalFixture(spark, dir)
+  def q136FusionWeights(spark: SparkSession, dir: String): DataFrame = Residents { r =>
+    val (queries, dPlant, ePlant) = retrievalEvalFixture(r, spark, dir)
     // legs are bounded local snapshots: the five grid rows re-rank
     // them for free — the knob costs |grid| re-ranks, not serves;
     // r21: the legs overlap (guide §2.6)
     val (sparse, dense) = par2(
-      sparseLeg(queries, dPlant), denseLeg(ePlant, queries, AllPairs))
+      sparseLeg(r, queries, dPlant), denseLeg(r, ePlant, queries, AllPairs))
     val rows = FusionWeights.map { case (ws, wd) =>
       twinEval(queries, rrfFuseWeighted(sparse, dense, ws, wd), "rk")
         .select(lit(ws).cast("int").as("w_sparse_q"),
@@ -1746,8 +1722,7 @@ object Pipeline {
           col("n_queries"), col("n_found"), col("hits_at_1"),
           col("mrr_micro"))
     }
-    val out = rows.reduce(_ unionByName _).orderBy(col("w_sparse_q").desc)
-    snapshotAndFree(out, queries)
+    r.snapshot(rows.reduce(_ unionByName _).orderBy(col("w_sparse_q").desc))
   }
 
   /** L3/L4 — COVERAGE-AWARE fusion graded by the known-item harness
@@ -1766,11 +1741,11 @@ object Pipeline {
     * asserted relationally in PipelineSpec. Scale posture: q135's
     * (bounded panel, snapshot legs, one extra corpus-ids semi-join
     * for the coverage flag). */
-  def q140CoverageFusion(spark: SparkSession, dir: String): DataFrame = {
-    val (queries, dPlant, ePlant) = retrievalEvalFixture(spark, dir)
+  def q140CoverageFusion(spark: SparkSession, dir: String): DataFrame = Residents { r =>
+    val (queries, dPlant, ePlant) = retrievalEvalFixture(r, spark, dir)
     // r21: the legs overlap (guide §2.6)
     val (sparse, dense) = par2(
-      sparseLeg(queries, dPlant), denseLeg(ePlant, queries, AllPairs))
+      sparseLeg(r, queries, dPlant), denseLeg(r, ePlant, queries, AllPairs))
     val plain = rrfFuse(sparse, dense)
     val cov = rrfFuseCoverage(sparse, dense, ePlant.select(col("vec_id")))
     def evalMethod(rel: DataFrame, method: String): DataFrame =
@@ -1779,10 +1754,9 @@ object Pipeline {
           lit(HybridTopK).cast("int").as("depth"),
           col("n_queries"), col("n_found"), col("hits_at_1"),
           col("mrr_micro"))
-    val out = evalMethod(cov, "hybrid_coverage")
+    r.snapshot(evalMethod(cov, "hybrid_coverage")
       .unionByName(evalMethod(plain, "hybrid_rrf"))
-      .orderBy(col("method"))
-    snapshotAndFree(out, queries)
+      .orderBy(col("method")))
   }
 
   /** Pipeline — duplicate-aware SOFT dedup weights: instead of
@@ -1806,7 +1780,7 @@ object Pipeline {
     * bounded label relation; the corpus-side join is one hash exchange
     * on doc_id and the rollup partial-aggregates map-side. */
   def q132SoftDedupWeights(spark: SparkSession, dir: String): DataFrame =
-    softWeightedDocs(spark, dir)
+    Residents { r => r.snapshot(softWeightedDocs(r, spark, dir)
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
         sum(when(col("csize") > 1, 1L).otherwise(0L)).as("n_weighted_down"),
@@ -1816,15 +1790,16 @@ object Pipeline {
         col("raw_tokens"), col("eff_tokens_micro"),
         round(col("eff_tokens_micro").cast("double") /
           (col("raw_tokens") * lit(1000000L)), 6).as("retention"))
-      .orderBy(col("lang"))
+      .orderBy(col("lang"))) }
 
   /** Per-document soft-dedup weight relation over the q50/q111
     * reinsertion corpus: `(doc_id, lang, n_tok, csize, eff_micro)`
     * with `eff_micro = (n_tok·10^6) div csize` — the ONE derivation
     * behind q132 (per-language mass report) and q134 (weighted budget
     * mix), so the report and the mix can never disagree about a
-    * document's weight. */
-  private def softWeightedDocs(spark: SparkSession, dir: String): DataFrame = {
+    * document's weight. It reads the component labels held in `r`. */
+  private def softWeightedDocs(r: Residents, spark: SparkSession,
+      dir: String): DataFrame = {
     val d = docs(spark, dir).select(col("doc_id"), col("lang"), col("text"))
     val corpus = d
       .unionByName(d.filter(col("doc_id") % 7 === 0)
@@ -1834,7 +1809,7 @@ object Pipeline {
           concat(col("text"), lit(" extra token tail")).as("text")))
     val edges = verifiedNearDupPairs(corpus.select(col("doc_id"), col("text")))
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-    val labels = Graph.connectedComponentsStar(edges)
+    val labels = Graph.connectedComponentsStar(r, edges)
     val sizes = labels.groupBy(col("label")).agg(count(lit(1)).as("csize"))
     val nodeSize = labels.join(sizes, "label")
       .select(col("node"), col("csize"))
@@ -1866,8 +1841,8 @@ object Pipeline {
     * q126's one broadcast-rate scan — the ≤|lang| totals collect
     * nothing; the only additions over q132 are two bounded
     * aggregates and the rate join. */
-  def q134WeightedBudgetMix(spark: SparkSession, dir: String): DataFrame = {
-    val w = softWeightedDocs(spark, dir).persist(NarrowCacheLevel)
+  def q134WeightedBudgetMix(spark: SparkSession, dir: String): DataFrame = Residents { r =>
+    val w = r.persist(softWeightedDocs(r, spark, dir), NarrowCacheLevel)
     w.count()
     val totals = w.groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs_l"), sum(col("n_tok")).as("raw_l"),
@@ -1886,7 +1861,8 @@ object Pipeline {
           .cast("long"))
       .select(col("lang"), col("n_docs_l"), col("raw_l"), col("eff_l"),
         col("rate_micro"))
-    val out = w.join(broadcast(rates), "lang")
+    // ≤|lang| report: snapshot, so the per-doc weight resident can go
+    r.snapshot(w.join(broadcast(rates), "lang")
       .withColumn("keep", mixKey(col("doc_id")) < col("rate_micro"))
       .groupBy(col("lang"))
       .agg(max(col("n_docs_l")).as("n_docs"),
@@ -1895,9 +1871,7 @@ object Pipeline {
         max(col("rate_micro")).as("rate_micro"),
         sum(when(col("keep"), 1L).otherwise(0L)).as("n_kept"),
         sum(when(col("keep"), col("eff_micro")).otherwise(0L)).as("eff_kept_micro"))
-      .orderBy(col("lang"))
-    // ≤|lang| report: snapshot, release the per-doc weight resident
-    snapshotAndFree(out, w)
+      .orderBy(col("lang")))
   }
 
   /** L2 — the LSH BANDING knob table: the q114/q128 recall/efficiency
@@ -2034,16 +2008,52 @@ object Pipeline {
         col("e.bsig").as("bsig"))
   }
 
-  private[operators] def bandingSweepOver(corpus: DataFrame,
-      configs: Seq[(Int, Int)]): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val base = shingleHashSets(corpus).persist(CacheLevel)
+  /** The MinHash sweeps' shared truth prelude over `corpus`, each
+    * stage persisted in `r` and materialized: the shingle-hash base,
+    * its 16-hash signatures, the exact ≥ 1/2-Jaccard truth pairs, and
+    * the truth count. */
+  private def minhashTruth(r: Residents, corpus: DataFrame)
+      : (DataFrame, DataFrame, DataFrame, Long) = {
+    val base = r.persist(shingleHashSets(corpus), CacheLevel)
     base.count()
-    val sigs = minhashSigs(base).persist(NarrowCacheLevel)
+    val sigs = r.persist(minhashSigs(base), NarrowCacheLevel)
     sigs.count()
-    val truth = exactHalfJaccardTruth(base).persist(NarrowCacheLevel)
-    val nTruth = truth.count()
+    val truth = r.persist(exactHalfJaccardTruth(base), NarrowCacheLevel)
+    (base, sigs, truth, truth.count())
+  }
+
+  /** A sweep's collected per-config aggregate `(tag: int, n1: long, …)`
+    * as tag → its counts; a config that produced no row reads as
+    * zeros. */
+  private def tally(agg: DataFrame): Int => IndexedSeq[Long] = {
+    val width = agg.schema.length - 1
+    val byTag = agg.collect()
+      .map(row => row.getInt(0) -> (1 to width).map(row.getLong)).toMap
+    tag => byTag.getOrElse(tag, IndexedSeq.fill(width)(0L))
+  }
+
+  /** `round(num / den, 6)` — a sweep report's derived share column. */
+  private def ratio(num: String, den: Column): Column =
+    round(col(num).cast("double") / den, 6)
+
+  /** The knob sweeps' shared report tail: one row per config — its int
+    * knob values under `knobs`, then its long counts under `counts` —
+    * projected to `cols` (the derived [[ratio]] columns among them),
+    * sorted by `order`, and snapshotted, so the report outlives the
+    * sweep's residents in `r`. */
+  private def sweepReport(r: Residents, spark: SparkSession,
+      knobs: Seq[String], counts: Seq[String], rows: Seq[(Seq[Int], Seq[Long])],
+      cols: Seq[Column], order: Column*): DataFrame = {
+    val schema = StructType(knobs.map(StructField(_, IntegerType, nullable = false)) ++
+      counts.map(StructField(_, LongType, nullable = false)))
+    val table = spark.createDataFrame(java.util.Arrays.asList(
+      rows.map { case (k, c) => Row.fromSeq(k ++ c) }: _*), schema)
+    r.snapshot(table.select(cols: _*).orderBy(order: _*))
+  }
+
+  private[operators] def bandingSweepOver(corpus: DataFrame,
+      configs: Seq[(Int, Int)]): DataFrame = Residents { r =>
+    val (_, sigs, truth, nTruth) = minhashTruth(r, corpus)
     // ALL configs in one pass (r21): md5-band-hashed buckets → distinct
     // candidate pairs per config → hits = candidates ∩ truth (truth is
     // exact, so the membership probe IS ≥ t verification; truth rows
@@ -2052,7 +2062,7 @@ object Pipeline {
     // one aggregation replaces 2 jobs × |configs|; per-config bucket
     // relations, candidate sets, and counts are unchanged.
     val bands = allConfigBands(sigs, configs)
-    val candAgg = bands.as("x").join(bands.as("y"),
+    val cand = tally(bands.as("x").join(bands.as("y"),
         col("x.cfg") === col("y.cfg") && col("x.b") === col("y.b") &&
           col("x.bsig") === col("y.bsig") &&
           col("x.doc_id") < col("y.doc_id"))
@@ -2061,24 +2071,18 @@ object Pipeline {
       .distinct()
       .join(truth.withColumn("hit", lit(1)), Seq("doc_a", "doc_b"), "left")
       .groupBy(col("cfg"))
-      .agg(count(lit(1)).as("n_cand"), count(col("hit")).as("n_hits"))
-      .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val rows = configs.zipWithIndex.map { case ((bC, r), ci) =>
-      val (nCand, nHits) = candAgg.getOrElse(ci, (0L, 0L))
-      (bC, r, nTruth, nCand, nHits)
-    }
-    base.unpersist(blocking = false)
-    sigs.unpersist(blocking = false)
-    truth.unpersist(blocking = false)
-    rows.toDF("bands", "rows_per_band", "n_truth", "n_candidates", "n_hits")
-      .select(col("bands").cast("int").as("bands"),
-        col("rows_per_band").cast("int").as("rows_per_band"),
-        col("n_truth"), col("n_candidates"), col("n_hits"),
-        round(col("n_hits").cast("double") / col("n_truth"), 6).as("recall"),
+      .agg(count(lit(1)).as("n_cand"), count(col("hit")).as("n_hits")))
+    sweepReport(r, corpus.sparkSession, Seq("bands", "rows_per_band"),
+      Seq("n_truth", "n_candidates", "n_hits"),
+      configs.zipWithIndex.map { case ((bC, rows), ci) =>
+        (Seq(bC, rows), nTruth +: cand(ci)) },
+      Seq(col("bands"), col("rows_per_band"), col("n_truth"),
+        col("n_candidates"), col("n_hits"),
+        ratio("n_hits", col("n_truth")).as("recall"),
         when(col("n_candidates") === 0, lit(0.0))
-          .otherwise(round(col("n_hits").cast("double") / col("n_candidates"), 6))
-          .as("candidate_precision"))
-      .orderBy(col("bands").desc, col("rows_per_band"))
+          .otherwise(ratio("n_hits", col("n_candidates")))
+          .as("candidate_precision")),
+      col("bands").desc, col("rows_per_band"))
   }
 
   /** The (bands, rowsPerBand) grid [[q147VerifiedGateSweep]] prices —
@@ -2203,28 +2207,23 @@ object Pipeline {
       // concurrently so each family's stage tails back-fill the
       // others' idle executors; within a family the append still
       // strictly follows its build. Same tables, same planted
-      // replay, same audit rows.
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: ExecutionContext = ExecutionContext.global
+      // replay, same audit rows. par2 returns only after all three
+      // finish, so the finally never drops a table a family still
+      // writes.
       val delta = e.filter(col("vec_id") % 17 === 0)
-      val families = Seq(
-        Future {
-          val (members, routing) = mapSideFineClustersWithRouting(e,
-            labelCentroids(spark, dir), ClusterTargetOccupancy)
-          Layout.writeIvfIndex(members, routing, ivf, Layout.indexBuckets(spark))
-          indexAppend(spark, ivf, delta)
-        },
-        Future {
-          buildPqIndex(e, pq)
-          pqIndexAppend(spark, pq, delta)
-        },
-        Future {
-          buildInvIndex(spark, inv, docs(spark, dir))
-          invIndexAppend(spark, inv,
-            docs(spark, dir).filter(col("doc_id") % 17 === 0))
-        })
-      families.foreach(Await.result(_, Duration.Inf))
+      par2({
+        val (members, routing) = mapSideFineClustersWithRouting(e,
+          labelCentroids(spark, dir), ClusterTargetOccupancy)
+        Layout.writeIvfIndex(members, routing, ivf, Layout.indexBuckets(spark))
+        indexAppend(spark, ivf, delta)
+      }, par2({
+        buildPqIndex(e, pq)
+        pqIndexAppend(spark, pq, delta)
+      }, {
+        buildInvIndex(spark, inv, docs(spark, dir))
+        invIndexAppend(spark, inv,
+          docs(spark, dir).filter(col("doc_id") % 17 === 0))
+      }))
       val audit = indexDuplicateAudit(spark, ivf, Seq("vec_id"),
           "ivf_members")
         .unionByName(indexDuplicateAudit(spark, pq, Seq("vec_id"),
@@ -2246,15 +2245,8 @@ object Pipeline {
     * (the spec drives it with a constructed fixture and reconciles
     * the ∞-cap rows against [[bandingSweepOver]]). */
   private[operators] def bucketCapSweepOver(corpus: DataFrame,
-      configs: Seq[(Int, Int)], caps: Seq[Int]): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val base = shingleHashSets(corpus).persist(CacheLevel)
-    base.count()
-    val sigs = minhashSigs(base).persist(NarrowCacheLevel)
-    sigs.count()
-    val truth = exactHalfJaccardTruth(base).persist(NarrowCacheLevel)
-    val nTruth = truth.count()
+      configs: Seq[(Int, Int)], caps: Seq[Int]): DataFrame = Residents { r =>
+    val (base, sigs, truth, nTruth) = minhashTruth(r, corpus)
     val lens = base.select(col("doc_id"), size(col("hs")).as("n_hs"))
     // ALL configs in one band relation (r21, the bandingSweepOver
     // merge): `cfg` joins the window partition keys, so rn/occ per
@@ -2263,13 +2255,12 @@ object Pipeline {
     // instead of (2 + 2·|caps|) per config. Values are unchanged: the
     // filter-then-count and filter-then-agg forms become count/sum of
     // the same predicates.
-    val bands = allConfigBands(sigs, configs)
+    val bands = r.persist(allConfigBands(sigs, configs)
       .withColumn("rn", row_number().over(Window
         .partitionBy(col("cfg"), col("b"), col("bsig"))
         .orderBy(col("doc_id"))))
       .withColumn("occ", count(lit(1)).over(Window
-        .partitionBy(col("cfg"), col("b"), col("bsig"))))
-      .persist(NarrowCacheLevel)
+        .partitionBy(col("cfg"), col("b"), col("bsig")))), NarrowCacheLevel)
     bands.count()
     // per candidate pair: the MINIMUM arrival distance over its
     // shared buckets (any-band serve, exactly the gate's OR)
@@ -2286,47 +2277,30 @@ object Pipeline {
       case (cap, i) =>
         sum(when(col("min_dist") <= cap, 1L).otherwise(0L)).as(s"serv$i")
     }
-    val hitRows = pairDist.join(truth, Seq("doc_a", "doc_b"))
-      .groupBy(col("cfg")).agg(servAggs.head, servAggs.tail: _*)
-      .collect().map(r => r.getInt(0) ->
-        (r.getLong(1), caps.indices.map(i => r.getLong(2 + i)))).toMap
+    val hits = tally(pairDist.join(truth, Seq("doc_a", "doc_b"))
+      .groupBy(col("cfg")).agg(servAggs.head, servAggs.tail: _*))
     val stateAggs = caps.zipWithIndex.flatMap { case (cap, i) =>
       val resident = col("rn") > col("occ") - cap.toLong
       Seq(sum(when(resident, 1L).otherwise(0L)).as(s"entries$i"),
         (sum(when(resident, col("n_hs")).otherwise(0L)) * 8L).as(s"bytes$i"))
     }
-    val stateRows = bands.join(lens, "doc_id")
-      .groupBy(col("cfg")).agg(stateAggs.head, stateAggs.tail: _*)
-      .collect().map(r => r.getInt(0) ->
-        caps.indices.map(i => (r.getLong(1 + 2 * i), r.getLong(2 + 2 * i))))
-      .toMap
-    val rows = configs.zipWithIndex.flatMap { case ((bC, r), ci) =>
-      val (nHits, servs) =
-        hitRows.getOrElse(ci, (0L, caps.indices.map(_ => 0L)))
-      val states =
-        stateRows.getOrElse(ci, caps.indices.map(_ => (0L, 0L)))
-      caps.zipWithIndex.map { case (cap, i) =>
-        val nServable = servs(i)
-        val (entries, bytes) = states(i)
-        (bC, r, cap, nTruth, nHits, nServable, nHits - nServable,
-          entries, bytes)
-      }
-    }
-    bands.unpersist(blocking = false)
-    base.unpersist(blocking = false)
-    sigs.unpersist(blocking = false)
-    truth.unpersist(blocking = false)
-    rows.toDF("bands", "rows_per_band", "cap", "n_truth", "n_hits",
-        "n_servable", "n_cap_lost", "state_entries", "state_bytes")
-      .select(col("bands").cast("int").as("bands"),
-        col("rows_per_band").cast("int").as("rows_per_band"),
-        col("cap").cast("int").as("cap"),
-        col("n_truth"), col("n_hits"), col("n_servable"),
-        col("n_cap_lost"),
-        round(col("n_servable").cast("double") / col("n_truth"), 6)
-          .as("recall_at_cap"),
-        col("state_entries"), col("state_bytes"))
-      .orderBy(col("bands"), col("rows_per_band"), col("cap"))
+    val states = tally(bands.join(lens, "doc_id")
+      .groupBy(col("cfg")).agg(stateAggs.head, stateAggs.tail: _*))
+    sweepReport(r, corpus.sparkSession, Seq("bands", "rows_per_band", "cap"),
+      Seq("n_truth", "n_hits", "n_servable", "n_cap_lost", "state_entries",
+        "state_bytes"),
+      configs.zipWithIndex.flatMap { case ((bC, rows), ci) =>
+        val (h, st) = (hits(ci), states(ci))
+        caps.zipWithIndex.map { case (cap, i) =>
+          (Seq(bC, rows, cap), Seq(nTruth, h(0), h(1 + i), h(0) - h(1 + i),
+            st(2 * i), st(2 * i + 1)))
+        }
+      },
+      Seq(col("bands"), col("rows_per_band"), col("cap"), col("n_truth"),
+        col("n_hits"), col("n_servable"), col("n_cap_lost"),
+        ratio("n_servable", col("n_truth")).as("recall_at_cap"),
+        col("state_entries"), col("state_bytes")),
+      col("bands"), col("rows_per_band"), col("cap"))
   }
 
   /** Assign rows a `cluster` (and `mask`) by the index's STORED
@@ -2944,7 +2918,7 @@ object Pipeline {
     * [[Graph.connectedComponentsStar]] (alternating large-star /
     * small-star, Kiveris et al., O(log² n) rounds regardless of
     * diameter — equivalence with union-find asserted in GraphSpec). */
-  def q50DedupClusters(spark: SparkSession, dir: String): DataFrame = {
+  def q50DedupClusters(spark: SparkSession, dir: String): DataFrame = Residents { r =>
     val d = docs(spark, dir).select(col("doc_id"), col("text"))
     val corpus = d
       .unionByName(d.filter(col("doc_id") % 7 === 0)
@@ -2962,13 +2936,12 @@ object Pipeline {
     // as hash(src) the rounds' joins reuse that partitioning and
     // exchange only the (much smaller per round) labels side — one
     // edge exchange TOTAL, paid at cache fill.
-    val sym = verifiedNearDupPairs(corpus)
+    val sym = r.persist(verifiedNearDupPairs(corpus)
       .select(explode(array(
         struct(col("doc_a").as("src"), col("doc_b").as("dst")),
         struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .repartition(col("src"))
-      .persist(NarrowCacheLevel)
+      .repartition(col("src")), NarrowCacheLevel)
     // Each round: one hash-shuffle join + one partial-aggregated
     // groupBy. The node's OWN previous label rides through the union
     // (tagged), so the convergence probe is a filter over the round's
@@ -2976,54 +2949,44 @@ object Pipeline {
     // (persist() truncates recompute but not the logical plan, which
     // otherwise grows per round and OOMs analysis) with deterministic
     // release of the superseded round's blocks (GC-dependent cleanup
-    // would pin O(rounds) label copies); the CheckpointScope's finally
-    // frees whatever is still live if a round throws.
-    val scope = new Graph.CheckpointScope
-    try {
-      var (labels, freeLabels) = scope.checkpoint(
-        sym.select(col("src").as("node")).distinct()
-          .select(col("node"), col("node").as("label")))
-      var changed = 1L
-      var rounds = 0
-      // near-dup graphs are shallow (original ↔ copies, diameter ~3);
-      // 20 rounds is gross headroom, and NON-convergence must throw —
-      // emitting the partial labels would silently fuse/split clusters
-      val maxRounds = 20
-      while (changed > 0 && rounds < maxRounds) {
-        val (prop, freeProp) = scope.checkpoint(
-          sym.join(labels, col("src") === col("node"))
-            .select(col("dst").as("node"), col("label"), lit(false).as("own"))
-            .union(labels.select(col("node"), col("label"), lit(true).as("own")))
-            .groupBy(col("node"))
-            .agg(min(col("label")).as("label"),
-              min(when(col("own"), col("label"))).as("prev")))
-        changed = prop.filter(col("label") =!= col("prev")).count()
-        freeLabels()
-        labels = prop.select(col("node"), col("label"))
-        freeLabels = freeProp
-        rounds += 1
-      }
-      if (changed > 0)
-        throw new IllegalStateException(
-          s"q50 label propagation did not converge in $maxRounds rounds " +
-            "(diameter exceeds the shallow near-dup assumption) — use " +
-            "Graph.connectedComponentsStar for deep graphs")
-      // materialize the (tiny) histogram and DETACH it so the final
-      // labels round and the edge cache can be released before
-      // returning — checkpoint blocks bypass the CacheManager, so
-      // nothing else would ever reclaim them
-      val (out, keep) = scope.checkpoint(labels
-        .groupBy(col("label")).agg(count(lit(1)).as("cluster_size"))
-        .groupBy(col("cluster_size"))
-        .agg(count(lit(1)).as("n_clusters"),
-          sum(col("cluster_size")).as("n_docs"))
-        .orderBy(col("cluster_size")))
-      scope.detach(keep)
-      out
-    } finally {
-      scope.releaseAll()
-      sym.unpersist(blocking = false)
+    // would pin O(rounds) label copies). A round's checkpoint carries
+    // `prev` beside (node, label); every reader selects by name.
+    var labels = r.checkpoint(
+      sym.select(col("src").as("node")).distinct()
+        .select(col("node"), col("node").as("label")))
+    var changed = 1L
+    var rounds = 0
+    // near-dup graphs are shallow (original ↔ copies, diameter ~3);
+    // 20 rounds is gross headroom, and NON-convergence must throw —
+    // emitting the partial labels would silently fuse/split clusters
+    val maxRounds = 20
+    while (changed > 0 && rounds < maxRounds) {
+      val prop = r.checkpoint(
+        sym.join(labels, col("src") === col("node"))
+          .select(col("dst").as("node"), col("label"), lit(false).as("own"))
+          .union(labels.select(col("node"), col("label"), lit(true).as("own")))
+          .groupBy(col("node"))
+          .agg(min(col("label")).as("label"),
+            min(when(col("own"), col("label"))).as("prev")))
+      changed = prop.filter(col("label") =!= col("prev")).count()
+      r.release(labels)
+      labels = prop
+      rounds += 1
     }
+    if (changed > 0)
+      throw new IllegalStateException(
+        s"q50 label propagation did not converge in $maxRounds rounds " +
+          "(diameter exceeds the shallow near-dup assumption) — use " +
+          "Graph.connectedComponentsStar for deep graphs")
+    // the (tiny) histogram is snapshotted, so the final labels round and
+    // the edge cache go with the scope — checkpoint blocks bypass the
+    // CacheManager, so nothing else would ever reclaim them
+    r.snapshot(labels
+      .groupBy(col("label")).agg(count(lit(1)).as("cluster_size"))
+      .groupBy(col("cluster_size"))
+      .agg(count(lit(1)).as("n_clusters"),
+        sum(col("cluster_size")).as("n_docs"))
+      .orderBy(col("cluster_size")))
   }
 
   /** Shortlist size for [[q55QuantizedAnn]]'s approximate first pass —
@@ -4153,7 +4116,7 @@ object Pipeline {
     *
     * LINEAGE IS TRUNCATED at one iteration (VERDICT r12 §next-1a,
     * tightened): every iteration eagerly local-checkpoints its tiny
-    * |nodes|-row rank relation ([[Graph.checkpointRound]], the q50
+    * |nodes|-row rank relation ([[Residents.checkpoint]], the q50
     * discipline), so the next iteration's logical plan starts from a
     * `LogicalRDD` leaf. This matters doubly here because each
     * iteration references the rank relation TWICE (the contribution
@@ -4168,25 +4131,20 @@ object Pipeline {
     * six unrolled CTEs keep hash-matching with no lockstep edit. (A
     * nonzero epsilon would NOT have this property, which is why the
     * exit threshold is the literal 0.) */
-  def q81PageRank(spark: SparkSession, dir: String): DataFrame = {
-    val (top, _, release) = pageRankReport(spark, dir)
-    // 20 rows: snapshot and release the edge cache (q60/q76 discipline)
-    val snapshot = top.collect()
-    release()
-    spark.createDataFrame(
-      java.util.Arrays.asList(snapshot: _*), top.schema)
-  }
+  def q81PageRank(spark: SparkSession, dir: String): DataFrame =
+    // 20 rows: snapshot, so the edge cache goes with the scope
+    Residents { r => r.snapshot(pageRankReport(r, spark, dir)._1) }
 
-  /** The live q81 plan plus its cache release — split out so the spec
-    * can count the iteration exchanges (the [[duplicateSpansReport]]
-    * shape). The middle element is the PRE-checkpoint per-iteration
-    * plans (one per EXECUTED iteration — fewer than 6 when the
-    * integer fixed point lands early), exposed so the spec can verify
-    * the zero-exchange budget of every executed segment. They stay
-    * re-runnable until the release: each reads only the edge cache
-    * and the previous round's checkpoint. */
-  private[graft] def pageRankReport(spark: SparkSession, dir: String)
-      : (DataFrame, Seq[DataFrame], () => Unit) = {
+  /** The live q81 plan over residents held in `r` — split out so the
+    * spec can count the iteration exchanges (the
+    * [[duplicateSpansReport]] shape). The second element is the
+    * PRE-checkpoint per-iteration plans (one per EXECUTED iteration —
+    * fewer than 6 when the integer fixed point lands early), exposed so
+    * the spec can verify the zero-exchange budget of every executed
+    * segment. They stay re-runnable until `r` ends: each reads only
+    * the edge cache and the previous round's checkpoint. */
+  private[graft] def pageRankReport(r: Residents, spark: SparkSession,
+      dir: String): (DataFrame, Seq[DataFrame]) = {
     val iterations = 6
     val pairs = Tables.orders(spark, dir)
       .join(Tables.lineitem(spark, dir),
@@ -4201,16 +4159,15 @@ object Pipeline {
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
     // dst-partitioned: the one cache layout that makes every
     // iteration's groupBy(dst) exchange-free (see scaladoc above)
-    val edges = sym.repartition(col("dst")).persist(NarrowCacheLevel)
+    val edges = r.persist(sym.repartition(col("dst")), NarrowCacheLevel)
     edges.count()
-    val scope = new Graph.CheckpointScope
     // SYMMETRIC graph ⇒ out-degree = in-degree, so the degree rollup
     // groups by dst and rides the cache partitioning — no exchange
     val deg = edges.groupBy(col("dst")).agg(count(lit(1)).as("d"))
     // the rank relation carries its degree: (node, d, r) — so each
     // iteration's contribution is computed on |nodes| rows before the
     // broadcast, and the re-attach of d is one more tiny broadcast
-    var (cur, _) = scope.checkpoint(
+    var cur = r.checkpoint(
       deg.select(col("dst").as("node"), col("d"))
         .withColumn("r", lit(1000000L)))
     val mids = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
@@ -4229,7 +4186,7 @@ object Pipeline {
       mids += next
       // eager checkpoint: materializes the round AND truncates its
       // logical lineage to a LogicalRDD leaf (scaladoc above)
-      val (cp, _) = scope.checkpoint(next)
+      val cp = r.checkpoint(next)
       val probe = cp.agg(max(abs(col("r") - col("r0")))).collect()(0)
       converged = probe.isNullAt(0) || probe.getLong(0) == 0L
       cur = cp
@@ -4239,11 +4196,7 @@ object Pipeline {
       .limit(20)
       .withColumn("is_supplier", (col("node") % 2 === 1))
       .select(col("node"), col("r"), col("is_supplier"))
-    (top, mids.toSeq, () => {
-      edges.unpersist(blocking = false)
-      scope.releaseAll()
-      ()
-    })
+    (top, mids.toSeq)
   }
 
   // --------------------------------------- q80: random-projection JL map
@@ -4377,23 +4330,17 @@ object Pipeline {
     * there is no small side to Bloom — self-dedup is inherently
     * corpus × corpus — so the honest plan bounds bytes (digests, not
     * grams) rather than rows. */
-  def q76DuplicateSpans(spark: SparkSession, dir: String): DataFrame = {
-    val (out, release) = duplicateSpansReport(spark, dir)
-    // ≤ |lang| rows: snapshot into a local relation and release the
-    // narrow gram cache before returning (q60's bounded-collect
-    // discipline — no persisted relation outlives the query)
-    val materialized = out.collect()
-    release()
-    spark.createDataFrame(
-      java.util.Arrays.asList(materialized: _*), out.schema)
-  }
+  def q76DuplicateSpans(spark: SparkSession, dir: String): DataFrame =
+    // ≤ |lang| rows: snapshot into a local relation, so the narrow gram
+    // cache goes with the scope (q60's bounded-collect discipline — no
+    // persisted relation outlives the query)
+    Residents { r => r.snapshot(duplicateSpansReport(r, spark, dir)) }
 
-  /** The live q76 plan plus its cache release — split out so the spec
-    * can count the plan's exchanges before the snapshot collapses it
-    * to a local relation (the [[corpusScaledClustersWithRelease]]
-    * shape). */
-  private[graft] def duplicateSpansReport(
-      spark: SparkSession, dir: String): (DataFrame, () => Unit) = {
+  /** The live q76 plan over the gram cache held in `r` — split out so
+    * the spec can count the plan's exchanges before the snapshot
+    * collapses it to a local relation. */
+  private[graft] def duplicateSpansReport(r: Residents,
+      spark: SparkSession, dir: String): DataFrame = {
     val k = 8
     val base = docs(spark, dir).select(col("doc_id"), col("lang"),
       when(col("doc_id") % 5 === 0, concat_ws(" ", col("text"), lit(BoilerSpan)))
@@ -4401,7 +4348,7 @@ object Pipeline {
     val corpus = base.unionByName(
       base.filter(col("doc_id") % 13 === 0)
         .withColumn("doc_id", col("doc_id") + 2000000L))
-    val positions = corpus
+    val positions = r.persist(corpus
       .select(col("doc_id"), col("lang"),
         posexplode(wordShingleMultiset(split(col("text"), " "), k))
           .as(Seq("pos", "gram")))
@@ -4411,8 +4358,7 @@ object Pipeline {
       // corpus grams (the streaming-dedup lesson); at 60 bits the
       // spurious-mark rate stays ~1e-6 per gram even at 10^13 grams
       .select(col("doc_id"), col("lang"), col("pos").cast("long").as("pos"),
-        portableHash(col("gram")).as("h"))
-      .persist(NarrowCacheLevel)
+        portableHash(col("gram")).as("h")), NarrowCacheLevel)
     val dupGrams = positions.groupBy(col("h"))
       .agg(count(lit(1)).as("n")).filter(col("n") > 1).select(col("h"))
     val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
@@ -4436,7 +4382,7 @@ object Pipeline {
     val totals = corpus.groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
         sum(size(split(col("text"), " ")).cast("long")).as("n_tokens"))
-    val out = totals.join(perLang, Seq("lang"), "left")
+    totals.join(perLang, Seq("lang"), "left")
       .select(col("lang"), col("n_docs"),
         coalesce(col("n_dup_docs"), lit(0L)).as("n_dup_docs"),
         coalesce(col("n_spans"), lit(0L)).as("n_spans"),
@@ -4445,7 +4391,6 @@ object Pipeline {
         round(coalesce(col("dup_tokens"), lit(0L)).cast("double") /
           col("n_tokens"), 6).as("dup_token_pct"))
       .orderBy(col("lang"))
-    (out, () => { positions.unpersist(blocking = false); () })
   }
 
   // --------------------------------------- q100: BPE merge learning
@@ -4547,10 +4492,8 @@ object Pipeline {
       dir: String): String = {
     val tbl = bankedTable("bpe", dir)
     ensureCurrent(spark, tbl, corpusFingerprint(docs(spark, dir))) {
-      val (rounds, _, release) = bpeLearnRounds(docs(spark, dir)
-        .select(col("doc_id"), split(col("text"), " ").as("toks")))
-      release()
-      Layout.writeMerges(spark, rounds, tbl)
+      Layout.writeMerges(spark, bpeLearnRounds(docs(spark, dir)
+        .select(col("doc_id"), split(col("text"), " ").as("toks"))), tbl)
     }
     tbl
   }
@@ -4570,14 +4513,13 @@ object Pipeline {
   def bpeApplyMerges(toks: Column, merges: Seq[(String, String)]): Column =
     graft.expressions.BpeFunctions.bpeApplyAll(toks, merges)
 
-  /** The q100 learn loop over a `(doc_id, toks)` relation: returns the
-    * per-round merge table, the FINAL rewritten token relation (still
-    * persisted — callers aggregate it, then call the release), and the
-    * release. Shared by [[q100BpeMerges]] (the merge table) and
-    * [[q104TokenizerFertility]] (the final corpus). */
+  /** The q100 learn loop over a `(doc_id, toks)` relation: the
+    * per-round merge table `(it, lhs, rhs, pair_count, tokens_after)`.
+    * Each round's rewrite releases its predecessor; the last goes with
+    * the loop's own scope. */
   private[graft] def bpeLearnRounds(base: DataFrame)
-      : (Seq[(Int, String, String, Long, Long)], DataFrame, () => Unit) = {
-    var cur = base.persist(CacheLevel)
+      : Seq[(Int, String, String, Long, Long)] = Residents { r =>
+    var cur = r.persist(base, CacheLevel)
     cur.count()
     val rows = Seq.newBuilder[(Int, String, String, Long, Long)]
     var exhausted = false
@@ -4592,20 +4534,18 @@ object Pipeline {
         .limit(1).collect().headOption match {
         case None => exhausted = true
         case Some(top) =>
-          val (l, r, n) = (top.getString(0), top.getString(1), top.getLong(2))
-          val next = cur
+          val (lhs, rhs, n) = (top.getString(0), top.getString(1), top.getLong(2))
+          val next = r.persist(cur
             .select(col("doc_id"),
-              bpeApplyMerges(col("toks"), Seq((l, r))).as("toks"))
-            .persist(CacheLevel)
+              bpeApplyMerges(col("toks"), Seq((lhs, rhs))).as("toks")), CacheLevel)
           val after =
             next.agg(sum(size(col("toks")).cast("long"))).collect()(0).getLong(0)
-          cur.unpersist(blocking = false)
+          r.release(cur)
           cur = next
-          rows += ((it, l, r, n, after))
+          rows += ((it, lhs, rhs, n, after))
       }
     }
-    val last = cur
-    (rows.result(), last, () => { last.unpersist(blocking = false); () })
+    rows.result()
   }
 
   /** L4 — per-language tokenizer fertility: how well the q100-learned
@@ -5381,7 +5321,13 @@ object Pipeline {
           concat(col("text"), lit(" extra token tail")).as("text")))
     val edges = verifiedNearDupPairs(corpus)
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-    val labels = Graph.connectedComponentsStar(edges)
+    // the labels outlive the scope: the result reads them lazily, and
+    // the ContextCleaner reclaims them once the result is dropped
+    val labels = Residents { r =>
+      val l = Graph.connectedComponentsStar(r, edges)
+      r.detach(l)
+      l
+    }
     val scored = corpus.select(col("doc_id").as("node"),
       length(col("text")).cast("long").as("len"))
     labels.join(scored, "node")
@@ -5456,7 +5402,7 @@ object Pipeline {
     * rollup; the doc→source side tables join the pair relation on its
     * natural keys — broadcastable whenever the near-dup pair relation
     * isn't tiny anyway. */
-  def q102SourceDupMatrix(spark: SparkSession, dir: String): DataFrame = {
+  def q102SourceDupMatrix(spark: SparkSession, dir: String): DataFrame = Residents { r =>
     val d = docs(spark, dir).select(col("doc_id"), col("text"), col("source"))
     // bounded source-rotation relation (≤|sources| rows, broadcast)
     val byName = Window.orderBy(col("source"))
@@ -5478,9 +5424,10 @@ object Pipeline {
     // narrow (doc_id, source) map persisted ONCE and referenced by both
     // pair sides — without it each side re-derives the corpus union
     // (two more full text scans at 100 TB for two fixed-width columns)
-    val side = corpus.select(col("doc_id"), col("source"))
-      .persist(NarrowCacheLevel)
-    val out = pairs
+    val side = r.persist(corpus.select(col("doc_id"), col("source")),
+      NarrowCacheLevel)
+    // ≤|src|²-row result: snapshot, so the side map goes with the scope
+    r.snapshot(pairs
       .join(side.select(col("doc_id").as("doc_a"), col("source").as("sa")), "doc_a")
       .join(side.select(col("doc_id").as("doc_b"), col("source").as("sb")), "doc_b")
       .select(least(col("sa"), col("sb")).as("source_a"),
@@ -5491,12 +5438,7 @@ object Pipeline {
         sum(col("j4")).as("sum_jaccard_e4"))
       .withColumn("avg_jaccard",
         round(col("sum_jaccard_e4") / 10000.0 / col("n_pairs"), 6))
-      .orderBy(col("source_a"), col("source_b"))
-    // ≤|src|²-row result: snapshot, then release the side map
-    val snapshot = out.collect()
-    side.unpersist(blocking = false)
-    spark.createDataFrame(
-      java.util.Arrays.asList(snapshot: _*), out.schema)
+      .orderBy(col("source_a"), col("source_b")))
   }
 
   // ------------------------------------------------------------ oracle SQL
@@ -5649,16 +5591,16 @@ object Pipeline {
     * side is Bloom-pruned map-side before the decontam semi-join (the
     * q49 discipline); the final report is six ≤|lang|-row aggregates
     * unioned. */
-  def q113CurationFunnel(spark: SparkSession, dir: String): DataFrame = {
+  def q113CurationFunnel(spark: SparkSession, dir: String): DataFrame = Residents { r =>
     val d = docs(spark, dir).select(col("doc_id"), col("lang"), col("text"))
-    val corpus = d
+    val corpus = r.persist(d
       .unionByName(d.filter(col("doc_id") % 7 === 0)
         .select((col("doc_id") + 1000000L).as("doc_id"), col("lang"),
           col("text")))
       .unionByName(d.filter(col("doc_id") % 11 === 0)
         .select((col("doc_id") + 2000000L).as("doc_id"), col("lang"),
-          concat(col("text"), lit(" extra token tail")).as("text")))
-      .persist(CacheLevel)
+          concat(col("text"), lit(" extra token tail")).as("text"))),
+      CacheLevel)
     corpus.count()
     // stage 1 — quality gate (map-side verdict, no exchange)
     val s1 = corpus.filter(qualityVerdict(col("text")) === "keep")
@@ -5667,9 +5609,8 @@ object Pipeline {
     val byDigest = Window.partitionBy(
       md5(graft.functions.TextFunctions.canonicalText(col("text"))
         .cast("binary")))
-    val s2 = s1.withColumn("min_id", min(col("doc_id")).over(byDigest))
-      .filter(col("doc_id") === col("min_id")).drop("min_id")
-      .persist(CacheLevel)
+    val s2 = r.persist(s1.withColumn("min_id", min(col("doc_id")).over(byDigest))
+      .filter(col("doc_id") === col("min_id")).drop("min_id"), CacheLevel)
     s2.count()
     // stage 3 — near-dup cluster keepers over the s2 survivors: drop
     // every cluster member except the q111 keeper. r21 (guide §2.6):
@@ -5678,7 +5619,7 @@ object Pipeline {
     def dupDropsOf(): DataFrame = {
       val edges = verifiedNearDupPairs(s2.select(col("doc_id"), col("text")))
         .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      val labels = Graph.connectedComponentsStar(edges)
+      val labels = Graph.connectedComponentsStar(r, edges)
       val keepers = labels
         .join(s2.select(col("doc_id").as("node"),
           length(col("text")).cast("long").as("len")), "node")
@@ -5689,19 +5630,17 @@ object Pipeline {
       // rollup (s3 feeds s4 feeds s5; each rollup re-executes its
       // lineage) — persist the two expensive ones so the LSH+CC chain
       // and the 8-gram semi-join run exactly once per funnel execution
-      val dd = labels.join(keepers, "label")
+      val dd = r.persist(labels.join(keepers, "label")
         .filter(col("node") =!= col("keep_id"))
-        .select(col("node").as("doc_id"))
-        .persist(NarrowCacheLevel)
+        .select(col("node").as("doc_id")), NarrowCacheLevel)
       dd.count()
       dd
     }
     // the eval side is the SHARED [[wordGramHashes]] derivation — the
     // same artifact the streaming decontamGate compiles into its
     // map-side verdict, so batch funnel and ingest gate agree
-    val evalGrams = wordGramHashes(
-      d.filter(col("doc_id") % FunnelEvalMod === 0), "text")
-      .persist(NarrowCacheLevel)
+    val evalGrams = r.persist(wordGramHashes(
+      d.filter(col("doc_id") % FunnelEvalMod === 0), "text"), NarrowCacheLevel)
     val (dupDrops, mightContain) = par2(dupDropsOf(),
       bloomMightContain(evalGrams, DecontamBloomBits))
     val s3 = s2.join(dupDrops, Seq("doc_id"), "left_anti")
@@ -5711,11 +5650,10 @@ object Pipeline {
       .select(col("doc_id"),
         explode(wordShingles(split(col("text"), " "), 8)).as("gram"))
       .select(col("doc_id"), portableHashMod(col("gram")).as("h"))
-    val contaminated = gramsOf(s3)
+    val contaminated = r.persist(gramsOf(s3)
       .filter(mightContain(col("h")))
       .join(evalGrams, Seq("h"), "left_semi")
-      .select(col("doc_id")).distinct()
-      .persist(NarrowCacheLevel)
+      .select(col("doc_id")).distinct(), NarrowCacheLevel)
     contaminated.count()
     val s4 = s3.join(contaminated, Seq("doc_id"), "left_anti")
     // stage 5 — mixing quota recomputed on the survivor counts
@@ -5730,22 +5668,14 @@ object Pipeline {
         .agg(count(lit(1)).as("n_docs"))
         .select(lit(stage).cast("int").as("stage"),
           lit(name).as("stage_name"), col("lang"), col("n_docs"))
-    val out = stageCount(corpus, 0, "ingest")
+    // ≤ 6·|lang| rows: snapshot, so the residents go with the scope
+    r.snapshot(stageCount(corpus, 0, "ingest")
       .unionByName(stageCount(s1, 1, "quality_gate"))
       .unionByName(stageCount(s2, 2, "canonical_dedup"))
       .unionByName(stageCount(s3, 3, "near_dup_keeper"))
       .unionByName(stageCount(s4, 4, "decontam"))
       .unionByName(stageCount(s5, 5, "mixing_quota"))
-      .orderBy(col("stage"), col("lang"))
-    // ≤ 6·|lang| rows: snapshot, then release the residents
-    val snapshot = out.collect()
-    corpus.unpersist(blocking = false)
-    s2.unpersist(blocking = false)
-    evalGrams.unpersist(blocking = false)
-    dupDrops.unpersist(blocking = false)
-    contaminated.unpersist(blocking = false)
-    spark.createDataFrame(
-      java.util.Arrays.asList(snapshot: _*), out.schema)
+      .orderBy(col("stage"), col("lang")))
   }
 
   // -------------- q115: crawl-over-crawl token-distribution drift
@@ -5796,7 +5726,7 @@ object Pipeline {
     abs(d(n1) * d(t2) - d(n2) * d(t1))
   }
 
-  def q115TokenDrift(spark: SparkSession, dir: String): DataFrame = {
+  def q115TokenDrift(spark: SparkSession, dir: String): DataFrame = Residents { r =>
     val base = docs(spark, dir)
     val v1 = base.select(col("lang"), col("text"))
     // the q106 crawl-2 mutation rules, verbatim: %13 dropped, %7
@@ -5813,11 +5743,10 @@ object Pipeline {
     // the count-pair relation feeds BOTH rollups (totals and the TV
     // numerator) — persist it or the token counting runs once per
     // consumer (the plan showed 3 full-outer count joins unpersisted)
-    val j = tokCounts(v1, "c1").join(tokCounts(v2, "c2"),
+    val j = r.persist(tokCounts(v1, "c1").join(tokCounts(v2, "c2"),
         Seq("lang", "token"), "full_outer")
       .select(col("lang"), coalesce(col("c1"), lit(0L)).as("n1"),
-        coalesce(col("c2"), lit(0L)).as("n2"))
-      .persist(NarrowCacheLevel)
+        coalesce(col("c2"), lit(0L)).as("n2")), NarrowCacheLevel)
     j.count()
     val totals = j.groupBy(col("lang"))
       .agg(sum(col("n1")).as("t1"), sum(col("n2")).as("t2"),
@@ -5830,19 +5759,15 @@ object Pipeline {
       .groupBy(col("lang"))
       .agg(sum(tvNumeratorTerm(col("n1"), col("n2"), col("t1"), col("t2")))
         .as("num"))
-    val out = totals.join(num, "lang")
+    // ≤|lang| rows: snapshot, so the count relation goes with the scope
+    r.snapshot(totals.join(num, "lang")
       .select(col("lang"), col("t1").as("n_tokens_v1"),
         col("t2").as("n_tokens_v2"), col("vocab_v1"), col("vocab_v2"),
         col("n_new_tokens"), col("n_lost_tokens"),
         round(col("num").cast("double") /
           (col("t1").cast("double") * col("t2").cast("double") * 2.0), 6)
           .as("tv_distance"))
-      .orderBy(col("lang"))
-    // ≤|lang| rows: snapshot, then release the count relation
-    val snapshot = out.collect()
-    j.unpersist(blocking = false)
-    spark.createDataFrame(
-      java.util.Arrays.asList(snapshot: _*), out.schema)
+      .orderBy(col("lang")))
   }
 
   // ----------- q116: crawl-over-crawl length-distribution drift
@@ -6035,21 +5960,19 @@ object Pipeline {
     * the spec uses) — on identical queries and an identical exact
     * answer set. */
   private[operators] def annRecallSweep(e: DataFrame,
-      cent: DataFrame, radii: Seq[Int] = Seq(0, 1)): DataFrame = {
-    val spark = e.sparkSession
-    val members = mapSideFineClusters(e, cent, ClusterTargetOccupancy)
-      .persist(CacheLevel)
+      cent: DataFrame, radii: Seq[Int] = Seq(0, 1)): DataFrame = Residents { r =>
+    val members = r.persist(
+      mapSideFineClusters(e, cent, ClusterTargetOccupancy), CacheLevel)
     members.count()
     val queries = memberQueries(members)
     // exact full-corpus top-5 per query: q25's exact scan (round-4
     // cosine desc, vec_id tiebreak — unique, both engines pick one
     // winner)
-    val exact = cosineServe(e, queries.select(col("query_id"), col("qe")),
-        AllPairs, 4, TopK)
-      .select(col("query_id"), col("vec_id"))
-      // EVERY radius scores against it — persist the ≤ queries·k rows
-      // or the harness corpus scan runs once per sweep branch
-      .persist(NarrowCacheLevel)
+    // EVERY radius scores against it — persist the ≤ queries·k rows or
+    // the harness corpus scan runs once per sweep branch
+    val exact = r.persist(cosineServe(e, queries.select(col("query_id"),
+        col("qe")), AllPairs, 4, TopK)
+      .select(col("query_id"), col("vec_id")), NarrowCacheLevel)
     exact.count()
     // probe clusters via the SHARED [[probeExpand]] serve expansion,
     // so this sweep measures byte-for-byte the candidate sets the
@@ -6064,12 +5987,12 @@ object Pipeline {
     // top-k semi-join count).
     val nQueries = queries.count()
     // the query norm is hoisted once per query, before the expansion
-    val tagged = radii.map(r =>
-        probeExpand(queries.withColumn("nq", vecNorm(col("qe"))), r)
-      .select(lit(r).cast("int").as("radius"), col("query_id"), col("qe"),
+    val tagged = radii.map(rd =>
+        probeExpand(queries.withColumn("nq", vecNorm(col("qe"))), rd)
+      .select(lit(rd).cast("int").as("radius"), col("query_id"), col("qe"),
         col("nq"), col("cluster"))).reduce(_ unionByName _)
     val byRQ = Window.partitionBy(col("radius"), col("query_id"))
-    val agg = members.select(col("vec_id"), col("e"),
+    val agg = tally(members.select(col("vec_id"), col("e"),
         vecNorm(col("e")).as("ne"), col("cluster"))
       .join(broadcast(tagged), Seq("cluster"))
       .filter(col("vec_id") =!= col("query_id"))
@@ -6082,27 +6005,15 @@ object Pipeline {
       .groupBy(col("radius"))
       .agg(count(lit(1)).as("n_cand"),
         sum(when(col("rk") <= TopK && col("hit").isNotNull, 1L)
-          .otherwise(0L)).as("n_hits"))
-      .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
-    import spark.implicits._
-    val out = radii.map { r =>
-      val (nCand, nHits) = agg.getOrElse(r, (0L, 0L))
-      (r, nQueries, nCand, nHits)
-    }.toDF("radius", "n_queries", "n_candidates", "n_hits")
-      .select(col("radius").cast("int").as("radius"),
-        col("n_queries"), col("n_candidates"),
-        round(col("n_candidates").cast("double") / col("n_queries"), 6)
-          .as("avg_candidates"),
+          .otherwise(0L)).as("n_hits")))
+    sweepReport(r, e.sparkSession, Seq("radius"),
+      Seq("n_queries", "n_candidates", "n_hits"),
+      radii.map(rd => (Seq(rd), nQueries +: agg(rd))),
+      Seq(col("radius"), col("n_queries"), col("n_candidates"),
+        ratio("n_candidates", col("n_queries")).as("avg_candidates"),
         col("n_hits"),
-        round(col("n_hits").cast("double") / (col("n_queries") * TopK), 6)
-          .as("recall_at_5"))
-      .orderBy(col("radius"))
-    // |radii| fixed-width rows: snapshot, then release the residents
-    val snapshot = out.collect()
-    members.unpersist(blocking = false)
-    exact.unpersist(blocking = false)
-    spark.createDataFrame(
-      java.util.Arrays.asList(snapshot: _*), out.schema)
+        ratio("n_hits", col("n_queries") * TopK).as("recall_at_5")),
+      col("radius"))
   }
 
   /** L3 — the TRAINED-COARSE recall sweep (VERDICT r15 §next-9):
@@ -6296,7 +6207,7 @@ object Pipeline {
     * collapse needs NO join: twin text is a derivation of the base
     * row, so the pair compares inside one projection. Per width: one
     * signature-keyed exchange + two bounded aggregates. */
-  def q143WidthSweep(spark: SparkSession, dir: String): DataFrame = {
+  def q143WidthSweep(spark: SparkSession, dir: String): DataFrame = Residents { r =>
     // the width-w signature is the LOW w BITS of the widest one
     // (per-bit votes don't see the width — the property the spec
     // asserts), so the expensive canonical-split-hash-vote fold runs
@@ -6309,19 +6220,19 @@ object Pipeline {
     val widest = GateWidths.max
     def maskOf(bits: Int) = lit((1L << bits) - 1)
     val base = docs(spark, dir).select(col("doc_id"), col("text"))
-    val c = base.select(
+    val c = r.persist(base.select(
       md5(graft.functions.TextFunctions.canonicalText(col("text"))
         .cast("binary")).as("digest"),
       graft.streaming.Dedup.nearDupSignatureAt(col("text"), widest)
-        .as("sig")).persist(NarrowCacheLevel)
+        .as("sig")), NarrowCacheLevel)
     c.count()
-    val planted = base.filter(col("doc_id") % 11 === 0)
+    val planted = r.persist(base.filter(col("doc_id") % 11 === 0)
       .select(
         graft.streaming.Dedup.nearDupSignatureAt(col("text"), widest)
           .as("sa"),
         graft.streaming.Dedup.nearDupSignatureAt(
-          concat(col("text"), lit(" extra token tail")), widest).as("sb"))
-      .persist(NarrowCacheLevel)
+          concat(col("text"), lit(" extra token tail")), widest).as("sb")),
+      NarrowCacheLevel)
     planted.count()
     // r22 (the q144 merge, VERDICT r21 §next-5): every width's masked
     // signature rides ONE exploded (bits, msig) relation through a
@@ -6335,12 +6246,11 @@ object Pipeline {
         struct(lit(bits).as("bits"),
           col("sig").bitwiseAND(maskOf(bits)).as("msig"))): _*)).as("w"))
       .select(col("digest"), col("w.bits").as("bits"), col("w.msig").as("msig"))
-    val falseRows = widthRel.groupBy(col("bits"), col("msig"))
+    val falseRows = tally(widthRel.groupBy(col("bits"), col("msig"))
       .agg(count_distinct(col("digest")).as("nd"))
       .groupBy(col("bits"))
       .agg(sum(col("nd")).as("n_base_digests"),
-        sum(col("nd") - 1).as("n_false_drops"))
-      .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
+        sum(col("nd") - 1).as("n_false_drops")))
     val plantedAggs = count(lit(1)).as("n_planted") +:
       GateWidths.map { bits =>
         sum((col("sa").bitwiseAND(maskOf(bits))
@@ -6349,22 +6259,15 @@ object Pipeline {
       }
     val plantedRow = planted.agg(plantedAggs.head, plantedAggs.tail: _*).head()
     val nPlanted = plantedRow.getLong(0)
-    import spark.implicits._
-    val out = GateWidths.zipWithIndex.map { case (bits, wi) =>
-      val (nBase, nFalse) = falseRows.getOrElse(bits, (0L, 0L))
-      (bits, nBase, nFalse, nPlanted, plantedRow.getLong(1 + wi))
-    }.toDF("bits0", "n_base_digests", "n_false_drops", "n_planted",
-        "n_planted_collapsed")
-      .select(col("bits0").cast("int").as("bits"),
-        col("n_base_digests"), col("n_false_drops"),
+    sweepReport(r, spark, Seq("bits"),
+      Seq("n_base_digests", "n_false_drops", "n_planted", "n_planted_collapsed"),
+      GateWidths.zipWithIndex.map { case (bits, wi) =>
+        (Seq(bits), falseRows(bits) ++ Seq(nPlanted, plantedRow.getLong(1 + wi))) },
+      Seq(col("bits"), col("n_base_digests"), col("n_false_drops"),
         col("n_planted"), col("n_planted_collapsed"),
-        round(col("n_false_drops").cast("double") / col("n_base_digests"), 6)
-          .as("false_drop_share"),
-        round(col("n_planted_collapsed").cast("double") / col("n_planted"), 6)
-          .as("planted_recall"))
-      .orderBy(col("bits"))
-    // 4 report rows: snapshot, release the two per-doc residents
-    snapshotAndFree(out, c, planted)
+        ratio("n_false_drops", col("n_base_digests")).as("false_drop_share"),
+        ratio("n_planted_collapsed", col("n_planted")).as("planted_recall")),
+      col("bits"))
   }
 
   /** The (bands, bandBits) configurations [[q144BandedGateSweep]]
@@ -6412,27 +6315,27 @@ object Pipeline {
     * per-doc relations; per config one (b, key) exchange + a bounded
     * digest rollup. Never all-pairs, never a join wider than the
     * band-group relation. */
-  def q144BandedGateSweep(spark: SparkSession, dir: String): DataFrame = {
+  def q144BandedGateSweep(spark: SparkSession, dir: String): DataFrame = Residents { r =>
     val widest = 31
     val base = docs(spark, dir).select(col("doc_id"), col("text"))
     // one row per DISTINCT canonical digest (the gate's error unit —
     // same-digest copies are the exact stage's rightful drops); the
     // signature is digest-determined, so the pair-distinct is a
     // digest-distinct
-    val c = base.select(
+    val c = r.persist(base.select(
         md5(graft.functions.TextFunctions.canonicalText(col("text"))
           .cast("binary")).as("digest"),
         graft.streaming.Dedup.nearDupSignatureAt(col("text"), widest)
           .as("sig"))
-      .distinct().persist(NarrowCacheLevel)
+      .distinct(), NarrowCacheLevel)
     c.count()
-    val planted = base.filter(col("doc_id") % 11 === 0)
+    val planted = r.persist(base.filter(col("doc_id") % 11 === 0)
       .select(
         graft.streaming.Dedup.nearDupSignatureAt(col("text"), widest)
           .as("sa"),
         graft.streaming.Dedup.nearDupSignatureAt(
-          concat(col("text"), lit(" extra token tail")), widest).as("sb"))
-      .persist(NarrowCacheLevel)
+          concat(col("text"), lit(" extra token tail")), widest).as("sb")),
+      NarrowCacheLevel)
     planted.count()
     // r21 (the bandingSweepOver merge): every config's shift/mask band
     // keys ride ONE (cfg, b, k) relation through one groupBy-join
@@ -6452,13 +6355,12 @@ object Pipeline {
         col("e.k").as("k"))
     val grpMin = bandRel.groupBy(col("cfg"), col("b"), col("k"))
       .agg(min(col("digest")).as("mn"))
-    val falseRows = bandRel.join(grpMin, Seq("cfg", "b", "k"))
+    val falseRows = tally(bandRel.join(grpMin, Seq("cfg", "b", "k"))
       .groupBy(col("cfg"), col("digest"))
       .agg(max(when(col("mn") < col("digest"), 1L).otherwise(0L)).as("coll"))
       .groupBy(col("cfg"))
       .agg(count(lit(1)).as("n_base_digests"),
-        sum(col("coll")).as("n_false_collapsed"))
-      .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
+        sum(col("coll")).as("n_false_collapsed")))
     val plantedAggs = count(lit(1)).as("n_planted") +:
       GateBandConfigs.zipWithIndex.map { case ((bands, bits), ci) =>
         sum(when((0 until bands)
@@ -6467,23 +6369,16 @@ object Pipeline {
       }
     val plantedRow = planted.agg(plantedAggs.head, plantedAggs.tail: _*).head()
     val nPlanted = plantedRow.getLong(0)
-    import spark.implicits._
-    val out = GateBandConfigs.zipWithIndex.map { case ((bands, bits), ci) =>
-      val (nBase, nFalse) = falseRows.getOrElse(ci, (0L, 0L))
-      (bands, bits, nBase, nFalse, nPlanted, plantedRow.getLong(1 + ci))
-    }.toDF("bands0", "band_bits0", "n_base_digests", "n_false_collapsed",
-        "n_planted", "n_planted_collapsed")
-      .select(col("bands0").cast("int").as("bands"),
-        col("band_bits0").cast("int").as("band_bits"),
+    sweepReport(r, spark, Seq("bands", "band_bits"),
+      Seq("n_base_digests", "n_false_collapsed", "n_planted", "n_planted_collapsed"),
+      GateBandConfigs.zipWithIndex.map { case ((bands, bits), ci) =>
+        (Seq(bands, bits), falseRows(ci) ++ Seq(nPlanted, plantedRow.getLong(1 + ci))) },
+      Seq(col("bands"), col("band_bits"),
         col("n_base_digests"), col("n_false_collapsed"),
-        round(col("n_false_collapsed").cast("double")
-          / col("n_base_digests"), 6).as("false_collapse_share"),
+        ratio("n_false_collapsed", col("n_base_digests")).as("false_collapse_share"),
         col("n_planted"), col("n_planted_collapsed"),
-        round(col("n_planted_collapsed").cast("double")
-          / col("n_planted"), 6).as("planted_recall"))
-      .orderBy(col("bands"), col("band_bits"))
-    // 5 report rows: snapshot, release the two per-doc residents
-    snapshotAndFree(out, c, planted)
+        ratio("n_planted_collapsed", col("n_planted")).as("planted_recall")),
+      col("bands"), col("band_bits"))
   }
 
   /** L5 — INCREMENTAL-EXPORT manifest algebra (q141, the oracle face

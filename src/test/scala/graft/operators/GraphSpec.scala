@@ -27,8 +27,8 @@ class GraphSpec extends SparkSpec {
   }
 
   private def labelsOf(edges: Seq[(Long, Long)]): Map[Long, Long] =
-    Graph.connectedComponentsStar(edges.toDF("src", "dst"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    Residents { res => Graph.connectedComponentsStar(res, edges.toDF("src", "dst"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap }
 
   test("random graph: labels match union-find exactly") {
     val rnd = new scala.util.Random(20260812L)

@@ -298,8 +298,7 @@ class LayoutSpec extends SparkSpec {
     // bit-exact vs a fresh deterministic retrain on the same corpus
     val base = Tables.spread(Tables.documents(spark, dir))
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
-    val (retrained, _, release) = Pipeline.bpeLearnRounds(base)
-    release()
+    val retrained = Pipeline.bpeLearnRounds(base)
     assert(stored == retrained,
       "stored merge table must equal a deterministic retrain bit-exactly")
     // unchanged corpus → no rebuild (same files at rest)
@@ -317,10 +316,9 @@ class LayoutSpec extends SparkSpec {
     val retrainedHalf = Layout.readMerges(
       spark, Pipeline.ensureBpeMerges(spark, dir))
     assert(mergeFiles() != files1, "regenerated corpus must rebuild")
-    val (expectHalf, _, releaseHalf) = Pipeline.bpeLearnRounds(
+    val expectHalf = Pipeline.bpeLearnRounds(
       Tables.spread(Tables.documents(spark, dir))
         .select(col("doc_id"), split(col("text"), " ").as("toks")))
-    releaseHalf()
     assert(retrainedHalf == expectHalf,
       "retrain must be the regenerated corpus's own training output")
   }

@@ -239,11 +239,11 @@ class PipelineSpec extends SparkSpec {
     val cent = Seq((0, Seq.fill(64)(1.0))).toDF("label", "cvec")
     def stats(n: Int): (Long, Long) = {
       val e = corpus(n).toDF("vec_id", "e")
-      val (fine, release) = Pipeline.corpusScaledClustersWithRelease(e, cent, 8)
-      try {
-        val occ = fine.groupBy(col("cluster")).count()
+      Residents { res =>
+        val occ = Pipeline.corpusScaledClusters(res, e, cent, 8)
+          .groupBy(col("cluster")).count()
         (occ.count(), occ.agg(max(col("count"))).first().getLong(0))
-      } finally release()
+      }
     }
     val (k1, max1) = stats(256)
     val (k2, max2) = stats(1024)
@@ -265,11 +265,11 @@ class PipelineSpec extends SparkSpec {
     val viaMap = Pipeline.mapSideFineClusters(e, cent, 8)
       .select("vec_id", "cluster", "mask").collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    val (fine, release) = Pipeline.corpusScaledClustersWithRelease(e, cent, 8)
-    val viaJoin =
-      try fine.select("vec_id", "cluster", "mask").collect()
+    val viaJoin = Residents { res =>
+      Pipeline.corpusScaledClusters(res, e, cent, 8)
+        .select("vec_id", "cluster", "mask").collect()
         .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-      finally release()
+    }
     assert(viaMap.keySet == viaJoin.keySet)
     viaMap.foreach { case (id, got) =>
       assert(got == viaJoin(id), s"vec $id: map-side $got vs join ${viaJoin(id)}")
@@ -292,11 +292,10 @@ class PipelineSpec extends SparkSpec {
     // feed the occupancy-bounded subdivision
     val e = graft.Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("e"))
-    val (fine, release) =
-      Pipeline.corpusScaledClustersWithRelease(e, Pipeline.kMeansCentroids(e), 8)
-    val occ =
-      try fine.groupBy(col("cluster")).count().agg(max(col("count"))).first().getLong(0)
-      finally release()
+    val occ = Residents { res =>
+      Pipeline.corpusScaledClusters(res, e, Pipeline.kMeansCentroids(e), 8)
+        .groupBy(col("cluster")).count().agg(max(col("count"))).first().getLong(0)
+    }
     assert(occ <= 4 * 8, s"composition must bound occupancy, max was $occ")
   }
 
@@ -464,10 +463,11 @@ class PipelineSpec extends SparkSpec {
     }
     val cent = Seq((0, Seq.fill(64)(1.0)), (1, Seq.fill(64)(-0.5))).toDF("label", "cvec")
     def clusters(parts: Int) = {
-      val (fine, release) = Pipeline.corpusScaledClustersWithRelease(corpus(parts), cent, 8)
-      try fine.select("vec_id", "cluster").collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      finally release()
+      Residents { res =>
+        Pipeline.corpusScaledClusters(res, corpus(parts), cent, 8)
+          .select("vec_id", "cluster").collect()
+          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      }
     }
     def centroids(parts: Int) = Pipeline.kMeansCentroids(corpus(parts))
       .select("label").collect().map(_.getLong(0)).toSet
@@ -1157,8 +1157,8 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("q81 exchange accounting: iterations are exchange-FREE, lineage bounded at one") {
-    val (top, mids, release) = Pipeline.pageRankReport(spark, sfDir)
-    try {
+    Residents { res =>
+      val (top, mids) = Pipeline.pageRankReport(res, spark, sfDir)
       top.count()
       // POST-CACHE (r14 broadcast-rank design): an iteration pays ZERO
       // exchanges — the tiny rank relation is broadcast into the
@@ -1194,7 +1194,7 @@ class PipelineSpec extends SparkSpec {
         assert(last.forall(r => r.getLong(1) == r.getLong(2)),
           "early exit without an exact fixed point")
       }
-    } finally release()
+    }
   }
 
   test("q80 random projection: per-vector distortion matches a local projection, JL mean holds") {
@@ -1286,8 +1286,8 @@ class PipelineSpec extends SparkSpec {
     // counted on the LIVE plan (duplicateSpansReport) — the public
     // query snapshots ≤ |lang| rows into a local relation (q60's
     // bounded-collect discipline), which would hide the real work
-    val (out, release) = Pipeline.duplicateSpansReport(spark, sfDir)
-    try {
+    Residents { res =>
+      val out = Pipeline.duplicateSpansReport(res, spark, sfDir)
       out.count()
       val got = countShuffles(out.queryExecution.executedPlan)
       // POST-CACHE (the gram cache's fill, including its two spreads,
@@ -1302,7 +1302,7 @@ class PipelineSpec extends SparkSpec {
       // digest partitioning; either physical pick is the right one
       // for its size, which is the point of leaving it to AQE)
       assert(got == 7, s"q76 live plan: $got exchanges, design says 7")
-    } finally release()
+    }
   }
 
   test("r11 late-newcomer exchange accounting: q73/q74 shuffle exactly their designed counts") {
@@ -1718,8 +1718,7 @@ class PipelineSpec extends SparkSpec {
   }
   test("bpe learn loop ends early on a pair-free corpus instead of throwing") {
     val base = Seq((1L, Seq("solo")), (2L, Seq("x"))).toDF("doc_id", "toks")
-    val (rounds, _, release) = Pipeline.bpeLearnRounds(base)
-    release()
+    val rounds = Pipeline.bpeLearnRounds(base)
     assert(rounds.isEmpty, "no adjacent pair exists - nothing to learn")
   }
 
@@ -2425,10 +2424,10 @@ class PipelineSpec extends SparkSpec {
     val queries = corpusQs.unionByName(extras)
     def rows(d: org.apache.spark.sql.DataFrame) = d.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val pruned = rows(Pipeline.sparseLegFromPostingsMaxScore(
-      queries, postings, stats))
-    val full = rows(Pipeline.sparseLegFromPostings(
-      queries, postings, stats))
+    val pruned = Residents { res => rows(Pipeline.sparseLegFromPostingsMaxScore(
+      res, queries, postings, stats)) }
+    val full = Residents { res => rows(Pipeline.sparseLegFromPostings(
+      res, queries, postings, stats)) }
     assert(pruned == full,
       s"max-score diverged: missing ${full.diff(pruned)}, " +
         s"extra ${pruned.diff(full)}")
@@ -2446,12 +2445,14 @@ class PipelineSpec extends SparkSpec {
       .select(col("doc_id").as("query_id"), col("text"))
     def rows(d: org.apache.spark.sql.DataFrame) = d.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val off = rows(Pipeline.sparseLegAdaptive(queries, postings, stats))
-    val on = rows(Pipeline.sparseLegAdaptive(queries, postings, stats,
-      maxScorePrune = true))
+    val off = Residents { res =>
+      rows(Pipeline.sparseLegAdaptive(res, queries, postings, stats)) }
+    val on = Residents { res => rows(Pipeline.sparseLegAdaptive(
+      res, queries, postings, stats, maxScorePrune = true)) }
     assert(off == on, "the knob may move a growth curve, never a row")
     // the default must be the measured winner (the unpruned plan)
-    assert(off == rows(Pipeline.sparseLegFromPostings(queries, postings, stats)))
+    assert(off == Residents { res =>
+      rows(Pipeline.sparseLegFromPostings(res, queries, postings, stats)) })
     assert(off.nonEmpty)
   }
 
