@@ -98,6 +98,17 @@ object TextFunctions {
       terms.reduce(_ + _)
     })
 
+  /** The md5 band bucket of band `b` (0-based; a Column, so a sweep
+    * can pass its lambda variable): the band's `rowsPerBand` signature
+    * entries joined by commas and hashed with [[portableHashMod]], so
+    * any r hashes to one 31-bit bucket. One derivation for the MinHash
+    * knob sweeps (q131/q147/q149) and the verified streaming near-dup
+    * gate. */
+  def md5BandBucket(sig: Column, b: Column, rowsPerBand: Int): Column =
+    portableHashMod(array_join(transform(
+      slice(sig, b * lit(rowsPerBand) + lit(1), lit(rowsPerBand)),
+      x => x.cast("string")), ","))
+
   /** Jaccard similarity of two pre-deduplicated arrays. */
   def jaccard(a: Column, b: Column): Column = {
     val inter = size(array_intersect(a, b)).cast("double")

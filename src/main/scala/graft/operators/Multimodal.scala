@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.TextFunctions.P
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** One media file: an opaque binary payload plus typed metadata — the
@@ -724,6 +724,15 @@ object Multimodal {
   private[graft] def perceptualDHash(payload: Array[Byte]): Option[Long] =
     tryDecode(payload).map(img => dHash56(grayPixels(raster8(img))))
 
+  private val md5Digest = ThreadLocal.withInitial[java.security.MessageDigest](
+    () => java.security.MessageDigest.getInstance("MD5"))
+
+  /** Lowercase hex md5 of a payload's bytes — the exact face's digest
+    * in q97–q99 and the streaming media gates' byte-exact `raw:` key
+    * ([[graft.streaming.Dedup]]). One digester per thread. */
+  private[graft] def md5Hex(payload: Array[Byte]): String =
+    md5Digest.get().digest(payload).map("%02x".format(_)).mkString
+
   /** REAL-decode signature extraction: every payload decodes through
     * `javax.imageio` (the q33/q62 partition-wise contract — payloads
     * never shuffle, decoder configured once per partition), then the
@@ -735,17 +744,37 @@ object Multimodal {
     import files.sparkSession.implicits._
     files.mapPartitions { rows =>
       javax.imageio.ImageIO.setUseCache(false)
-      val md = java.security.MessageDigest.getInstance("MD5")
       rows.flatMap { f =>
         tryDecode(f.payload).map { img =>
           val v = grayPixels(raster8(img))
           val (hi, lo) = aHashHalves(v)
-          md.reset()
-          val digest = md.digest(f.payload).map("%02x".format(_)).mkString
-          (f.mediaId, digest, hi, lo, dHash56(v))
+          (f.mediaId, md5Hex(f.payload), hi, lo, dHash56(v))
         }
       }
     }.toDF("media_id", "digest", "a_hi", "a_lo", "dhash")
+  }
+
+  /** The exact face q97–q99 share, over a `(media_id, digest, …)`
+    * signature relation persisted in `r`: payload-digest groups (min id
+    * as the representative, `size` as the group size, whether the group
+    * holds a constructed twin), the `exact` report rows — one per group
+    * size (n groups, how many contain a twin) — and the representatives'
+    * signature rows, so the near faces never see a byte-duplicate
+    * twice. */
+  private def digestGroups(r: Residents, signatures: DataFrame,
+      size: Column): (DataFrame, DataFrame) = {
+    val sig = r.persist(signatures,
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    sig.count()
+    val groups = sig.groupBy(col("digest"))
+      .agg(min(col("media_id")).as("media_id"), size.as("sz"),
+        max(when(col("media_id").between(TwinOffset, VariantOffset - 1), 1)
+          .otherwise(0)).as("has_twin"))
+    val exact = groups.groupBy(col("sz").as("k"))
+      .agg(count(lit(1)).as("n"),
+        sum(col("has_twin")).cast("long").as("n_variant"))
+      .select(lit("exact").as("stage"), col("k"), col("n"), col("n_variant"))
+    (exact, sig.join(groups.select(col("media_id")), Seq("media_id"), "left_semi"))
   }
 
   /** MM/L1/L2 — image dedup, exact AND perceptual, over the real-PNG
@@ -772,19 +801,8 @@ object Multimodal {
     * rows) is snapshotted, so the signatures are released before the
     * query returns. */
   def q97ImageDedup(spark: SparkSession, dir: String): DataFrame = Residents { r =>
-    val sig = r.persist(imageSignatures(imageCorpus(spark, dir)),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sig.count()
-    val groups = sig.groupBy(col("digest"))
-      .agg(min(col("media_id")).as("media_id"),
-        count(lit(1)).as("sz"),
-        max(when(col("media_id").between(TwinOffset, VariantOffset - 1), 1)
-          .otherwise(0)).as("has_twin"))
-    val exact = groups.groupBy(col("sz").as("k"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("has_twin")).cast("long").as("n_variant"))
-      .select(lit("exact").as("stage"), col("k"), col("n"), col("n_variant"))
-    val reps = sig.join(groups.select(col("media_id")), Seq("media_id"), "left_semi")
+    val (exact, reps) =
+      digestGroups(r, imageSignatures(imageCorpus(spark, dir)), count(lit(1)))
     val ahash = reps.agg(
       count_distinct(struct(col("a_hi"), col("a_lo"))).as("n"),
       count_distinct(col("dhash")).as("n_variant"))
@@ -968,16 +986,9 @@ object Multimodal {
     * decoded PCM. Undecodable payloads are dropped. */
   def audioSignatures(files: Dataset[MediaFile]): DataFrame = {
     import files.sparkSession.implicits._
-    files.mapPartitions { rows =>
-      val md = java.security.MessageDigest.getInstance("MD5")
-      rows.flatMap { f =>
-        audioFingerprint(f.payload).map { fp =>
-          md.reset()
-          val digest = md.digest(f.payload).map("%02x".format(_)).mkString
-          (f.mediaId, digest, fp)
-        }
-      }
-    }.toDF("media_id", "digest", "fp")
+    files.flatMap(f => audioFingerprint(f.payload)
+        .map(fp => (f.mediaId, md5Hex(f.payload), fp)))
+      .toDF("media_id", "digest", "fp")
   }
 
   /** MM/L1/L2 — audio dedup, exact AND gain-invariant, over the real-WAV
@@ -996,19 +1007,8 @@ object Multimodal {
     * no joins, never all-pairs). The report is snapshotted, so the
     * signature relation is released before the query returns. */
   def q98AudioDedup(spark: SparkSession, dir: String): DataFrame = Residents { r =>
-    val sig = r.persist(audioSignatures(audioDedupCorpus(spark, dir)),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sig.count()
-    val groups = sig.groupBy(col("digest"))
-      .agg(min(col("media_id")).as("media_id"),
-        count(lit(1)).as("sz"),
-        max(when(col("media_id").between(TwinOffset, VariantOffset - 1), 1)
-          .otherwise(0)).as("has_twin"))
-    val exact = groups.groupBy(col("sz").as("k"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("has_twin")).cast("long").as("n_variant"))
-      .select(lit("exact").as("stage"), col("k"), col("n"), col("n_variant"))
-    val reps = sig.join(groups.select(col("media_id")), Seq("media_id"), "left_semi")
+    val (exact, reps) = digestGroups(r,
+      audioSignatures(audioDedupCorpus(spark, dir)), count(lit(1)))
     val gain = reps.groupBy(col("fp"))
       .agg(count(lit(1)).as("sz"),
         max(when(col("media_id") >= VariantOffset, 1).otherwise(0)).as("has_var"))
@@ -1118,14 +1118,6 @@ object Multimodal {
       }
   }
 
-  /** REAL-decode per-frame signature extraction: walk the
-    * length-prefixed container, decode EVERY frame with `javax.imageio`
-    * (the q63 contract — a framing bug or skipped frame changes the
-    * keys), and emit one row per frame with the frame's mean-color key
-    * (r·65536 + g·256 + b over integer-exact solid-frame means), the
-    * video's payload digest, and its distinct-key count. Malformed
-    * containers are dropped whole (a partial key set would fabricate
-    * containment). */
   /** THE shared frame-key derivation (batch q99 and the streaming
     * ingest gate): walk the length-prefixed container, decode EVERY
     * frame, emit the distinct mean-color keys in first-appearance
@@ -1166,15 +1158,21 @@ object Multimodal {
       if (ok && keys.nonEmpty && in.available() == 0) Some(keys.toSeq) else None
     } catch { case _: Exception => None }
 
+  /** REAL-decode per-frame signature extraction: walk the
+    * length-prefixed container, decode EVERY frame with `javax.imageio`
+    * (the q63 contract — a framing bug or skipped frame changes the
+    * keys), and emit one row per frame with the frame's mean-color key
+    * (r·65536 + g·256 + b over integer-exact solid-frame means), the
+    * video's payload digest, and its distinct-key count. Malformed
+    * containers are dropped whole (a partial key set would fabricate
+    * containment). */
   def videoFrameSignatures(files: Dataset[MediaFile]): DataFrame = {
     import files.sparkSession.implicits._
     files.mapPartitions { rows =>
       javax.imageio.ImageIO.setUseCache(false)
-      val md = java.security.MessageDigest.getInstance("MD5")
       rows.flatMap { f =>
         frameKeys(f.payload).toSeq.flatMap { keys =>
-          md.reset()
-          val digest = md.digest(f.payload).map("%02x".format(_)).mkString
+          val digest = md5Hex(f.payload)
           keys.map(k => (f.mediaId, digest, k, keys.size.toLong))
         }
       }
@@ -1202,19 +1200,10 @@ object Multimodal {
     * is snapshotted, so the frame relation is released before the
     * query returns. */
   def q99VideoDedup(spark: SparkSession, dir: String): DataFrame = Residents { r =>
-    val sig = r.persist(videoFrameSignatures(videoDedupCorpus(spark, dir)),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sig.count()
-    val vids = sig.groupBy(col("digest"))
-      .agg(min(col("media_id")).as("media_id"),
-        count_distinct(col("media_id")).as("sz"),
-        max(when(col("media_id").between(TwinOffset, VariantOffset - 1), 1)
-          .otherwise(0)).as("has_twin"))
-    val exact = vids.groupBy(col("sz").as("k"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("has_twin")).cast("long").as("n_variant"))
-      .select(lit("exact").as("stage"), col("k"), col("n"), col("n_variant"))
-    val reps = sig.join(vids.select(col("media_id")), Seq("media_id"), "left_semi")
+    // one row per frame: a digest group's size counts distinct videos
+    val (exact, reps) = digestGroups(r,
+      videoFrameSignatures(videoDedupCorpus(spark, dir)),
+      count_distinct(col("media_id")))
     val near = reps.as("x").join(reps.as("y"),
         col("x.frame_key") === col("y.frame_key") &&
           col("x.media_id") < col("y.media_id"))

@@ -1994,14 +1994,12 @@ object Pipeline {
     * per-config loop used to derive — concatenated with a config
     * index so all configs share one candidate self-join and one
     * report aggregation instead of 2 jobs per config. */
-  private def allConfigBands(sigs: DataFrame,
+  private[graft] def allConfigBands(sigs: DataFrame,
       configs: Seq[(Int, Int)]): DataFrame = {
     val perCfg = configs.zipWithIndex.map { case ((bC, r), ci) =>
       transform(sequence(lit(0), lit(bC - 1)), b =>
         struct(lit(ci).as("cfg"), b.cast("int").as("b"),
-          portableHashMod(array_join(
-            transform(slice(col("msig"), b * lit(r) + lit(1), lit(r)),
-              x => x.cast("string")), ",")).as("bsig")))
+          md5BandBucket(col("msig"), b, r).as("bsig")))
     }
     sigs.select(col("doc_id"), explode(concat(perCfg: _*)).as("e"))
       .select(col("doc_id"), col("e.cfg").as("cfg"), col("e.b").as("b"),

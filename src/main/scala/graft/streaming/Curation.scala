@@ -32,10 +32,6 @@ object Curation {
     withQualityVerdict(docs, textCol)
       .filter(col("verdict") === "keep").drop("verdict")
 
-  /** Redact emails/URLs in place and count what was removed per row —
-    * the ONE shared definition with batch q48
-    * ([[Pipeline.piiRedact]]/[[Pipeline.piiCount]]), map-side,
-    * stream-safe. A null text row counts 0 and stays null. */
   /** Trending terms per event-time window — the streaming face of
     * q64's bounded-memory heavy hitters: tokens explode map-side, the
     * Misra–Gries aggregator ([[graft.functions.HeavyHitters]]) runs
@@ -57,6 +53,10 @@ object Curation {
       .select(col("window.start").as("window_start"),
         col("window.end").as("window_end"), col("candidates"))
 
+  /** Redact emails/URLs in place and count what was removed per row —
+    * the ONE shared definition with batch q48
+    * ([[Pipeline.piiRedact]]/[[Pipeline.piiCount]]), map-side,
+    * stream-safe. A null text row counts 0 and stays null. */
   def piiScrub(docs: DataFrame, textCol: String): DataFrame =
     docs
       .withColumn("n_pii",
@@ -158,7 +158,9 @@ object Curation {
     * width, the stage holds one watermark-bounded state operator PER
     * BAND (1 + bands total for the composition, spec-asserted), and
     * `nearDupHistory` must be the per-band artifact
-    * ([[Dedup.historicalNearBandKeys]] at the same config). q144's
+    * ([[Dedup.historicalNearBandKeys]] at the same config; each near
+    * stage checks its history's shape and stamp as it composes, before
+    * any data flows). q144's
     * knob table prices every (bands, bandBits) point — q143 showed
     * the single-signature gate is a low-recall instrument at every
     * width, so a deployment that wants edited-copy recall at ingest
@@ -187,47 +189,30 @@ object Curation {
       s"nearDupBands ($nearDupBands) * nearDupBits ($nearDupBits - the " +
         "PER-BAND width when banded) must fit 31 bits; the banded " +
         "default pairing is nearDupBands = 2, nearDupBits = 15")
-    // the history artifact's shape AND config must match the enabled
-    // stage — keys from another config never match, so a mismatch
-    // means the nightly job and the gate disagree and the bootstrap
-    // would be silently inert. The validators live on the stages
-    // themselves (Dedup.validateSigHistory / validateBandHistory —
-    // ADVICE r19: direct stage callers deserve the same guard), so
-    // this gate-level check exists only to fail BEFORE the four
-    // stateless stages compose; the stage re-validates at its own
-    // entry. A banded check at bands = 1 or vice versa fails on the
-    // shape requires with the derive-function name in the message.
-    nearDupHistory.foreach { h =>
-      if (nearDupBands == 1) {
-        require(h.columns.contains("near_sig"),
-          "nearDupHistory must carry (near_sig) for nearDupBands = 1 - " +
-            "derive it with historicalNearSignatures")
-        Dedup.validateSigHistory(h, nearDupBits)
-      } else {
-        require(Seq("band", "near_band").forall(h.columns.contains),
-          "nearDupHistory must carry (band, near_band) for nearDupBands " +
-            s"= $nearDupBands - derive it with historicalNearBandKeys")
-        Dedup.validateBandHistory(h, nearDupBands, nearDupBits)
-      }
-    }
-    val scrubbed =
-      piiScrub(qualityGate(markupExtract(pages, htmlCol), "text"), "text")
-    val cleared = evalGrams.fold(scrubbed)(decontamGate(scrubbed, "text", _))
     // `history` ([[Dedup.historicalDigests]] of the already-ingested
     // batch corpus) bootstraps the dedup stage: content the corpus
     // already holds drops at a stateless stream-static anti-join, so a
     // FRESH stream doesn't re-admit history while its state store
     // warms up; stream-internal duplicates still hit the same
     // watermark-bounded state
-    val exact =
-      history.fold(Dedup.dedupNormalized(cleared, "text", eventTimeCol, horizon))(
-        Dedup.dedupNormalizedBootstrapped(cleared, "text", eventTimeCol, horizon, _))
+    val exact = Dedup.dedupNormalized(ingestFront(pages, htmlCol, evalGrams),
+      "text", eventTimeCol, horizon, history)
     if (!nearDup) exact
     else if (nearDupBands == 1)
       Dedup.dedupNearSignature(exact, "text", eventTimeCol, horizon,
         nearDupHistory, nearDupBits)
     else Dedup.dedupNearBanded(exact, "text", eventTimeCol, horizon,
       nearDupBands, nearDupBits, nearDupHistory)
+  }
+
+  /** The stateless front half both ingest gates share: markup
+    * extraction → quality gate → PII scrub → optional eval
+    * decontamination, pure map-side column logic (zero state). */
+  private def ingestFront(pages: DataFrame, htmlCol: String,
+      evalGrams: Option[DataFrame]): DataFrame = {
+    val scrubbed =
+      piiScrub(qualityGate(markupExtract(pages, htmlCol), "text"), "text")
+    evalGrams.fold(scrubbed)(decontamGate(scrubbed, "text", _))
   }
 
   /** The canonical ingest chain composed onto the VERIFIED near-dup
@@ -261,13 +246,10 @@ object Curation {
       evalGrams: Option[DataFrame] = None, bands: Int = 1,
       rowsPerBand: Int = 4, bucketCap: Int = 64,
       history: Option[DataFrame] = None)
-      : org.apache.spark.sql.Dataset[Dedup.NearVerifiedVerdict] = {
-    val scrubbed =
-      piiScrub(qualityGate(markupExtract(pages, htmlCol), "text"), "text")
-    val cleared = evalGrams.fold(scrubbed)(decontamGate(scrubbed, "text", _))
-    Dedup.nearVerifiedVerdicts(cleared, idCol, "text", eventTimeCol,
-      horizonMs, bands, rowsPerBand, bucketCap, history)
-  }
+      : org.apache.spark.sql.Dataset[Dedup.NearVerifiedVerdict] =
+    Dedup.nearVerifiedVerdicts(ingestFront(pages, htmlCol, evalGrams),
+      idCol, "text", eventTimeCol, horizonMs, bands, rowsPerBand,
+      bucketCap, history)
 
   /** Stateless temperature-mix gate — the streaming face of q123:
     * keep a document when its [[Pipeline.mixKey]] micro-draw falls

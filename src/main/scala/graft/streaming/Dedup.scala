@@ -1,7 +1,9 @@
 package graft.streaming
 
-import graft.functions.TextFunctions.{portableHashMod, simhash16}
-import org.apache.spark.sql.DataFrame
+import graft.expressions.DedupFunctions.{minhashSigNative, shingleHashSetSorted}
+import graft.functions.TextFunctions.{canonicalText, md5BandBucket, portableHashMod, simhash16}
+import graft.operators.Multimodal
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Streaming deduplication through the state store — the streaming twin
@@ -12,14 +14,18 @@ import org.apache.spark.sql.functions._
   * state in its receive path (last-write-wins frame register,
   * `src/receiver/main.cpp:36`); here the key is a content signature and
   * the policy is KEEP-FIRST: every document whose signature was already
-  * seen inside the watermark horizon is dropped.
+  * seen inside the watermark horizon is dropped. Every signature gate
+  * below is one configuration of [[keepFirst]] — a key expression (the
+  * batch operators' own derivation), its column name, and an optional
+  * history — and every history artifact carries its config through
+  * one [[Stamped]] rule.
   *
   * Scale posture (100 TB ingest):
   *  - the signature is computed map-side (codegen'd md5 / simhash over
   *    token hashes); the only shuffle is the state-store exchange on
   *    the signature itself, so dedup state partitions across executors
   *    like any keyed aggregate;
-  *  - state is BOUNDED by the watermark: `dropDuplicatesWithinWatermark`
+  *  - state is BOUNDED by the watermark: the keep-first stage
   *    evicts a signature once the watermark passes its first-seen event
   *    time plus the horizon. Unbounded-lookback dedup over an infinite
   *    stream is impossible in finite state — the horizon IS the dedup
@@ -32,20 +38,96 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
+  /** THE keep-first stage every signature gate is a configuration of:
+    * key each row (`key`, as column `keyName`), drop the rows whose key
+    * `history` holds — a STATELESS stream-static left-anti join, so
+    * history rides the plan (broadcast when it fits; a production
+    * deployment hands it a key table at rest) and never enters the
+    * store — then keep the first row per key within the watermark
+    * horizon. `history` is one column named `keyName`, bound at
+    * composition time like every static side. One stateful operator
+    * per call; each gate keeps its own key name, so its state schema —
+    * and every checkpoint written under it — stays put. */
+  private def keepFirst(docs: DataFrame, key: Column, keyName: String,
+      eventTimeCol: String, horizon: String,
+      history: Option[DataFrame] = None): DataFrame = {
+    val keyed = docs.withColumn(keyName, key)
+    history.fold(keyed)(keyed.join(_, Seq(keyName), "left_anti"))
+      .withWatermark(eventTimeCol, horizon)
+      .dropDuplicatesWithinWatermark(keyName)
+      .drop(keyName)
+  }
+
+  /** A CONFIG-STAMPED history artifact: what it is, the function that
+    * derives it, the key columns a gate reads, and the stamp columns
+    * every row carries. Keys from one config point are meaningless at
+    * another, so the derive step writes the stamp ([[write]]), a gate
+    * checks it against its own knobs at composition time, and an
+    * append continues at the stamped config ([[check]]). */
+  private final case class Stamped(what: String, derive: String,
+      keys: Seq[String], stamp: Seq[String]) {
+
+    /** `rows` with `values` written into the stamp columns. */
+    def write(rows: DataFrame, values: Int*): DataFrame =
+      stamp.zip(values).foldLeft(rows) { case (d, (c, v)) =>
+        d.withColumn(c, lit(v))
+      }
+
+    /** THE stamp-reading check. Columns first, so an unstamped artifact
+      * gets the re-derive message rather than an AnalysisException;
+      * then ONE small job reads the stamp — one row's (`limit(1)`), or,
+      * when `extra` aggregates are asked for, the stamp's max with
+      * them appended. A gate passes the config it runs: a different
+      * stamp fails, and an empty artifact (an empty batch corpus) is
+      * vacuously fine — None. An append passes `gate = None`: an empty
+      * artifact has no stamp to continue and fails, so an append always
+      * gets the stamp row. */
+    def check(h: DataFrame, gate: Option[Seq[Int]],
+        extra: Column*): Option[Row] = {
+      require(keys.forall(h.columns.contains),
+        s"$what must carry (${keys.mkString(", ")}) - derive it with $derive")
+      require(stamp.forall(h.columns.contains),
+        s"$what predates config stamping - re-derive it with $derive " +
+          s"(rows carry ${stamp.mkString(", ")})")
+      val cfg = stamp.map(col)
+      val row = (if (extra.isEmpty) h.select(cfg: _*).limit(1)
+        else h.agg(max(cfg.head), cfg.tail.map(c => max(c)) ++ extra: _*))
+        .collect().headOption.filterNot(_.isNullAt(0))
+      def show(v: Seq[Int]) =
+        stamp.zip(v).map { case (c, x) => s"$c = $x" }.mkString("(", ", ", ")")
+      val got = row.map(r => stamp.indices.map(r.getInt))
+      gate match {
+        case None => require(got.isDefined, s"cannot append to an EMPTY " +
+          s"$what - derive the founding wave with $derive")
+        case Some(g) => got.foreach(s => require(s == g,
+          s"$what was derived at ${show(s)} but the gate runs ${show(g)} " +
+            "- an artifact from one config never matches another's"))
+      }
+      row
+    }
+  }
+
+  private val SigHistory = Stamped("near-dup history",
+    "historicalNearSignatures", Seq("near_sig"), Seq("bits"))
+  private val BandHistory = Stamped("banded near-dup history",
+    "historicalNearBandKeys", Seq("band", "near_band"),
+    Seq("bands", "band_bits"))
+  private val KeeperHistory = Stamped("verified-gate history",
+    "historicalVerifiedKeepers", Seq("band", "bucket", "doc_id", "hs", "tsm"),
+    Seq("bands", "rows_per_band", "bucket_cap"))
+
   /** Exact streaming dedup: keep the first document per md5 content
     * digest seen within the watermark horizon (streaming q23). */
   def dedupExact(docs: DataFrame, textCol: String, eventTimeCol: String,
       horizon: String): DataFrame =
-    docs.withColumn("digest", md5(col(textCol).cast("binary")))
-      .withWatermark(eventTimeCol, horizon)
-      .dropDuplicatesWithinWatermark("digest")
-      .drop("digest")
+    keepFirst(docs, md5(col(textCol).cast("binary")), "digest",
+      eventTimeCol, horizon)
 
-  /** Near-dup streaming dedup: keep the first document per 16-bit
-    * SimHash signature (frequency-weighted token votes — streaming
-    * q28): token-level near-copies collapse onto the same signature
-    * without any pairwise comparison, the only shape that works on an
-    * unbounded stream. */
+  /** The canonical md5 digest — [[dedupNormalized]]'s key and its
+    * history's rows. */
+  private def canonicalDigest(text: Column): Column =
+    md5(canonicalText(text).cast("binary"))
+
   /** Normalization-aware streaming dedup — q91's canonicalize-then-
     * dedup as an ingest gate: keep the first document per CANONICAL
     * digest, so case/punctuation/whitespace variants of already-seen
@@ -55,58 +137,44 @@ object Dedup {
     * batch q91 run and this gate collapse the identical variants
     * (parity asserted in DedupSpec). Same watermark-bounded RocksDB
     * state discipline as [[dedupExact]]: one 16-byte digest per kept
-    * document inside the horizon. */
-  def dedupNormalized(docs: DataFrame, textCol: String,
-      eventTimeCol: String, horizon: String): DataFrame =
-    docs.withColumn("digest",
-        md5(graft.functions.TextFunctions.canonicalText(col(textCol))
-          .cast("binary")))
-      .withWatermark(eventTimeCol, horizon)
-      .dropDuplicatesWithinWatermark("digest")
-      .drop("digest")
-
-  /** The historical-digest relation for [[dedupNormalizedBootstrapped]]:
-    * one distinct canonical md5 per document of an already-ingested
-    * batch corpus — the artifact a nightly job persists beside the
-    * corpus (same derivation as the gate, so batch and stream agree
-    * digest-for-digest). */
-  def historicalDigests(corpus: DataFrame, textCol: String): DataFrame =
-    corpus.select(
-      md5(graft.functions.TextFunctions.canonicalText(col(textCol))
-        .cast("binary")).as("digest")).distinct()
-
-  /** [[dedupNormalized]] BOOTSTRAPPED from batch history — the
-    * operational gap a fresh stream has: its state store starts empty,
-    * so the first arrival of content the BATCH corpus already holds
-    * would be admitted and re-ingested. The fix is Spark-first
-    * composition, not custom state surgery: a STREAM-STATIC left-anti
-    * join against [[historicalDigests]] drops historical duplicates
-    * map-side (stateless — the static side is planner-managed,
-    * broadcast when it fits; a production deployment hands it a
-    * digest table at rest), and the watermark-bounded stateful stage
-    * then handles only STREAM-INTERNAL duplicates, exactly as before.
-    * State cost is unchanged (one digest per kept in-horizon doc —
-    * history never enters the store); the history snapshot is bound
-    * at composition time, the same contract as every static side
+    * document inside the horizon.
+    *
+    * `history` ([[historicalDigests]]) BOOTSTRAPS the gate from batch
+    * history — the operational gap a fresh stream has: its state store
+    * starts empty, so the first arrival of content the BATCH corpus
+    * already holds would be admitted and re-ingested. The fix is
+    * Spark-first composition, not custom state surgery: the stateless
+    * anti-join of [[keepFirst]] drops historical duplicates map-side,
+    * and the watermark-bounded stateful stage then handles only
+    * STREAM-INTERNAL duplicates, exactly as before. State cost is
+    * unchanged (one digest per kept in-horizon doc — history never
+    * enters the store); the history snapshot is bound at composition
+    * time, the same contract as every static side
     * ([[Curation.decontamGate]]'s eval set). */
-  def dedupNormalizedBootstrapped(docs: DataFrame, textCol: String,
-      eventTimeCol: String, horizon: String, history: DataFrame): DataFrame =
-    docs.withColumn("digest",
-        md5(graft.functions.TextFunctions.canonicalText(col(textCol))
-          .cast("binary")))
-      .join(history.select(col("digest")), Seq("digest"), "left_anti")
-      .withWatermark(eventTimeCol, horizon)
-      .dropDuplicatesWithinWatermark("digest")
-      .drop("digest")
+  def dedupNormalized(docs: DataFrame, textCol: String,
+      eventTimeCol: String, horizon: String,
+      history: Option[DataFrame] = None): DataFrame =
+    keepFirst(docs, canonicalDigest(col(textCol)), "digest", eventTimeCol,
+      horizon, history.map(_.select(col("digest"))))
 
+  /** The historical-digest relation for [[dedupNormalized]]'s
+    * `history`: one distinct canonical md5 per document of an
+    * already-ingested batch corpus — the artifact a nightly job
+    * persists beside the corpus (same derivation as the gate, so batch
+    * and stream agree digest-for-digest). */
+  def historicalDigests(corpus: DataFrame, textCol: String): DataFrame =
+    corpus.select(canonicalDigest(col(textCol)).as("digest")).distinct()
+
+  /** Near-dup streaming dedup: keep the first document per 16-bit
+    * SimHash signature (frequency-weighted token votes — streaming
+    * q28): token-level near-copies collapse onto the same signature
+    * without any pairwise comparison, the only shape that works on an
+    * unbounded stream. */
   def dedupSimhash(docs: DataFrame, textCol: String, eventTimeCol: String,
       horizon: String): DataFrame =
-    docs.withColumn("hs",
-        transform(split(col(textCol), " "), t => portableHashMod(t)))
-      .withColumn("simhash", simhash16(col("hs")))
-      .withWatermark(eventTimeCol, horizon)
-      .dropDuplicatesWithinWatermark("simhash")
-      .drop("hs", "simhash")
+    keepFirst(docs,
+      simhash16(transform(split(col(textCol), " "), t => portableHashMod(t))),
+      "simhash", eventTimeCol, horizon)
 
   /** The INGEST-GATE near-dup signature: 16-bit SimHash
     * (frequency-weighted token votes, [[dedupSimhash]]'s collapse
@@ -117,8 +185,8 @@ object Dedup {
     * stage, its history bootstrap, and the batch parity checks
     * (DedupSpec), the [[graft.functions.TextFunctions.canonicalText]]
     * discipline. */
-  private[graft] def nearDupSignature(text: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column = nearDupSignatureAt(text, 16)
+  private[graft] def nearDupSignature(text: Column): Column =
+    nearDupSignatureAt(text, 16)
 
   /** [[nearDupSignature]] at a chosen WIDTH — the gate's capacity
     * knob, priced by q143's width table (wider = fewer structural
@@ -127,27 +195,24 @@ object Dedup {
     * the [[graft.functions.TextFunctions.portableHashMod]] ceiling).
     * Same canonical-token vote fold at every width
     * ([[graft.expressions.SimhashBits]]). */
-  private[graft] def nearDupSignatureAt(text: org.apache.spark.sql.Column,
-      bits: Int): org.apache.spark.sql.Column =
+  private[graft] def nearDupSignatureAt(text: Column, bits: Int): Column =
     graft.expressions.BpeFunctions.simhashBits(transform(
-      split(graft.functions.TextFunctions.canonicalText(text), " "),
-      t => portableHashMod(t)), bits)
+      split(canonicalText(text), " "), t => portableHashMod(t)), bits)
 
   /** The historical near-dup signatures of an already-ingested batch
     * corpus — the [[historicalDigests]] analog for the near-dup gate
     * stage: one distinct [[nearDupSignature]] per corpus document,
     * the artifact a nightly job persists beside the corpus so a FRESH
     * stream drops paraphrases of history statelessly. The rows CARRY
-    * their width (`bits` column — review r20, the banded artifact's
-    * config-stamp discipline applied to the single-signature path):
-    * signatures from one width are meaningless at another, and the
-    * gate verifies the artifact matches its own knob at composition
-    * time instead of anti-joining keys that can never match. */
+    * their width (`bits` stamp): signatures from one width are
+    * meaningless at another, and the gate verifies the artifact
+    * matches its own knob at composition time instead of anti-joining
+    * keys that can never match. */
   def historicalNearSignatures(corpus: DataFrame,
       textCol: String, bits: Int = 16): DataFrame =
-    corpus.select(nearDupSignatureAt(col(textCol), bits).as("near_sig"))
-      .distinct()
-      .withColumn("bits", lit(bits))
+    SigHistory.write(
+      corpus.select(nearDupSignatureAt(col(textCol), bits).as("near_sig"))
+        .distinct(), bits)
 
   /** Incremental maintenance for the single-signature history — the
     * [[historicalVerifiedKeepersAppend]] discipline on the anti-join
@@ -159,76 +224,23 @@ object Dedup {
     * re-read. */
   def historicalNearSignaturesAppend(history: DataFrame,
       newDocs: DataFrame, textCol: String): DataFrame = {
-    // columns first (review r20): a pre-stamp artifact hits the
-    // friendly message, not an AnalysisException; the width then
-    // comes from the stamp itself, so nothing remains to cross-check
-    require(history.columns.contains("near_sig") &&
-        history.columns.contains("bits"),
-      "near-dup history must carry (near_sig) and its width stamp " +
-        "(bits) - derive it with historicalNearSignatures")
-    val bits = history.select(col("bits")).limit(1).collect().headOption
-      .getOrElse(throw new IllegalArgumentException(
-        "cannot append to an EMPTY near-dup history - derive the " +
-          "founding wave with historicalNearSignatures")).getInt(0)
+    val bits = SigHistory.check(history, None).get.getInt(0)
     history.unionByName(historicalNearSignatures(newDocs, textCol, bits))
       .distinct()
-  }
-
-  /** Fail loudly when a [[historicalNearSignatures]] artifact doesn't
-    * match the gate stage's own width — the validation every entry
-    * point runs (ADVICE r19: only ingestGate checked the banded
-    * artifact, so direct [[dedupNearSignature]] callers with a
-    * mismatched width got a silently inert bootstrap). */
-  private[graft] def validateSigHistory(h: DataFrame, bits: Int): Unit = {
-    require(h.columns.contains("near_sig"),
-      "near-dup history must carry (near_sig) - derive it with " +
-        "historicalNearSignatures")
-    require(h.columns.contains("bits"),
-      "near-dup history predates width stamping - re-derive it with " +
-        "historicalNearSignatures (rows carry their bits)")
-    // an EMPTY history (empty batch corpus) is vacuously fine
-    h.select(col("bits")).limit(1).collect().headOption.foreach { cfg =>
-      require(cfg.getInt(0) == bits,
-        s"near-dup history was derived at bits = ${cfg.getInt(0)} but " +
-          s"the gate runs bits = $bits - signatures from one width " +
-          "never match another's")
-    }
-  }
-
-  /** [[validateSigHistory]]'s banded twin: fail loudly when a
-    * [[historicalNearBandKeys]] artifact doesn't match the gate's own
-    * (bands, bandBits) — run by [[dedupNearBanded]] itself, so direct
-    * callers get the same composition-time guard as
-    * [[Curation.ingestGate]] (ADVICE r19). */
-  private[graft] def validateBandHistory(h: DataFrame, bands: Int,
-      bandBits: Int): Unit = {
-    require(Seq("band", "near_band").forall(h.columns.contains),
-      "banded near-dup history must carry (band, near_band) - derive " +
-        "it with historicalNearBandKeys")
-    require(h.columns.contains("bands") && h.columns.contains("band_bits"),
-      "banded near-dup history predates config stamping - re-derive it " +
-        "with historicalNearBandKeys (rows carry bands/band_bits)")
-    h.select(col("bands"), col("band_bits")).limit(1).collect()
-      .headOption.foreach { cfg =>
-        require(cfg.getInt(0) == bands && cfg.getInt(1) == bandBits,
-          s"banded near-dup history was derived at (bands = " +
-            s"${cfg.getInt(0)}, bandBits = ${cfg.getInt(1)}) but the " +
-            s"gate runs (bands = $bands, bandBits = $bandBits) - band " +
-            "keys from one config never match another's")
-      }
   }
 
   /** NEAR-DUP dedup stage for the composed ingest gate (VERDICT r17
     * §next-1 — the last q113 stage without a streaming face in the
     * composition): keep the first document per [[nearDupSignature]]
     * within the horizon, optionally bootstrapped from batch history
-    * ([[historicalNearSignatures]]) via a stateless stream-static
-    * anti-join — the [[dedupNormalizedBootstrapped]] composition
-    * verbatim, on the near-dup key. A lightly-edited re-crawl of an
-    * already-seen page (the copies the canonical digest structurally
-    * misses) collapses onto the original's signature and drops AT
-    * INGEST instead of waiting for the nightly batch funnel's
-    * LSH+verify stage (q113 stage 3) to catch it.
+    * ([[historicalNearSignatures]] at the SAME `bits`, checked at
+    * composition time) via [[keepFirst]]'s stateless anti-join — the
+    * [[dedupNormalized]] bootstrap verbatim, on the near-dup key. A
+    * lightly-edited re-crawl of an already-seen page (the copies the
+    * canonical digest structurally misses) collapses onto the
+    * original's signature and drops AT INGEST instead of waiting for
+    * the nightly batch funnel's LSH+verify stage (q113 stage 3) to
+    * catch it.
     *
     * Signature-collapse semantics, inherited from [[dedupSimhash]]:
     * collapse needs no pairwise comparison (the only shape an
@@ -247,42 +259,47 @@ object Dedup {
   def dedupNearSignature(docs: DataFrame, textCol: String,
       eventTimeCol: String, horizon: String,
       history: Option[DataFrame] = None, bits: Int = 16): DataFrame = {
-    history.foreach(validateSigHistory(_, bits))
-    val signed = docs.withColumn("near_sig",
-      nearDupSignatureAt(col(textCol), bits))
-    history.fold(signed)(h =>
-        signed.join(h.select(col("near_sig")), Seq("near_sig"), "left_anti"))
-      .withWatermark(eventTimeCol, horizon)
-      .dropDuplicatesWithinWatermark("near_sig")
-      .drop("near_sig")
+    history.foreach(SigHistory.check(_, Some(Seq(bits))))
+    keepFirst(docs, nearDupSignatureAt(col(textCol), bits), "near_sig",
+      eventTimeCol, horizon, history.map(_.select(col("near_sig"))))
   }
+
+  /** The banded signature's width, checked once for every banded
+    * derivation: `bands` slices of `bandBits` bits must fit
+    * portableHashMod's 31-bit hash range. */
+  private def bandedWidth(bands: Int, bandBits: Int): Int = {
+    require(bands >= 1 && bandBits >= 1 && bands * bandBits <= 31,
+      "bands * bandBits must fit portableHashMod's 31-bit hash range")
+    bands * bandBits
+  }
+
+  /** Band `b` of a banded signature: its `bandBits`-bit slice — the one
+    * slice arithmetic the gate and its history share. */
+  private def bandSlice(sig: Column, b: Int, bandBits: Int): Column =
+    shiftright(sig, b * bandBits).bitwiseAND(lit((1L << bandBits) - 1))
 
   /** The historical BAND KEYS of an already-ingested batch corpus —
     * [[historicalNearSignatures]]' analog for the BANDED gate stage
     * (VERDICT r18 §next-1: the banded lever had no history bootstrap):
     * one distinct `(band, near_band)` row per corpus document per
     * band, derived through the identical slice arithmetic the gate
-    * applies ([[dedupNearBanded]]), so a FRESH stream drops a lightly
+    * applies ([[bandSlice]]), so a FRESH stream drops a lightly
     * edited copy of history at whichever band survives the edit —
     * statelessly, before the state store warms up. The artifact a
     * nightly batch persists beside the corpus; its size is
     * `bands · |distinct keys|`, bounded by `bands · 2^bandBits`. The
-    * rows CARRY their config (`bands`, `band_bits` columns): band
-    * keys from one (bands, bandBits) point are meaningless at
-    * another, and the gate verifies the artifact matches its own
-    * knobs at composition time instead of anti-joining keys that can
-    * never match (review r19). */
+    * rows CARRY their config (`bands`, `band_bits` stamp): band keys
+    * from one (bands, bandBits) point are meaningless at another, and
+    * the gate verifies the artifact matches its own knobs at
+    * composition time instead of anti-joining keys that can never
+    * match. */
   def historicalNearBandKeys(corpus: DataFrame, textCol: String,
       bands: Int = 2, bandBits: Int = 15): DataFrame = {
-    require(bands >= 1 && bandBits >= 1 && bands * bandBits <= 31,
-      "bands * bandBits must fit portableHashMod's 31-bit hash range")
-    val sig = nearDupSignatureAt(col(textCol), bands * bandBits)
-    corpus.select(posexplode(array((0 until bands).map(b =>
-        shiftright(sig, b * bandBits).bitwiseAND(lit((1L << bandBits) - 1))): _*))
-        .as(Seq("band", "near_band")))
-      .distinct()
-      .withColumn("bands", lit(bands))
-      .withColumn("band_bits", lit(bandBits))
+    val sig = nearDupSignatureAt(col(textCol), bandedWidth(bands, bandBits))
+    BandHistory.write(
+      corpus.select(posexplode(array((0 until bands).map(
+          bandSlice(sig, _, bandBits)): _*)).as(Seq("band", "near_band")))
+        .distinct(), bands, bandBits)
   }
 
   /** [[historicalNearSignaturesAppend]]'s banded twin: fold one new
@@ -292,16 +309,7 @@ object Dedup {
     * row (spec-asserted); only the new wave is signed. */
   def historicalNearBandKeysAppend(history: DataFrame,
       newDocs: DataFrame, textCol: String): DataFrame = {
-    require(Seq("band", "near_band", "bands", "band_bits")
-        .forall(history.columns.contains),
-      "banded near-dup history must carry (band, near_band) and its " +
-        "(bands, band_bits) stamp - derive it with " +
-        "historicalNearBandKeys")
-    val cfg = history.select(col("bands"), col("band_bits"))
-      .limit(1).collect().headOption
-      .getOrElse(throw new IllegalArgumentException(
-        "cannot append to an EMPTY banded near-dup history - derive " +
-          "the founding wave with historicalNearBandKeys"))
+    val cfg = BandHistory.check(history, None).get
     history.unionByName(historicalNearBandKeys(newDocs, textCol,
         cfg.getInt(0), cfg.getInt(1)))
       .distinct()
@@ -316,12 +324,12 @@ object Dedup {
     * gate. A light edit that flips bits in one band still collapses
     * through the other(s): with per-band match probability p, banded
     * recall is 1 − (1 − p)^bands, bought with ~bands× the false-
-    * collapse rate and `bands` state operators (one watermark-bounded
-    * `dropDuplicatesWithinWatermark` per band, spec-asserted). The
-    * (bands, bandBits) point is PRICED by q144's knob table (false
-    * collapse at the full-corpus horizon vs planted edited-copy
-    * recall, per config — bands = 1 reconciles with q143's width
-    * rows); fix the config from that table before enabling.
+    * collapse rate and `bands` state operators (one [[keepFirst]] per
+    * band, spec-asserted). The (bands, bandBits) point is PRICED by
+    * q144's knob table (false collapse at the full-corpus horizon vs
+    * planted edited-copy recall, per config — bands = 1 reconciles
+    * with q143's width rows); fix the config from that table before
+    * enabling.
     *
     * Registration semantics, stated honestly: band b's state
     * registers the band-b keys of documents that SURVIVED bands
@@ -334,29 +342,23 @@ object Dedup {
     * bands·bandBits ≤ 31).
     *
     * `history` ([[historicalNearBandKeys]] at the SAME (bands,
-    * bandBits)) bootstraps every band: band b's arrivals anti-join the
-    * history's band-b keys STATELESSLY before its stateful stage —
-    * history rides the plan (broadcast when it fits), never the
-    * store, exactly the [[dedupNormalizedBootstrapped]] contract. */
+    * bandBits), checked at composition time) bootstraps every band:
+    * band b's arrivals anti-join the history's band-b keys STATELESSLY
+    * before its stateful stage — history rides the plan (broadcast
+    * when it fits), never the store, exactly the [[dedupNormalized]]
+    * bootstrap. */
   def dedupNearBanded(docs: DataFrame, textCol: String,
       eventTimeCol: String, horizon: String, bands: Int = 2,
       bandBits: Int = 15, history: Option[DataFrame] = None): DataFrame = {
-    require(bands >= 1 && bandBits >= 1 && bands * bandBits <= 31,
-      "bands * bandBits must fit portableHashMod's 31-bit hash range")
-    history.foreach(validateBandHistory(_, bands, bandBits))
+    val width = bandedWidth(bands, bandBits)
+    history.foreach(BandHistory.check(_, Some(Seq(bands, bandBits))))
     val signed = docs.withColumn("near_sig_full",
-      nearDupSignatureAt(col(textCol), bands * bandBits))
+      nearDupSignatureAt(col(textCol), width))
     (0 until bands).foldLeft(signed) { (d, b) =>
-      val keyed = d.withColumn(s"near_band_$b",
-        shiftright(col("near_sig_full"), b * bandBits)
-          .bitwiseAND(lit((1L << bandBits) - 1)))
-      history.fold(keyed)(h =>
-          keyed.join(h.filter(col("band") === b)
-            .select(col("near_band").as(s"near_band_$b")),
-            Seq(s"near_band_$b"), "left_anti"))
-        .withWatermark(eventTimeCol, horizon)
-        .dropDuplicatesWithinWatermark(s"near_band_$b")
-        .drop(s"near_band_$b")
+      keepFirst(d, bandSlice(col("near_sig_full"), b, bandBits),
+        s"near_band_$b", eventTimeCol, horizon,
+        history.map(_.filter(col("band") === b)
+          .select(col("near_band").as(s"near_band_$b"))))
     }.drop("near_sig_full")
   }
 
@@ -456,38 +458,53 @@ object Dedup {
 
   /** The verified gate's keyed projection — THE batch derivations,
     * map-side, shared by the gate stream and the history bootstrap:
-    * sorted distinct 3-shingle hashes (q131's shingleHashSets), the
-    * per-row 16-hash MinHash (array_min over the same universal
-    * hashes minhashSigs aggregates), md5 band-hash buckets (q131's
-    * slice-join-hash) over the FIRST bands·rowsPerBand hashes. One
-    * output row per (document, band): `(band, bucket, docId, hs,
-    * ts)`, [[NearBandDoc]]'s exact shape (the stream adds its
-    * watermark before binding the encoder). */
+    * the sorted distinct 3-shingle hash set (q131's shingleHashSets,
+    * [[graft.expressions.DedupFunctions.shingleHashSetSorted]]), its
+    * 16-hash MinHash
+    * ([[graft.expressions.DedupFunctions.minhashSigNative]], the same
+    * universal hashes minhashSigs aggregates), and the md5 band
+    * buckets ([[graft.functions.TextFunctions.md5BandBucket]], q131's
+    * slice-join-hash) over the FIRST bands·rowsPerBand hashes.
+    * Documents with no shingle (null, or under 3 tokens) have no key
+    * and never enter the gate. One output row per (document, band):
+    * `(band, bucket, docId, hs, ts)`, [[NearBandDoc]]'s exact shape
+    * (the stream adds its watermark before binding the encoder). */
   private[graft] def verifiedBandKeyed(docs: DataFrame, idCol: String,
       textCol: String, eventTimeCol: String, bands: Int,
       rowsPerBand: Int): DataFrame = {
-    val P = graft.functions.TextFunctions.P
-    val hs = array_sort(array_distinct(transform(
-      graft.functions.TextFunctions.wordShingles(
-        split(col(textCol), " "), 3),
-      s => portableHashMod(s))))
-    val msig = array((0 until 16).map(h =>
-      array_min(transform(col("hs"),
-        x => pmod(lit(2L * h + 1) * x + lit(12289L * h), lit(P))))): _*)
+    require(bands >= 1 && rowsPerBand >= 1 && bands * rowsPerBand <= 16,
+      "bands * rowsPerBand must fit the 16-hash MinHash signature")
     docs
       .select(col(idCol).cast("long").as("docId"),
-        col(eventTimeCol).cast("timestamp").as("ts"), hs.as("hs"))
+        col(eventTimeCol).cast("timestamp").as("ts"),
+        shingleHashSetSorted(split(col(textCol), " "), 3).as("hs"))
       .filter(size(col("hs")) > 0)
-      .withColumn("msig", msig)
+      .withColumn("msig", minhashSigNative(col("hs"), 16))
       .select(col("docId"), col("hs"), col("ts"),
         posexplode(array((0 until bands).map(b =>
-            portableHashMod(array_join(transform(
-              slice(col("msig"), b * rowsPerBand + 1, rowsPerBand),
-              x => x.cast("string")), ","))): _*))
+            md5BandBucket(col("msig"), lit(b), rowsPerBand)): _*))
           .as(Seq("band", "bucket")))
       .select(col("band").cast("int").as("band"), col("bucket"),
         col("docId"), col("hs"), col("ts"))
   }
+
+  /** One wave of corpus documents keyed for the verified gate, every
+    * row stamped at the wave's snapshot instant `asOfMs`. */
+  private def keyedWave(docs: DataFrame, idCol: String, textCol: String,
+      asOfMs: Long, bands: Int, rowsPerBand: Int)
+      : org.apache.spark.sql.Dataset[NearBandDoc] = {
+    import docs.sparkSession.implicits._
+    verifiedBandKeyed(
+      docs.withColumn("__gate_ts", timestamp_millis(lit(asOfMs))),
+      idCol, textCol, "__gate_ts", bands, rowsPerBand).as[NearBandDoc]
+  }
+
+  /** Per-bucket keepers as the stamped verified-history artifact. */
+  private def keeperArtifact(
+      keepers: org.apache.spark.sql.Dataset[(Int, Long, Long, Seq[Long], Long)],
+      bands: Int, rowsPerBand: Int, cap: Int): DataFrame =
+    KeeperHistory.write(keepers.toDF("band", "bucket", "doc_id", "hs", "tsm"),
+      bands, rowsPerBand, cap)
 
   /** The verified gate's HISTORY artifact (VERDICT r19 §next-1 — the
     * one dedup stage without a bootstrap: a restarted or
@@ -500,7 +517,7 @@ object Dedup {
     * fMGWS initial state leaves the gate in exactly the state the
     * corpus streamed through in id order would have left it
     * (spec-asserted parity). Rows CARRY their config (`bands`,
-    * `rows_per_band`, `bucket_cap` columns) and the gate verifies the
+    * `rows_per_band`, `bucket_cap` stamp) and the gate verifies the
     * artifact matches its own knobs at composition time — the
     * [[historicalNearBandKeys]] stamp discipline.
     *
@@ -523,23 +540,14 @@ object Dedup {
   def historicalVerifiedKeepers(corpus: DataFrame, idCol: String,
       textCol: String, asOfMs: Long, bands: Int = 1, rowsPerBand: Int = 4,
       bucketCap: Int = 64): DataFrame = {
-    require(bands >= 1 && rowsPerBand >= 1 && bands * rowsPerBand <= 16,
-      "bands * rowsPerBand must fit the 16-hash MinHash signature")
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val keyed = verifiedBandKeyed(
-      corpus.withColumn("__gate_ts", timestamp_millis(lit(asOfMs))),
-      idCol, textCol, "__gate_ts", bands, rowsPerBand).as[NearBandDoc]
-    keyed.groupByKey(r => (r.band, r.bucket))
+    import corpus.sparkSession.implicits._
+    keeperArtifact(keyedWave(corpus, idCol, textCol, asOfMs, bands,
+        rowsPerBand).groupByKey(r => (r.band, r.bucket))
       .flatMapGroups { (key: (Int, Long), rows: Iterator[NearBandDoc]) =>
         val (entries, _) = foldVerifiedArrivals(Nil, rows.toSeq, bucketCap)
         entries.iterator.map(e =>
           (key._1, key._2, e.docId, e.hs.toSeq, e.tsm))
-      }
-      .toDF("band", "bucket", "doc_id", "hs", "tsm")
-      .withColumn("bands", lit(bands))
-      .withColumn("rows_per_band", lit(rowsPerBand))
-      .withColumn("bucket_cap", lit(bucketCap))
+      }, bands, rowsPerBand, bucketCap)
   }
 
   /** INCREMENTAL maintenance of the verified-history artifact — the
@@ -561,7 +569,7 @@ object Dedup {
     * that continuity to equal a from-scratch derivation over the
     * full corpus history, waves must append in STRICT event order:
     * `asOfMs` must be > every resident keeper's stamp (required,
-    * checked against the artifact — one bounded aggregate; a
+    * checked against the artifact in the same one-job stamp read; a
     * same-instant wave is registration-order-ambiguous and must
     * re-derive).
     *
@@ -572,28 +580,10 @@ object Dedup {
   def historicalVerifiedKeepersAppend(history: DataFrame,
       newDocs: DataFrame, idCol: String, textCol: String,
       asOfMs: Long): DataFrame = {
-    // columns FIRST (review r20): a pre-stamp artifact must hit the
-    // friendly re-derive message, not an AnalysisException from the
-    // config read; the values then come from the stamp itself, so no
-    // further config comparison exists to fail
-    require(Seq("band", "bucket", "doc_id", "hs", "tsm",
-        "bands", "rows_per_band", "bucket_cap")
-        .forall(history.columns.contains),
-      "verified-gate history must carry (band, bucket, doc_id, hs, " +
-        "tsm) plus its (bands, rows_per_band, bucket_cap) stamp - " +
-        "derive it with historicalVerifiedKeepers")
-    val cfgRow = history
-      .select(col("bands"), col("rows_per_band"), col("bucket_cap"),
-        col("tsm").cast("long"))
-      .agg(max(col("bands")), max(col("rows_per_band")),
-        max(col("bucket_cap")), max(col("tsm")))
-      .collect().head
-    if (cfgRow.isNullAt(0))
-      throw new IllegalArgumentException(
-        "cannot append to an EMPTY verified-history artifact - derive " +
-          "the founding wave with historicalVerifiedKeepers")
-    val (bands, rowsPerBand, cap, maxTsm) = (cfgRow.getInt(0),
-      cfgRow.getInt(1), cfgRow.getInt(2), cfgRow.getLong(3))
+    val cfg = KeeperHistory.check(history, None,
+      max(col("tsm").cast("long"))).get
+    val (bands, rowsPerBand, cap, maxTsm) = (cfg.getInt(0),
+      cfg.getInt(1), cfg.getInt(2), cfg.getLong(3))
     // STRICTLY after (review r20): at asOfMs == maxTsm a from-scratch
     // derivation interleaves the waves by docId at the tie while the
     // append folds the new wave on top — same-instant waves are
@@ -603,12 +593,9 @@ object Dedup {
         s"artifact's newest keeper ($maxTsm) - same-instant waves are " +
         "registration-order-ambiguous; re-derive with " +
         "historicalVerifiedKeepers instead")
-    val spark = history.sparkSession
-    import spark.implicits._
-    val keyed = verifiedBandKeyed(
-      newDocs.withColumn("__gate_ts", timestamp_millis(lit(asOfMs))),
-      idCol, textCol, "__gate_ts", bands, rowsPerBand).as[NearBandDoc]
-    residentVerifiedEntries(history).groupByKey(_._1)
+    import history.sparkSession.implicits._
+    val keyed = keyedWave(newDocs, idCol, textCol, asOfMs, bands, rowsPerBand)
+    keeperArtifact(residentVerifiedEntries(history).groupByKey(_._1)
       .cogroup(keyed.groupByKey(r => (r.band, r.bucket))) {
         (key: (Int, Long),
             hstates: Iterator[((Int, Long), NearVerifiedState)],
@@ -618,11 +605,7 @@ object Dedup {
           val (entries, _) = foldVerifiedArrivals(entries0, nrows.toSeq, cap)
           entries.iterator.map(e =>
             (key._1, key._2, e.docId, e.hs.toSeq, e.tsm))
-      }
-      .toDF("band", "bucket", "doc_id", "hs", "tsm")
-      .withColumn("bands", lit(bands))
-      .withColumn("rows_per_band", lit(rowsPerBand))
-      .withColumn("bucket_cap", lit(cap))
+      }, bands, rowsPerBand, cap)
   }
 
   /** The ONE resident-artifact decoder behind the gate's initial
@@ -645,35 +628,6 @@ object Dedup {
         (key, NearVerifiedState(rows
           .map(r => NearVerifiedEntry(r._3, r._4.toArray, r._5))
           .toList.sortBy(e => (e.tsm, e.docId))))
-      }
-  }
-
-  /** Fail loudly when a [[historicalVerifiedKeepers]] artifact doesn't
-    * match the gate's own (bands, rowsPerBand, bucketCap) — keeper
-    * state from one config lives in buckets another config never
-    * probes (bands/rows move the bucket hash) or continues a FIFO the
-    * cap would have cut differently, so a mismatch means the nightly
-    * job and the gate disagree and the bootstrap would be silently
-    * inert or silently over-retentive. */
-  private[graft] def validateVerifiedHistory(h: DataFrame, bands: Int,
-      rowsPerBand: Int, bucketCap: Int): Unit = {
-    require(Seq("band", "bucket", "doc_id", "hs", "tsm")
-        .forall(h.columns.contains),
-      "verified-gate history must carry (band, bucket, doc_id, hs, " +
-        "tsm) - derive it with historicalVerifiedKeepers")
-    require(Seq("bands", "rows_per_band", "bucket_cap")
-        .forall(h.columns.contains),
-      "verified-gate history predates config stamping - re-derive it " +
-        "with historicalVerifiedKeepers (rows carry their config)")
-    h.select(col("bands"), col("rows_per_band"), col("bucket_cap"))
-      .limit(1).collect().headOption.foreach { cfg =>
-        require(cfg.getInt(0) == bands && cfg.getInt(1) == rowsPerBand &&
-          cfg.getInt(2) == bucketCap,
-          s"verified-gate history was derived at (bands = ${cfg.getInt(0)}" +
-            s", rowsPerBand = ${cfg.getInt(1)}, bucketCap = " +
-            s"${cfg.getInt(2)}) but the gate runs (bands = $bands, " +
-            s"rowsPerBand = $rowsPerBand, bucketCap = $bucketCap) - " +
-            "keeper state from one config never matches another's")
       }
   }
 
@@ -745,16 +699,14 @@ object Dedup {
       bands: Int = 1, rowsPerBand: Int = 4, bucketCap: Int = 64,
       history: Option[DataFrame] = None)
       : org.apache.spark.sql.Dataset[NearVerifiedVerdict] = {
-    require(bands >= 1 && rowsPerBand >= 1 && bands * rowsPerBand <= 16,
-      "bands * rowsPerBand must fit the 16-hash MinHash signature")
-    history.foreach(validateVerifiedHistory(_, bands, rowsPerBand,
-      bucketCap))
     val spark = docs.sparkSession
     import spark.implicits._
     val keyed = verifiedBandKeyed(docs, idCol, textCol, eventTimeCol,
         bands, rowsPerBand)
       .withWatermark("ts", s"$horizonMs milliseconds")
       .as[NearBandDoc]
+    history.foreach(KeeperHistory.check(_,
+      Some(Seq(bands, rowsPerBand, bucketCap))))
     val grouped = keyed.groupByKey(r => (r.band, r.bucket))
     history match {
       case None =>
@@ -819,12 +771,9 @@ object Dedup {
     * evicted at the horizon like the exact twin). */
   def dedupEmbedding(docs: DataFrame, embCol: String, eventTimeCol: String,
       horizon: String, bits: Int = 16): DataFrame =
-    docs.withColumn("srp_sig",
-        graft.operators.Pipeline.srpBucket(
-          transform(col(embCol), x => x.cast("double")), bits))
-      .withWatermark(eventTimeCol, horizon)
-      .dropDuplicatesWithinWatermark("srp_sig")
-      .drop("srp_sig")
+    keepFirst(docs, graft.operators.Pipeline.srpBucket(
+        transform(col(embCol), x => x.cast("double")), bits),
+      "srp_sig", eventTimeCol, horizon)
 
   /** PASSAGE-level streaming dedup (streaming q56): explode each
     * arriving document into non-overlapping `chunkTokens`-token chunks
@@ -849,8 +798,8 @@ object Dedup {
     * — larger than document-level state by the chunks-per-doc factor,
     * which is why the horizon (and RocksDB) matter more here. */
   def dedupPassages(docs: DataFrame, textCol: String, eventTimeCol: String,
-      horizon: String, chunkTokens: Int = 16): DataFrame =
-    docs.withColumn("toks", split(col(textCol), " "))
+      horizon: String, chunkTokens: Int = 16): DataFrame = {
+    val chunks = docs.withColumn("toks", split(col(textCol), " "))
       // filter BEFORE sequence: sequence(1, 0) DESCENDS, not empties
       .filter(size(col("toks")) >= chunkTokens)
       .select(col("*"), posexplode(transform(
@@ -858,10 +807,9 @@ object Dedup {
         i => array_join(
           slice(col("toks"), (i - 1) * chunkTokens + 1, lit(chunkTokens)), " ")))
         .as(Seq("chunk_idx", "chunk")))
-      .withColumn("chunk_h", md5(col("chunk").cast("binary")))
-      .withWatermark(eventTimeCol, horizon)
-      .dropDuplicatesWithinWatermark("chunk_h")
-      .drop("toks", "chunk_h")
+    keepFirst(chunks, md5(col("chunk").cast("binary")), "chunk_h",
+      eventTimeCol, horizon).drop("toks")
+  }
 
   /** CONTENT-DEFINED streaming passage dedup (streaming q72): chunk
     * boundaries follow the content, not token offsets
@@ -874,11 +822,8 @@ object Dedup {
     * array math, stream-safe by construction. */
   def dedupPassagesCdc(docs: DataFrame, textCol: String, eventTimeCol: String,
       horizon: String, cutMod: Int = 8): DataFrame =
-    graft.operators.Pipeline.cdcChunkExplode(docs, textCol, cutMod)
-      .withColumn("chunk_h", md5(col("chunk").cast("binary")))
-      .withWatermark(eventTimeCol, horizon)
-      .dropDuplicatesWithinWatermark("chunk_h")
-      .drop("chunk_h")
+    keepFirst(graft.operators.Pipeline.cdcChunkExplode(docs, textCol, cutMod),
+      md5(col("chunk").cast("binary")), "chunk_h", eventTimeCol, horizon)
 
   /** EXACT image dedup at ingest — streaming q97's `exact` face: keep
     * the first media row per payload byte digest within the horizon.
@@ -887,10 +832,23 @@ object Dedup {
     * [[dedupExact]] regardless of media size or codec. */
   def dedupImageExact(files: DataFrame, payloadCol: String,
       eventTimeCol: String, horizon: String): DataFrame =
-    files.withColumn("media_digest", md5(col(payloadCol)))
-      .withWatermark(eventTimeCol, horizon)
-      .dropDuplicatesWithinWatermark("media_digest")
-      .drop("media_digest")
+    keepFirst(files, md5(col(payloadCol)), "media_digest", eventTimeCol,
+      horizon)
+
+  /** The decoding media gates' key: `tag:` + the shared decode's
+    * signature, computed inside a UDF — not a Column expression,
+    * because no Catalyst builtin decodes media; this is the streaming
+    * seam of the batch `mapPartitions` decode, one row in, one short
+    * signature out, payload never shuffled. A payload no codec accepts
+    * degrades to byte-exact dedup — the `raw:` key is its md5 hex
+    * ([[graft.operators.Multimodal.md5Hex]], the batch exact faces'
+    * digest) — instead of every such row colliding on one null
+    * signature. */
+  private def decodedOrRaw(payload: Column, tag: String)(
+      decode: Array[Byte] => Option[String]): Column =
+    udf { (p: Array[Byte]) =>
+      decode(p).fold("raw:" + Multimodal.md5Hex(p))(s"$tag:" + _)
+    }.apply(payload)
 
   /** PERCEPTUAL image dedup at ingest — streaming q97's `near` face as
     * signature-collapse (the [[dedupSimhash]] acceptance: two
@@ -900,26 +858,13 @@ object Dedup {
     * batch operator's banded join). The signature is THE shared
     * derivation ([[graft.operators.Multimodal.perceptualDHash]]:
     * decode → 8×8 bilinear raster → dHash), so the gate and a batch
-    * q97 run agree hash-for-hash. Decode happens inside a UDF — not a
-    * Column expression, because no Catalyst builtin decodes an image;
-    * this is the streaming seam of the batch `mapPartitions` decode,
-    * one row in, one 8-byte signature out, payload never shuffled.
-    * Payloads no codec accepts degrade to byte-exact dedup (a `raw:`
-    * digest key) instead of all colliding on one null signature. */
+    * q97 run agree hash-for-hash; undecodable payloads take the
+    * [[decodedOrRaw]] byte-exact key. */
   def dedupImagePerceptual(files: DataFrame, payloadCol: String,
-      eventTimeCol: String, horizon: String): DataFrame = {
-    val sig = udf { (payload: Array[Byte]) =>
-      graft.operators.Multimodal.perceptualDHash(payload) match {
-        case Some(h) => "ph:" + h
-        case None => "raw:" + java.security.MessageDigest.getInstance("MD5")
-          .digest(payload).map("%02x".format(_)).mkString
-      }
-    }
-    files.withColumn("img_sig", sig(col(payloadCol)))
-      .withWatermark(eventTimeCol, horizon)
-      .dropDuplicatesWithinWatermark("img_sig")
-      .drop("img_sig")
-  }
+      eventTimeCol: String, horizon: String): DataFrame =
+    keepFirst(files, decodedOrRaw(col(payloadCol), "ph")(
+        Multimodal.perceptualDHash(_).map(_.toString)),
+      "img_sig", eventTimeCol, horizon)
 
   /** GAIN-INVARIANT audio dedup at ingest — streaming q98's robust face
     * as signature-collapse on THE shared derivation
@@ -928,22 +873,12 @@ object Dedup {
     * batch q98 run agree bit-for-bit: a loudness-changed copy arriving
     * within the horizon collapses structurally (positive gain moves no
     * comparison). Same UDF seam and degrade contract as
-    * [[dedupImagePerceptual]]: payloads no codec accepts fall back to a
-    * byte-exact `raw:` digest key instead of colliding on one null. */
+    * [[dedupImagePerceptual]] ([[decodedOrRaw]]). */
   def dedupAudioGain(files: DataFrame, payloadCol: String,
-      eventTimeCol: String, horizon: String): DataFrame = {
-    val sig = udf { (payload: Array[Byte]) =>
-      graft.operators.Multimodal.audioFingerprint(payload) match {
-        case Some(f) => "af:" + f
-        case None => "raw:" + java.security.MessageDigest.getInstance("MD5")
-          .digest(payload).map("%02x".format(_)).mkString
-      }
-    }
-    files.withColumn("audio_sig", sig(col(payloadCol)))
-      .withWatermark(eventTimeCol, horizon)
-      .dropDuplicatesWithinWatermark("audio_sig")
-      .drop("audio_sig")
-  }
+      eventTimeCol: String, horizon: String): DataFrame =
+    keepFirst(files, decodedOrRaw(col(payloadCol), "af")(
+        Multimodal.audioFingerprint(_).map(_.toString)),
+      "audio_sig", eventTimeCol, horizon)
 
   /** FRAME-SET video dedup at ingest — the streaming face of q99's
     * signature relation: each container decodes through THE shared
@@ -955,19 +890,10 @@ object Dedup {
     * needs the batch operator's key-blocked join (q99's `near` face);
     * this gate is the exact/set face an unbounded stream admits (the
     * [[dedupSimhash]] acceptance). Malformed containers degrade to the
-    * byte-exact `raw:` key. */
+    * byte-exact `raw:` key ([[decodedOrRaw]]). */
   def dedupVideoFrameSet(files: DataFrame, payloadCol: String,
-      eventTimeCol: String, horizon: String): DataFrame = {
-    val sig = udf { (payload: Array[Byte]) =>
-      graft.operators.Multimodal.frameKeys(payload) match {
-        case Some(keys) => "vf:" + keys.sorted.mkString(",")
-        case None => "raw:" + java.security.MessageDigest.getInstance("MD5")
-          .digest(payload).map("%02x".format(_)).mkString
-      }
-    }
-    files.withColumn("video_sig", sig(col(payloadCol)))
-      .withWatermark(eventTimeCol, horizon)
-      .dropDuplicatesWithinWatermark("video_sig")
-      .drop("video_sig")
-  }
+      eventTimeCol: String, horizon: String): DataFrame =
+    keepFirst(files, decodedOrRaw(col(payloadCol), "vf")(
+        Multimodal.frameKeys(_).map(_.sorted.mkString(","))),
+      "video_sig", eventTimeCol, horizon)
 }

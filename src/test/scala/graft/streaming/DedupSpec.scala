@@ -495,8 +495,8 @@ class DedupSpec extends SparkSpec {
     val in = MemoryStream[(Long, String, Long)]
     val docs = in.toDF().toDF("doc_id", "text", "sec")
       .withColumn("ts", col("sec").cast("timestamp"))
-    val query = Dedup.dedupNormalizedBootstrapped(
-        docs, "text", "ts", "10 minutes", history)
+    val query = Dedup.dedupNormalized(
+        docs, "text", "ts", "10 minutes", history = Some(history))
       .writeStream.format("memory").queryName("boot_mem")
       .outputMode("append").start()
     try {
@@ -1998,6 +1998,47 @@ class DedupSpec extends SparkSpec {
     Dedup.dedupNearBanded(docs, "text", "ts", "10 minutes",
       bands = 2, bandBits = 8, history = Some(hb))
     ()
+  }
+
+  test("verified gate keys equal the reference shingle/MinHash/bucket derivation, and q147's bucket") {
+    import graft.functions.TextFunctions.{minhashSignature, portableHashMod, wordShingles}
+    val (bands, r) = (2, 4)
+    val docs = graft.Tables.documents(spark, sfDir)
+      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
+      .unionByName(Seq[(Long, String)]((-1L, null), (-2L, "two tokens"),
+        (-3L, "a b c a b c a b c")).toDF("doc_id", "text"))
+      .withColumn("ts", timestamp_millis(lit(0L)))
+    def rows(d: org.apache.spark.sql.DataFrame) = d.collect()
+      .map(x => (x.getInt(0), x.getLong(1), x.getLong(2), x.getSeq[Long](3)))
+      .toSet
+    val gate = rows(Dedup.verifiedBandKeyed(docs, "doc_id", "text", "ts",
+      bands, r).select("band", "bucket", "docId", "hs"))
+    // the interpreted spellings: zip_with shingles + md5 hash, the
+    // 16-hash array_min MinHash, and the slice-join-hash bucket
+    val sigs = docs
+      .select(col("doc_id"), array_sort(array_distinct(transform(
+        wordShingles(split(col("text"), " "), 3),
+        t => portableHashMod(t)))).as("hs"))
+      .filter(size(col("hs")) > 0)
+      .withColumn("msig", minhashSignature(col("hs"), 16))
+    val ref = rows(sigs.select(posexplode(array((0 until bands).map(b =>
+        portableHashMod(array_join(transform(
+          slice(col("msig"), b * r + 1, r), x => x.cast("string")), ","))): _*))
+        .as(Seq("band", "bucket")), col("doc_id"), col("hs"))
+      .select(col("band").cast("int"), col("bucket"), col("doc_id"), col("hs")))
+    assert(gate.nonEmpty)
+    assert(gate == ref)
+    // a null text and a text under 3 tokens have no key; repeated
+    // shingles collapse to the 3 distinct ones
+    assert(!gate.exists(g => g._3 == -1L || g._3 == -2L))
+    assert(gate.filter(_._3 == -3L).map(_._4) ==
+      Set(DedupSpec.hsOf("a b c a b c a b c")))
+    assert(DedupSpec.hsOf("a b c a b c a b c").size == 3)
+    // q147's band bucket at (bands, r) is the gate's bucket
+    val q147 = graft.operators.Pipeline.allConfigBands(sigs, Seq((bands, r)))
+      .select(col("b"), col("bsig"), col("doc_id")).collect()
+      .map(x => (x.getInt(0), x.getLong(1), x.getLong(2))).toSet
+    assert(q147 == gate.map(g => (g._1, g._2, g._3)))
   }
 
 }

@@ -515,4 +515,28 @@ class EngineSpec extends SparkSpec {
           row.getLong(row.fieldIndex("remaining_ms")), s"target $id remaining")
     }
   }
+
+  test("JSON writer: one to_json line per engine output row over a MemoryStream") {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val input = MemoryStream[EngineOutput]
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-json-writer").toString
+    val query = Engine.jsonWriter(input.toDS(), ckpt)
+      .format("memory").queryName("engine_json_mem").start()
+    try {
+      input.addData(
+        EngineOutput(3, "snapshot", 7, 1000L, Seq(1500, 1600), Seq(1500, 1500),
+          Seq(-1, 1600), isOverridden = true, 4000L, 3000L, "", ""),
+        EngineOutput(3, "response", 7, 1000L, Nil, Nil, Nil,
+          isOverridden = false, 0L, 0L, "success", "ok"))
+      query.processAllAvailable()
+      assert(spark.table("engine_json_mem").collect().map(_.getString(0)).toSet == Set(
+        """{"targetId":3,"kind":"snapshot","seq":7,"tsm":1000,""" +
+          """"effective":[1500,1600],"live":[1500,1500],"ovr":[-1,1600],""" +
+          """"isOverridden":true,"deadlineMs":4000,"remainingMs":3000,""" +
+          """"status":"","message":""}""",
+        """{"targetId":3,"kind":"response","seq":7,"tsm":1000,""" +
+          """"effective":[],"live":[],"ovr":[],"isOverridden":false,""" +
+          """"deadlineMs":0,"remainingMs":0,"status":"success","message":"ok"}"""))
+    } finally query.stop()
+  }
 }

@@ -355,4 +355,27 @@ class SinksSpec extends SparkSpec {
       assert(got("MAC_3") == Sinks.packFrame(Seq.fill(8)(1700)).toSeq)
     } finally query.stop()
   }
+
+  test("SBUS writer: engine output to the UART callback over a MemoryStream") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    SinksSpec.sbus.clear()
+    val input = MemoryStream[EngineOutput]
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-sbus").toString
+    val query = Sinks.sbusWriter(input.toDS(), ckpt,
+      (id, f) => SinksSpec.sbus.add((id, f))).start()
+    try {
+      input.addData(
+        EngineOutput(1, "snapshot", 1, 1000L, Seq.fill(8)(1500), Seq.fill(8)(1500),
+          Seq.fill(8)(-1), isOverridden = false, 0L, 0L, "", ""),
+        EngineOutput(4, "timeout", -1, 2000L, Seq.fill(8)(1600), Seq.fill(8)(1600),
+          Seq.fill(8)(-1), isOverridden = false, 0L, 0L, "", ""),
+        EngineOutput(1, "response", 3, 1000L, Nil, Nil, Nil, isOverridden = false,
+          0L, 0L, "success", "ok"))
+      query.processAllAvailable()
+      // one rescaled frame per snapshot or hold row; the response is not sent
+      assert(SinksSpec.sbus.asScala.toSeq.sortBy(_._1) ==
+        Seq(1 -> Seq.fill(8)(991), 4 -> Seq.fill(8)(1155)))
+    } finally query.stop()
+  }
 }

@@ -46,4 +46,36 @@ class TokenizeSpec extends SparkSpec {
         "the tokenizer gate must not hold state")
     } finally query.stop()
   }
+
+  test("banked BPE apply: the stream tokenizes with the stored merge table, statelessly") {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import spark.implicits._
+    val stored = graft.operators.Layout.readMerges(spark,
+      graft.operators.Pipeline.ensureBpeMerges(spark, sfDir)).map(m => (m._2, m._3))
+    assert(stored.nonEmpty, "the learner found no merges on the fixture corpus")
+    val docsIn = graft.Tables.documents(spark, sfDir)
+      .select(col("doc_id").cast("long"), col("text"))
+      .orderBy("doc_id").limit(20).as[(Long, String)].collect().toSeq
+    val in = MemoryStream[(Long, String)]
+    val query = Tokenize.applyBankedMerges(
+        in.toDF().toDF("doc_id", "text"), "text", spark, sfDir)
+      .select("doc_id", "toks")
+      .writeStream.format("memory").queryName("tokenize_banked_mem")
+      .outputMode("append").start()
+    try {
+      in.addData(docsIn)
+      query.processAllAvailable()
+      val streamed = spark.table("tokenize_banked_mem").collect()
+        .map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
+      val batch = Tokenize.applyMerges(docsIn.toDF("doc_id", "text"), "text", stored)
+        .select("doc_id", "toks").collect()
+        .map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
+      assert(streamed.size == docsIn.size)
+      assert(streamed == batch, s"stream $streamed\nbatch $batch")
+      // the stored merges fire on the corpus they were learned from
+      assert(docsIn.exists { case (id, t) => streamed(id).size < t.split(" ").length })
+      assert(query.lastProgress.stateOperators.isEmpty,
+        "the tokenizer gate must not hold state")
+    } finally query.stop()
+  }
 }
