@@ -23,36 +23,21 @@ object Reference {
 
   /** F1 — validation cascade with the reference's verbatim error messages
     * and short-circuit order (`src/transmitter/main.cpp:148-223`):
-    * channel count → duration → value range. Invalid rows route to an
-    * error category (dead-letter analog); valid rows to the success
+    * [[Router.cascade]] over synthesized commands of one channel value
+    * each, so the non-integer check never fires. Invalid rows route to
+    * an error category (dead-letter analog); valid rows to the success
     * message. */
-  def q13ValidateCascade(spark: SparkSession, dir: String): DataFrame = {
-    val cmds = Tables.events(spark, dir)
+  def q13ValidateCascade(spark: SparkSession, dir: String): DataFrame =
+    Tables.events(spark, dir)
       .filter(col("event_type") === "purchase")
-      .select(
-        col("event_id"),
-        (col("user_id") % Channels.NumTargets).cast("int").as("target_id"),
-        (lit(1) + col("event_id") % 10).as("n_channels"),
-        (col("event_id") % 50 - 2).as("duration_ms"),
-        (floor(col("value") * 30).cast("int") % 2600 - 200).as("chv"))
-    val message =
-      when(col("n_channels") < 1 || col("n_channels") > 8,
-        concat(lit("Invalid channel count. Expected 1-8, got "),
-          col("n_channels").cast("string")))
-        .when(col("duration_ms") < 1, lit("Duration must be at least 1ms"))
-        .when(col("chv") =!= -1 && (col("chv") < 1000 || col("chv") > 2000),
-          lit("Channel values must be between 1000-2000 or -1 to skip"))
-        .otherwise(concat(lit("Channels updated for target "),
-          col("target_id").cast("string"), lit(" with "),
-          col("duration_ms").cast("string"), lit("ms timeout")))
-    cmds.withColumn("message", message)
-      .withColumn("status",
-        when(col("message").startsWith("Channels updated"), lit("success"))
-          .otherwise(lit("error")))
-      .groupBy(col("status"), col("message"))
+      .select(Router.cascade(
+        count = lit(1) + col("event_id") % 10,
+        durationMs = col("event_id") % 50 - 2,
+        channels = array(floor(col("value") * 30).cast("int") % 2600 - 200),
+        targetId = (col("user_id") % Channels.NumTargets).cast("int")).as("c"))
+      .groupBy(col("c.status").as("status"), col("c.message").as("message"))
       .agg(count(lit(1)).as("n"))
       .orderBy(col("status"), col("message"))
-  }
 
   /** P5 — JSON field extraction from the `props` payload column
     * (`from_json`-family; mirrors `deserializeJson` + typed field reads,

@@ -3,6 +3,7 @@ package graft.operators
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** R1/P5/F1 — the COMPLETE command lifecycle over raw JSON lines
   * (`src/transmitter/main.cpp:229-313`): line framing with empty-line
@@ -23,25 +24,128 @@ import org.apache.spark.sql.functions._
   * 10. out-of-range value    → "Channel values must be between 1000-2000 or -1 to skip" (`:205-210`)
   * 11. valid                 → "Channels updated for target T with Dms timeout" (`:219-221`)
   *
+  * This object is the command path's one copy of that cascade: the
+  * [[parse]] stage (classes 1–5 and the typed fields), the column
+  * [[cascade]] (classes 7–11) and the verbatim messages. [[classify]]
+  * adds the registry join (class 6); `Reference.q13` runs the cascade
+  * over synthesized columns; `graft.streaming.Sources` splits the parse
+  * into engine events, responses and dead letters, and
+  * `graft.streaming.Engine.validate` is the cascade's Scala twin inside
+  * the state function, worded from the same constants.
+  *
   * Deviations (documented): the parse-error detail is the constant
   * "InvalidInput" (ArduinoJson's error strings are library-specific);
-  * a non-string "command" is reported as missing (Spark's JSON parser
-  * coerces scalars to text, so the type distinction is unobservable);
-  * mixed per-value violations report non-integer before out-of-range
-  * regardless of element order (the corpus keeps violations isolated,
-  * so results are identical to the reference's first-failure order).
+  * the parse is string-typed, so a scalar reads as its text whatever
+  * its JSON type (a numeric "command" is an unknown command,
+  * `"target_id":"3"` is target 3); a field holds an integer when its
+  * text is an optional minus and digits that fit (INT ids and values,
+  * BIGINT durations), so a fraction, an exponent or an overflow fails
+  * that field's check in its cascade position; a value of the wrong
+  * JSON shape for its slot (a string where the array goes) makes the
+  * line malformed; mixed per-value violations report non-integer
+  * before out-of-range regardless of element order (the corpus keeps
+  * violations isolated, so results are identical to the reference's
+  * first-failure order).
   *
   * Scale posture: one scan → map-side line synthesis/parse/validation
-  * (all codegen'd) → broadcast registry join → partial-aggregated
-  * rollup. The only shuffle is the final small groupBy.
+  * → broadcast registry join → partial-aggregated rollup. The only
+  * shuffle is the final small groupBy.
   */
 object Router {
 
-  /** Parse a string column as an integer only when it looks like one —
-    * keeps ANSI mode from throwing on the genuinely non-numeric values
-    * the validation cascade is there to catch. */
-  private def toIntSafe(c: Column): Column =
-    when(c.rlike("^-?[0-9]+$"), c.cast("int"))
+  /** The reference's verbatim responses, sourced in the list above;
+    * `%s` marks the values a response quotes (`String.format` /
+    * `format_string`). */
+  val ParseError = "JSON parsing error: InvalidInput"
+  val MissingCommand = "Missing 'command' field in JSON"
+  val UnknownCommand = "Unknown command: %s"
+  val MissingFields = "Missing required fields: target_id, channels, and/or duration"
+  val TargetNotFound = "Target not found with ID: %s"
+  val BadCount = "Invalid channel count. Expected 1-8, got %s"
+  val BadDuration = "Duration must be at least 1ms"
+  val NonInteger = "Channel values must be integers"
+  val OutOfRange = "Channel values must be between 1000-2000 or -1 to skip"
+  val Updated = "Channels updated for target %s with %sms timeout"
+
+  /** Typed channel value that stands for a JSON value which is not an
+    * integer (`null`, text, a fraction, a number outside INT), so the
+    * cascade reports it in the reference's position (`main.cpp:192-197`,
+    * after count and duration) without widening the channel array. A
+    * literal `-2147483648` is out of range either way: [[parse]] turns
+    * it into 0, so this value never stands for a genuine integer. */
+  val NotAnInteger: Int = Int.MinValue
+
+  private val Command = "override_channels"
+
+  private val Schema = StructType.fromDDL("command STRING, target_id STRING, " +
+    "channels ARRAY<STRING>, duration STRING, _corrupt_record STRING")
+
+  /** `text` as a `sqlType` integer when it is one — an optional minus
+    * and digits that fit the type — else NULL. Never throws. */
+  private def integer(text: Column, sqlType: String): Column =
+    regexp_extract(text, "^-?[0-9]+$", 0).try_cast(sqlType) // "" on no match
+
+  private def response(rtype: String, status: String, message: Column): Column =
+    struct(lit(rtype).as("rtype"), lit(status).as("status"), message.as("message"))
+
+  private def error(message: Column): Column = response("response", "error", message)
+
+  /** A parsed line that is not JSON: its text is the dead letter. */
+  private[graft] val malformed: Column = col("p._corrupt_record").isNotNull
+
+  /** The response to a line that never reaches the handler, in the
+    * reference's order (`main.cpp:229-276`, `:151-156`); NULL for the
+    * rest. */
+  private val rejected: Column =
+    when(malformed, response("error", "", lit(ParseError)))
+      .when(col("p.command").isNull, response("error", "", lit(MissingCommand)))
+      .when(col("p.command") =!= Command, error(format_string(UnknownCommand, col("p.command"))))
+      .when(col("p.target_id").isNull || col("p.channels").isNull || col("p.duration").isNull,
+        error(lit(MissingFields)))
+
+  /** A [[parse]]d line reaches the handler with an integer `targetId`.
+    * One test per field: predicate pushdown copies the parse into a
+    * filter once per reference. */
+  private[graft] val dispatched: Column = !malformed && col("p.command") === Command &&
+    col("p.channels").isNotNull && col("p.duration").isNotNull && col("targetId").isNotNull
+
+  /** Class 6 for the line's own `target_id` text. */
+  private[graft] val targetNotFound: Column =
+    error(format_string(TargetNotFound, col("p.target_id")))
+
+  /** The one parse stage over the `text` column of `lines`: trim and
+    * empty-line drop (`:301-313`), one string-typed `from_json` (`p`),
+    * then
+    *  - `rejected`: the pre-dispatch response (classes 2–5), NULL for
+    *    a line that reaches the handler;
+    *  - `targetId` INT (NULL when the id is not an integer),
+    *    `durationMs` BIGINT (0 when not an integer: too short either
+    *    way) and `channels` ARRAY<INT> (each value, or [[NotAnInteger]]).
+    */
+  private[graft] def parse(lines: DataFrame, text: String): DataFrame =
+    lines.filter(length(trim(col(text))) > 0)
+      .withColumn("p", from_json(trim(col(text)), Schema,
+        Map("columnNameOfCorruptRecord" -> "_corrupt_record")))
+      .select(col("*"), rejected.as("rejected"),
+        integer(col("p.target_id"), "int").as("targetId"),
+        coalesce(integer(col("p.duration"), "bigint"), lit(0L)).as("durationMs"),
+        transform(col("p.channels"), c => {
+          val v = integer(c, "int")
+          when(v === NotAnInteger, lit(0)).otherwise(coalesce(v, lit(NotAnInteger)))
+        }).as("channels"))
+
+  /** The handler's checks after dispatch, in the reference's order:
+    * count → duration → non-integer value → range → success
+    * (`main.cpp:172-221`). `channels` holds typed values with
+    * [[NotAnInteger]] for the others; `count` is usually its size.
+    * Returns the response struct `(rtype, status, message)`. */
+  private[graft] def cascade(count: Column, durationMs: Column, channels: Column,
+      targetId: Column): Column =
+    when(count < 1 || count > 8, error(format_string(BadCount, count)))
+      .when(durationMs < 1, error(lit(BadDuration)))
+      .when(array_contains(channels, NotAnInteger), error(lit(NonInteger)))
+      .when(exists(channels, v => v =!= -1 && (v < 1000 || v > 2000)), error(lit(OutOfRange)))
+      .otherwise(response("response", "success", format_string(Updated, targetId, durationMs)))
 
   /** Deterministic raw command-line corpus: 13 construction classes
     * covering every lifecycle outcome, derived from the events table. */
@@ -86,69 +190,23 @@ object Router {
 
   /** The handler's response to every non-empty command line of
     * `lines` (a `line` column) against the 8-target registry: one row
-    * `(line, rtype, status, message)` per line, in the reference's
-    * cascade order. A `null` channel element is not an integer
-    * (`main.cpp:192-197`), as in [[graft.streaming.Engine]]'s
-    * validation. */
+    * `(line, rtype, status, message)` per line — [[parse]], the
+    * registry join, then [[cascade]]. */
   private[operators] def classify(lines: DataFrame): DataFrame = {
-    val spark = lines.sparkSession
-    // PERMISSIVE from_json yields a struct of nulls for malformed input;
-    // the corrupt-record column is the real dead-letter discriminator.
-    val schema = "command STRING, target_id STRING, channels ARRAY<STRING>, " +
-      "duration STRING, _corrupt_record STRING"
-    val parsed = lines
-      .filter(length(trim(col("line"))) > 0) // empty-line drop (:308)
-      .withColumn("p", from_json(col("line"),
-        org.apache.spark.sql.types.StructType.fromDDL(schema),
-        Map("columnNameOfCorruptRecord" -> "_corrupt_record")))
-    val registry = spark.range(1, 9).select(col("id").as("reg_id"))
-    val joined = parsed
-      .join(broadcast(registry),
-        toIntSafe(col("p.target_id")).cast("long") === col("reg_id"), "left")
-    val n = size(col("p.channels"))
-    val dur = toIntSafe(col("p.duration"))
-    // a null element is not an integer; without the explicit test the
-    // predicate is NULL there and `exists` never yields true
-    val nonInt = exists(col("p.channels"),
-      c => c.isNull || !c.rlike("^-?[0-9]+$"))
-    val outOfRange = exists(col("p.channels"),
-      c => toIntSafe(c) =!= -1 && (toIntSafe(c) < 1000 || toIntSafe(c) > 2000))
-    def out(rtype: String, status: String, message: Column): Column =
-      struct(lit(rtype).as("rtype"), lit(status).as("status"), message.as("message"))
-    val classified =
-      when(col("p").isNull || col("p._corrupt_record").isNotNull,
-        out("error", "", lit("JSON parsing error: InvalidInput")))
-        .when(col("p.command").isNull,
-          out("error", "", lit("Missing 'command' field in JSON")))
-        .when(col("p.command") =!= "override_channels",
-          out("response", "error", concat(lit("Unknown command: "), col("p.command"))))
-        .when(col("p.target_id").isNull || col("p.channels").isNull || col("p.duration").isNull,
-          out("response", "error",
-            lit("Missing required fields: target_id, channels, and/or duration")))
-        .when(col("reg_id").isNull,
-          out("response", "error",
-            concat(lit("Target not found with ID: "), col("p.target_id"))))
-        .when(n === 0 || n > 8,
-          out("response", "error",
-            concat(lit("Invalid channel count. Expected 1-8, got "), n.cast("string"))))
-        .when(dur.isNull || dur < 1,
-          out("response", "error", lit("Duration must be at least 1ms")))
-        .when(nonInt,
-          out("response", "error", lit("Channel values must be integers")))
-        .when(outOfRange,
-          out("response", "error",
-            lit("Channel values must be between 1000-2000 or -1 to skip")))
-        .otherwise(
-          out("response", "success",
-            concat(lit("Channels updated for target "), col("p.target_id"),
-              lit(" with "), col("p.duration"), lit("ms timeout"))))
-    joined.select(col("line"), classified.as("c"))
-      .select(col("line"), col("c.rtype").as("rtype"),
-        col("c.status").as("status"), col("c.message").as("message"))
+    val registry = lines.sparkSession.range(1, 9).select(col("id").as("reg_id"))
+    parse(lines, "line")
+      .join(broadcast(registry), col("targetId") === col("reg_id"), "left")
+      .select(col("line"), coalesce(col("rejected"),
+        when(col("reg_id").isNull, targetNotFound),
+        cascade(size(col("channels")), col("durationMs"), col("channels"),
+          col("targetId"))).as("c"))
+      .select(col("line"), col("c.*"))
   }
 
   /** DuckDB twin — identical corpus synthesis and classification via the
-    * json extension. */
+    * json extension, with [[parse]]'s integer rule (optional minus and
+    * digits that fit: INT ids and values, BIGINT durations) and typed
+    * values in the success message. */
   val oracleSql: String = {
     val t = "CAST(user_id % 8 + 1 AS VARCHAR)"
     val d = "CAST(1 + event_id % 5000 AS VARCHAR)"
@@ -179,7 +237,11 @@ object Router {
        |    line
        |  FROM (SELECT *, json_valid(line) AS ok FROM ne)),
        |ch AS (
-       |  SELECT *, CASE WHEN chj IS NULL THEN NULL
+       |  SELECT *,
+       |    CASE WHEN regexp_full_match(target_id, '-?[0-9]+') THEN TRY_CAST(target_id AS INT) END AS tid,
+       |    COALESCE(CASE WHEN regexp_full_match(duration, '-?[0-9]+')
+       |      THEN TRY_CAST(duration AS BIGINT) END, 0) AS dur,
+       |    CASE WHEN chj IS NULL THEN NULL
        |    ELSE list_transform(generate_series(0, CAST(json_array_length(chj) AS BIGINT) - 1),
        |      i -> json_extract_string(line, '$$.channels[' || i || ']')) END AS chans
        |  FROM parsed),
@@ -190,20 +252,19 @@ object Router {
        |    WHEN command <> 'override_channels' THEN ('response', 'error', 'Unknown command: ' || command)
        |    WHEN target_id IS NULL OR chj IS NULL OR duration IS NULL THEN
        |      ('response', 'error', 'Missing required fields: target_id, channels, and/or duration')
-       |    WHEN TRY_CAST(target_id AS BIGINT) IS NULL OR TRY_CAST(target_id AS BIGINT) < 1
-       |      OR TRY_CAST(target_id AS BIGINT) > 8 THEN
+       |    WHEN tid IS NULL OR tid < 1 OR tid > 8 THEN
        |      ('response', 'error', 'Target not found with ID: ' || target_id)
        |    WHEN len(chans) = 0 OR len(chans) > 8 THEN
        |      ('response', 'error', 'Invalid channel count. Expected 1-8, got ' || CAST(len(chans) AS VARCHAR))
-       |    WHEN TRY_CAST(duration AS INT) IS NULL OR TRY_CAST(duration AS INT) < 1 THEN
-       |      ('response', 'error', 'Duration must be at least 1ms')
-       |    WHEN len(list_filter(chans, c -> c IS NULL OR NOT regexp_full_match(c, '-?[0-9]+'))) > 0 THEN
+       |    WHEN dur < 1 THEN ('response', 'error', 'Duration must be at least 1ms')
+       |    WHEN len(list_filter(chans, c -> c IS NULL OR NOT regexp_full_match(c, '-?[0-9]+')
+       |      OR TRY_CAST(c AS INT) IS NULL)) > 0 THEN
        |      ('response', 'error', 'Channel values must be integers')
        |    WHEN len(list_filter(chans, c -> TRY_CAST(c AS INT) <> -1
        |      AND (TRY_CAST(c AS INT) < 1000 OR TRY_CAST(c AS INT) > 2000))) > 0 THEN
        |      ('response', 'error', 'Channel values must be between 1000-2000 or -1 to skip')
-       |    ELSE ('response', 'success', 'Channels updated for target ' || target_id
-       |      || ' with ' || duration || 'ms timeout')
+       |    ELSE ('response', 'success', 'Channels updated for target ' || CAST(tid AS VARCHAR)
+       |      || ' with ' || CAST(dur AS VARCHAR) || 'ms timeout')
        |  END AS c FROM ch)
        |SELECT c[1] AS rtype, c[2] AS status, c[3] AS message, count(*) AS n
        |FROM cls GROUP BY rtype, status, message

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.operators.Router
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -108,24 +109,6 @@ case class EngineOutput(
 object Engine {
   val ChannelCount = 8
 
-  /** Verbatim reference messages (`src/transmitter/main.cpp:154,
-    * 175-177, 185, 195, 208, 219-221`). */
-  def invalidCountMsg(n: Int): String = s"Invalid channel count. Expected 1-8, got $n"
-  val durationMsg: String = "Duration must be at least 1ms"
-  val nonIntMsg: String = "Channel values must be integers"
-  val rangeMsg: String = "Channel values must be between 1000-2000 or -1 to skip"
-  def successMsg(targetId: Int, durationMs: Long): String =
-    s"Channels updated for target $targetId with ${durationMs}ms timeout"
-
-  /** Command channel value that stands for a JSON value which is not
-    * an integer (`null`), so [[validate]] can report it in the
-    * reference's cascade position (`main.cpp:192-197`, after count and
-    * duration) without widening [[EngineEvent]]. A literal
-    * `-2147483648` is out of range either way: the command parser
-    * turns it into another out-of-range value, so this value never
-    * arrives from a genuine integer. */
-  val NotAnInteger: Int = Int.MinValue
-
   /** Initial register state: all-zero frame (the reference's zeroed
     * `ChannelData`, observable as the −1467 SBUS artifact before any
     * packet arrives — SURVEY.md §4.3.1). */
@@ -161,14 +144,15 @@ object Engine {
 
   /** F1 validation cascade in reference order: count → duration →
     * non-integer value → per-value range
-    * (`src/transmitter/main.cpp:172-210`). */
+    * (`src/transmitter/main.cpp:172-210`) — the Scala twin of
+    * [[Router.cascade]], worded from its constants. */
   def validate(e: EngineEvent): Option[String] =
     if (e.channels.isEmpty || e.channels.size > ChannelCount)
-      Some(invalidCountMsg(e.channels.size))
-    else if (e.durationMs < 1) Some(durationMsg)
-    else if (e.channels.contains(NotAnInteger)) Some(nonIntMsg)
+      Some(Router.BadCount.format(e.channels.size))
+    else if (e.durationMs < 1) Some(Router.BadDuration)
+    else if (e.channels.contains(Router.NotAnInteger)) Some(Router.NonInteger)
     else if (e.channels.exists(v => v != -1 && (v < 1000 || v > 2000)))
-      Some(rangeMsg)
+      Some(Router.OutOfRange)
     else None
 
   private def snapshot(id: Int, s: TargetState, seq: Long, tsm: Long,
@@ -207,11 +191,12 @@ object Engine {
               isOverridden = true,
               deadlineMs = e.tsm + e.durationMs,
               lastTsm = e.tsm)
-            (s1, Seq(response(id, e.seq, e.tsm, "success", successMsg(id, e.durationMs)),
+            (s1, Seq(response(id, e.seq, e.tsm, "success",
+              Router.Updated.format(id, e.durationMs)),
               snapshot(id, s1, e.seq, e.tsm)))
         }
       case other =>
-        (s0, Seq(response(id, e.seq, e.tsm, "error", s"Unknown command: $other")))
+        (s0, Seq(response(id, e.seq, e.tsm, "error", Router.UnknownCommand.format(other))))
     }
   }
 

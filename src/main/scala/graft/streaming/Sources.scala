@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.operators.Router
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -13,8 +14,9 @@ import org.apache.spark.sql.functions._
   *  - [[commandsFromJsonLines]]: line-framed JSON commands from any
   *    string stream (socket/file/MemoryStream) with the reference's
   *    framing semantics — trim, drop empties
-  *    (`src/transmitter/main.cpp:301-313`) — and a dead-letter split
-  *    for unparseable lines (the `parse_json` error path, `:229-240`).
+  *    (`src/transmitter/main.cpp:301-313`) — the batch router's parse
+  *    and response classes, and a dead-letter split for unparseable
+  *    lines (the `parse_json` error path, `:229-240`).
   *
   * Everything is per-row projection — no state, no shuffle; the keyed
   * work happens downstream in [[Engine.effectiveStates]].
@@ -115,24 +117,31 @@ object Sources {
   /** Parsed serial-line stream split three ways, mirroring every
     * pre-dispatch outcome of the reference's serial loop:
     *
-    *  - `commands`: envelope-complete `override_channels` lines as
-    *    engine events (deeper validation — count/duration/non-integer
-    *    value/range — happens inside the engine, which emits its own
-    *    responses, so batch `Router.q32` and the streaming path produce
-    *    the same response classes);
+    *  - `commands`: envelope-complete `override_channels` lines with an
+    *    integer target id, as engine events (deeper validation —
+    *    count/duration/non-integer value/range — happens inside the
+    *    engine, which emits its own responses);
     *  - `responses`: the verbatim error envelopes the reference prints
-    *    for lines that never reach a handler — malformed JSON
-    *    (`src/transmitter/main.cpp:235-239`), missing `"command"`
-    *    (`:243-247`), unknown command (`:269-273`), and
-    *    `override_channels` with missing fields (`:151-156`);
-    *  - `deadLetter`: the raw text of unparseable lines, for replay.
+    *    for lines that never reach the handler's later checks —
+    *    malformed JSON (`src/transmitter/main.cpp:235-239`), missing
+    *    `"command"` (`:243-247`), unknown command (`:269-273`),
+    *    `override_channels` with missing fields (`:151-156`), and a
+    *    target id that is not an integer (`:163-169`);
+    *  - `deadLetter`: the raw text of lines that are not JSON, for
+    *    replay.
     */
   case class ParsedLines(commands: Dataset[EngineEvent], responses: DataFrame,
       deadLetter: DataFrame)
 
   /** S2 streaming twin: parse a stream of raw serial lines into
     * command events, a verbatim response relation, and a dead-letter
-    * relation — response parity with the batch router (`Router.q32`).
+    * relation, through the batch router's own parse stage
+    * (`graft.operators.Router.parse`). Every line gets the same
+    * response as from `Router.classify`, the pre-dispatch responses
+    * here and the rest from [[Engine.effectiveStates]], with one
+    * exception: the stream has no registry, so a command for an
+    * integer target id the registry lacks reaches the engine instead
+    * of "Target not found".
     *
     * @param lines  column `value: String` (socket/text-file/memory
     *               stream shape). If a `seq: Long` column is present
@@ -163,55 +172,22 @@ object Sources {
   def commandsFromJsonLines(lines: DataFrame,
       nowMs: Column = unix_millis(current_timestamp())): ParsedLines = {
     import lines.sparkSession.implicits._
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "command STRING, target_id INT, channels ARRAY<INT>, duration LONG, _corrupt_record STRING")
     val seqCol =
       if (lines.columns.contains("seq")) col("seq")
       else xxhash64(col("value"), nowMs)
-    val parsed = lines
-      .filter(length(trim(col("value"))) > 0) // empty-line drop (:308)
-      .withColumn("__seq", seqCol)
-      .withColumn("p", from_json(trim(col("value")), schema,
-        Map("columnNameOfCorruptRecord" -> "_corrupt_record")))
-    val malformed = col("p").isNull || col("p._corrupt_record").isNotNull
-    val noCommand = col("p.command").isNull
-    val unknown = col("p.command") =!= "override_channels"
-    val missingFields = col("p.target_id").isNull || col("p.channels").isNull ||
-      col("p.duration").isNull
+    val parsed = Router.parse(lines.withColumn("__seq", seqCol), "value")
     val commands = parsed
-      .filter(!malformed && !noCommand && !unknown && !missingFields)
-      .select(
-        col("p.target_id").as("targetId"),
-        lit("command").as("kind"),
-        col("__seq").as("seq"),
-        nowMs.as("tsm"),
-        // a null element is not an integer: it becomes the engine's
-        // NotAnInteger marker, and a literal NotAnInteger (out of range
-        // either way) becomes 0, so the engine reports each in its
-        // cascade position and the event decoder never sees a null
-        transform(col("p.channels"), c =>
-          when(c.isNull, lit(Engine.NotAnInteger))
-            .when(c === Engine.NotAnInteger, lit(0)).otherwise(c))
-          .as("channels"),
-        col("p.duration").as("durationMs"))
+      .filter(Router.dispatched)
+      .select(col("targetId"), lit("command").as("kind"), col("__seq").as("seq"),
+        nowMs.as("tsm"), col("channels"), col("durationMs"))
       .as[EngineEvent]
-    // Verbatim pre-dispatch responses (same classification order and
-    // strings as the batch router — `src/transmitter/main.cpp:229-276`).
-    val classified =
-      when(malformed, struct(lit("error").as("rtype"), lit("").as("status"),
-        lit("JSON parsing error: InvalidInput").as("message")))
-        .when(noCommand, struct(lit("error").as("rtype"), lit("").as("status"),
-          lit("Missing 'command' field in JSON").as("message")))
-        .when(unknown, struct(lit("response").as("rtype"), lit("error").as("status"),
-          concat(lit("Unknown command: "), col("p.command")).as("message")))
-        .when(missingFields, struct(lit("response").as("rtype"), lit("error").as("status"),
-          lit("Missing required fields: target_id, channels, and/or duration").as("message")))
+    // the registry check's one part that needs no registry
     val responses = parsed
-      .withColumn("r", classified)
+      .withColumn("r", coalesce(col("rejected"),
+        when(col("targetId").isNull, Router.targetNotFound)))
       .filter(col("r").isNotNull)
-      .select(col("r.rtype").as("rtype"), col("r.status").as("status"),
-        col("r.message").as("message"), col("value"))
-    val deadLetter = parsed.filter(malformed).select(col("value"))
+      .select(col("r.*"), col("value"))
+    val deadLetter = parsed.filter(Router.malformed).select(col("value"))
     ParsedLines(commands, responses, deadLetter)
   }
 }

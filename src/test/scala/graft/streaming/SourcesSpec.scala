@@ -16,13 +16,19 @@ class SourcesSpec extends SparkSpec {
       """{"command": "set_speed"}""", // unknown command
       """{"command": "override_channels", "target_id": 2}""", // missing fields
       """  {"command": "override_channels", "target_id": 1, "channels": [2000], "duration": 1}  """,
+      // type mismatches are responses, not dead letters: a target id
+      // that is not an integer is answered here, the rest by the engine
+      """{"command": "override_channels", "target_id": "abc", "channels": [1500], "duration": 5000}""",
+      """{"command": "override_channels", "target_id": 4, "channels": [1500, "x"], "duration": "abc"}""",
     ).toDF("value")
     val parsedLines = Sources.commandsFromJsonLines(lines, nowMs = lit(42000L))
     val got = parsedLines.commands.collect().sortBy(_.targetId)
-    assert(got.length == 2)
+    assert(got.length == 3)
     assert(got(0).targetId == 1 && got(0).channels == Seq(2000) && got(0).durationMs == 1L)
     assert(got(1).targetId == 3 && got(1).channels == Seq(1500, -1) &&
       got(1).durationMs == 5000L && got(1).tsm == 42000L)
+    assert(got(2).targetId == 4 && got(2).channels == Seq(1500, Int.MinValue) &&
+      got(2).durationMs == 0L)
     // every pre-dispatch outcome produces the reference's exact envelope
     val resp = parsedLines.responses.select("rtype", "status", "message")
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).sorted
@@ -30,8 +36,27 @@ class SourcesSpec extends SparkSpec {
       ("error", "", "JSON parsing error: InvalidInput"),
       ("error", "", "Missing 'command' field in JSON"),
       ("response", "error", "Missing required fields: target_id, channels, and/or duration"),
+      ("response", "error", "Target not found with ID: abc"),
       ("response", "error", "Unknown command: set_speed")))
     assert(parsedLines.deadLetter.count() == 1) // only the unparseable line
+  }
+
+  test("the command branch's plan holds one parse in its projection and one per field in its filter") {
+    // predicate pushdown inlines the parse into the filter once per
+    // reference; over a Parquet input (a local relation is folded away)
+    val dir = java.nio.file.Files.createTempDirectory("graft-sources-plan")
+    try {
+      val path = dir.resolve("lines").toString
+      Seq("""{"command": "override_channels", "target_id": 3, "channels": [1500], "duration": 5000}""")
+        .toDF("value").write.parquet(path)
+      val plan = Sources.commandsFromJsonLines(spark.read.parquet(path), nowMs = lit(1000L))
+        .commands.queryExecution.optimizedPlan
+      def parses(s: String) = "from_json\\(".r.findAllIn(s).length
+      val filters = plan.collect { case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
+        parses(f.condition.toString) }
+      assert(filters == Seq(5), plan)
+      assert(parses(plan.toString) == 6, plan)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 
   test("an input seq column is honoured for line-order-stable tie-breaking") {
