@@ -32,6 +32,9 @@ import org.apache.spark.sql.SparkSession
   *    `coalescePartitions.parallelismFirst` TRUE — bytes-first
   *    coalescing folded the CPU-heavy BM25/eval exchanges into one
   *    partition (normed 50.2 vs 35.7 over q133/q135/q136/q139/q140).
+  *  - `spark.sql.codegen.cache.maxEntries` → 1000 (Spark's default 100;
+  *    see [[codegenCacheConf]]): the compiled-class cache holds the
+  *    session's whole working set, so a warm call compiles nothing.
   *  - Hadoop's `file:` scheme → [[graft.io.SpawnFreeLocalFileSystem]]
   *    and [[graft.io.SpawnFreeLocalFs]], for both Hadoop APIs (see
   *    [[localFileSystemConf]]).
@@ -60,10 +63,36 @@ object Sessions {
     "spark.hadoop.fs.file.impl" -> classOf[graft.io.SpawnFreeLocalFileSystem].getName,
     "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[graft.io.SpawnFreeLocalFs].getName)
 
+  /** Entries of Spark's generated-class cache (`CodeGenerator`), an LRU
+    * keyed by (class loader, generated source).
+    *
+    * Why: the LLM-data operators of one long-lived session overflow
+    * Spark's 100. In local mode a whole-stage class is compiled once
+    * under the driver's loader and once under the executor's. At 100,
+    * every warm pass of q24, q97, q85 and q118 (sf0.1, `local[4]`)
+    * recompiled about 120 classes: 1.9–2.2 s of Janino, 1.3–1.5 s of
+    * it q97's, on the driver's whole-stage check and inside tasks. At
+    * 1000, q85 and q118 compile nothing from their second call, and q24
+    * and q97 only AQE stage-id variants of classes they already
+    * compiled (`GeneratedIteratorForCodegenStage<N>`, N in stage
+    * materialization order) for their first few calls. An entry holds about
+    * 20 KB of heap (its source and loader) and 7 KB of metaspace; the
+    * benchmark's held heap after those four queries rose 2.7 MB.
+    *
+    * Caveat: a static conf, read once per JVM when `CodeGenerator` is
+    * first used. A session built after other Spark SQL work in the same
+    * JVM keeps whatever that work resolved (usually 100), and so does a
+    * session handed to `SparkEntry.entry` by a caller.
+    *
+    * The shared test session applies the same map. */
+  val codegenCacheMaxEntries: Int = 1000
+  val codegenCacheConf: Map[String, String] = Map(
+    "spark.sql.codegen.cache.maxEntries" -> codegenCacheMaxEntries.toString)
+
   /** The `spark.sql.*` settings of [[localBuilder]], one partition per
     * core. The session time zone pins timestamps to UTC whatever the
     * host's zone (Spark's default is the JVM's zone). */
-  def sqlConf(cpus: String): Map[String, String] = Map(
+  def sqlConf(cpus: String): Map[String, String] = codegenCacheConf ++ Map(
     "spark.sql.shuffle.partitions" -> cpus,
     "spark.sql.session.timeZone" -> "UTC",
     // wide plans (q61's composed pipeline) trip the plan-string

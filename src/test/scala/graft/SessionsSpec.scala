@@ -2,7 +2,7 @@ package graft
 
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
@@ -42,5 +42,7 @@ class SessionsSpec extends AnyFunSuite {
     assert(resolved.getConf(SQLConf.COALESCE_PARTITIONS_PARALLELISM_FIRST))
     assert(resolved.getConf(
       SQLConf.ADAPTIVE_MAX_SHUFFLE_HASH_JOIN_LOCAL_MAP_THRESHOLD) == 64L << 20)
+    assert(resolved.getConf(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES) ==
+      Sessions.codegenCacheMaxEntries)
   }
 }

@@ -7,7 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * session, never stopped so suites can run in any order). It runs on
   * the same `file:` file system as production sessions
   * (`Sessions.localFileSystemConf`), so every checkpoint, restart and
-  * replay spec exercises it. */
+  * replay spec exercises it, and with the same codegen cache size
+  * (`Sessions.codegenCacheConf`), so the compile-count specs see the
+  * cache production sees. */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -17,6 +19,7 @@ trait SparkSpec extends AnyFunSuite {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config(Sessions.localFileSystemConf)
+      .config(Sessions.codegenCacheConf)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
